@@ -1,6 +1,6 @@
 """SparkSession factory with the engine's standard configuration.
 
-Scale posture: these settings are tuned so the same plans work on local[32]
+Scale posture: these settings are tuned so the same plans work on local[N]
 test runs and on a large multi-executor cluster — AQE handles runtime
 re-planning (skew joins, partition coalescing), and shuffle partitions are
 sized by the runtime rather than hard-coded per query.
@@ -22,7 +22,9 @@ def get_spark(app_name: str = "prometheus-parquet-server-spark") -> SparkSession
     - AQE on: runtime shuffle-partition coalescing + skew-join splitting are
       the 100TB-scale answer to skewed label/series distributions.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # default: the cores this process may run on, so a bare local run gets
+    # one task slot and one shuffle partition per core
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")

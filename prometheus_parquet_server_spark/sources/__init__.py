@@ -27,12 +27,8 @@ from prometheus_parquet_server_spark.sources.snapshot_store import (
     snapshot_write,
 )
 from prometheus_parquet_server_spark.sources.store import (
-    compact_store,
-    expire_store,
     read_store,
-    store_file_stats,
     store_manifest,
-    upsert_store,
     verify_store_manifest,
     write_store,
 )
@@ -51,11 +47,7 @@ __all__ = [
     "read_store",
     "write_store",
     "read_wide_quarantine",
-    "compact_store",
-    "expire_store",
-    "store_file_stats",
     "store_manifest",
-    "upsert_store",
     "verify_store_manifest",
     "ingest_zip",
     "ConcurrentWriteError",

@@ -125,14 +125,20 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-_SNAP_DIR = "_snapshots"
+from prometheus_parquet_server_spark.sources.snapshot_store import (
+    _SNAP_DIR,
+    _manifest_path,
+    _name_overlaps,
+    _ts_overlaps,
+)
 
 # ---------------------------------------------------------------------------
 # Spark-free manifest access. DataSource planning runs in a Python worker
 # process with no JVM handle, so the Hadoop-FS helpers in snapshot_store
-# are unusable here; local (and file:) URIs go through plain os/open,
-# anything else through pyarrow.fs (S3/HDFS/GCS support rides pyarrow's
-# own bindings when present).
+# are unusable here (its pure path and pruning helpers, imported above,
+# are not); local (and file:) URIs go through plain os/open, anything
+# else through pyarrow.fs (S3/HDFS/GCS support rides pyarrow's own
+# bindings when present).
 # ---------------------------------------------------------------------------
 
 
@@ -611,7 +617,7 @@ def _list_versions(root: str) -> list[int]:
 
 
 def _read_manifest(root: str, version: int) -> dict:
-    path = f"{root}/{_SNAP_DIR}/v{version:010d}.json"
+    path = _manifest_path(root, version)
     lp = _local_path(path)
     if lp is not None:
         with open(lp, "rb") as fh:
@@ -701,23 +707,6 @@ def _resolve_batch_manifest(options) -> dict:
     if m is None:
         raise FileNotFoundError(f"no committed snapshot under {root}")
     return m
-
-
-# Overlap predicates mirror snapshot_store._name_overlaps/_ts_overlaps:
-# null stats always intersect (read-and-filter beats a wedged plan).
-
-
-def _name_overlaps(f: dict, names) -> bool:
-    if f.get("min_name") is None or f.get("max_name") is None:
-        return True
-    return any(f["min_name"] <= n <= f["max_name"] for n in names)
-
-
-def _ts_overlaps(f: dict, lo: float, hi: float) -> bool:
-    mn, mx = f.get("min_ts"), f.get("max_ts")
-    if mn is None or mx is None:
-        return True
-    return not (mx < lo or mn > hi)
 
 
 def _prune(files: list[dict], names, ts_lo: float, ts_hi: float) -> list[dict]:
@@ -1066,13 +1055,9 @@ def _write_task(iterator, tx_uri: str, columns: list[str]) -> _FileCommit:
     )
 
 
-def _manifest_fs_path(root: str, version: int) -> str:
-    return f"{root}/{_SNAP_DIR}/v{version:010d}.json"
-
-
 def _slot_taken(root: str, version: int) -> bool:
     """True when the manifest slot exists at all (readable OR torn)."""
-    path = _manifest_fs_path(root, version)
+    path = _manifest_path(root, version)
     lp = _local_path(path)
     if lp is not None:
         return os.path.exists(lp)
@@ -1181,7 +1166,7 @@ def _publish_manifest(
         if props:
             manifest["properties"] = props
         if not _create_manifest_exclusive(
-            _manifest_fs_path(root, target),
+            _manifest_path(root, target),
             json.dumps(manifest).encode("utf-8"),
         ):
             continue  # lost the slot to a racer — retry on the new tip

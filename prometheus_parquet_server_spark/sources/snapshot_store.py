@@ -1,14 +1,16 @@
 """Snapshot store — a commit-protocol table format for object-store safety.
 
-The directory-swap store (:mod:`.store`) is crash-safe only where rename is
-atomic (local/HDFS). This module is the table-format answer the 100 TB
-deployment on an object store needs (the pattern behind Delta/Iceberg,
-re-implemented minimally from public knowledge): data files are IMMUTABLE
-and never renamed; every change publishes a new single-file JSON manifest
-whose appearance is the commit point. Readers resolve the highest readable
-manifest and read exactly the files it lists — a half-finished writer is
-invisible because its manifest was never published, regardless of
-filesystem rename semantics.
+The plain sink (:mod:`.store`) writes a name-partitioned parquet directory
+once and has no maintenance: rewriting it in place would leave readers a
+window of half-written data wherever rename is not atomic. This module is
+the store that is maintained — upsert, compact, expire, vacuum — and the
+table-format answer the 100 TB deployment on an object store needs (the
+pattern behind Delta/Iceberg, re-implemented minimally from public
+knowledge): data files are IMMUTABLE and never renamed; every change
+publishes a new single-file JSON manifest whose appearance is the commit
+point. Readers resolve the highest readable manifest and read exactly the
+files it lists — a half-finished writer is invisible because its manifest
+was never published, regardless of filesystem rename semantics.
 
 Layout::
 
@@ -20,7 +22,7 @@ Manifest: ``{"version", "parent", "operation", "schema", "files":
 "max_ts"}]}``. Per-file name/ts ranges give MANIFEST-LEVEL FILE PRUNING: a
 selector for one metric or time range plans a scan over only the
 intersecting files — the same planning-time pruning Hive partitioning
-gives the swap store, without relying on directory layout (and it
+gives the plain sink, without relying on directory layout (and it
 composes: data files are written name-clustered, so a one-metric read
 usually touches one file per commit). The recorded schema makes a
 legitimately EMPTY snapshot (everything expired / empty overwrite)
@@ -35,7 +37,7 @@ for the caller to retry at the merge level (serializable semantics, no
 lost updates). Readers skip any unreadable version file (legacy torn
 writes) rather than wedging, and writers number PAST such junk.
 
-Reference parity: same canonical long model as the swap store
+Reference parity: same canonical long model as the plain sink
 (``TimeSeriesCollection``, src/timeseries.rs:396-445); this is the sink
 side scaled past the reference's single-node filesystem assumptions.
 """
@@ -49,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from prometheus_parquet_server_spark.model import series_key_str
-from prometheus_parquet_server_spark.sources.store import _StoreFS, read_store
+from prometheus_parquet_server_spark.sources.store import read_store
 
 _SNAP_DIR = "_snapshots"
 _MAX_COMMIT_RETRIES = 10
@@ -63,6 +65,64 @@ _MAX_COMMIT_RETRIES = 10
 import threading as _threading
 
 _COMMIT_LOCK = _threading.Lock()
+
+
+class _StoreFS:
+    """All store I/O of this module — manifest listing and reads, the
+    manifest publish, the data-file census, vacuum deletes — routed
+    through the Hadoop ``FileSystem`` API of the session JVM
+    (``Path.getFileSystem``) instead of driver-local ``pathlib``/
+    ``shutil``, so the same code runs against any Hadoop-supported scheme
+    (``file:``, ``hdfs:``, ``s3a:``, ``abfs:``, ``gs:``), which is what the
+    100 TB deployment actually stores data on. Data files are never
+    renamed; the only rename is a manifest's publish (see
+    :func:`_try_commit`)."""
+
+    def __init__(self, spark: SparkSession, path: str):
+        self._jvm = spark._jvm
+        self.root = self._jvm.org.apache.hadoop.fs.Path(path)
+        self.fs = self.root.getFileSystem(spark._jsc.hadoopConfiguration())
+
+    def jpath(self, s: str):
+        return self._jvm.org.apache.hadoop.fs.Path(s)
+
+    def exists(self, p) -> bool:
+        return bool(self.fs.exists(p if not isinstance(p, str) else self.jpath(p)))
+
+    def delete(self, p) -> None:
+        p = p if not isinstance(p, str) else self.jpath(p)
+        self.fs.delete(p, True)  # recursive
+
+    def subdirs(self, p=None) -> list[str]:
+        """Child directory paths of ``p`` (default: store root), sorted by
+        basename. One listStatus round-trip — no recursive walk."""
+        p = self.root if p is None else (self.jpath(p) if isinstance(p, str) else p)
+        if not self.fs.exists(p):
+            return []
+        out = [
+            str(st.getPath())
+            for st in self.fs.listStatus(p)
+            if st.isDirectory()
+        ]
+        return sorted(out, key=_basename)
+
+    def parquet_files(self, p) -> list[tuple[str, int]]:
+        """Recursive (path, bytes) census of ``*.parquet`` under ``p`` via
+        ``listFiles(recursive=True)`` — on object stores this is one
+        LIST call per 1000 keys, not a per-directory walk."""
+        p = self.jpath(p) if isinstance(p, str) else p
+        it = self.fs.listFiles(p, True)
+        files: list[tuple[str, int]] = []
+        while it.hasNext():
+            st = it.next()
+            fp = str(st.getPath())
+            if fp.endswith(".parquet"):
+                files.append((fp, int(st.getLen())))
+        return files
+
+
+def _basename(path_str: str) -> str:
+    return path_str.rstrip("/").rsplit("/", 1)[-1]
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -264,7 +324,6 @@ def _validated_append_schema(
     recorded: dict | None,
     df: DataFrame,
     merge_schema: bool,
-    evolution_hint: str = "pass merge_schema=True to evolve the schema additively",
 ) -> dict:
     """The manifest schema an APPEND must record, after validating the
     incoming frame against the store's recorded schema. Without this
@@ -312,7 +371,7 @@ def _validated_append_schema(
         raise ValueError(
             f"snapshot append rejected: column set differs from the "
             f"store's recorded schema (added={added}, missing={missing}); "
-            f"{evolution_hint}"
+            "pass merge_schema=True to evolve the schema additively"
         )
     if added:
         merged = T.StructType(
@@ -1404,7 +1463,7 @@ def snapshot_select(
 ) -> DataFrame:
     """PromQL-style selector over a snapshot store: equality ``__name__``
     matchers prune files at the MANIFEST level (driver-side, before any
-    footer opens — the snapshot store's analogue of the swap store's
+    footer opens — the snapshot store's analogue of the plain sink's
     Hive partition pruning), then every matcher applies exactly via the
     engine's selector (operators/select.py select_series). The query
     surface and the table format compose: a one-metric selector on a
@@ -1425,9 +1484,9 @@ def snapshot_select(
 def read_any_store(spark: SparkSession, path: str) -> DataFrame:
     """Unified store reader: a path with committed snapshots under
     ``_snapshots/`` resolves to :func:`snapshot_read` at the latest
-    version; anything else reads as the Hive name-partitioned swap store.
-    Lets query-side code accept either store format without caring which
-    maintenance protocol produced it."""
+    version; anything else reads as the Hive name-partitioned plain sink
+    (:func:`.store.write_store`). Lets query-side code accept either
+    store format without caring which one wrote it."""
     fs = _StoreFS(spark, path)
     if _resolve_tip(fs, path)[0] is not None:
         return snapshot_read(spark, path)

@@ -111,7 +111,7 @@ def main() -> None:
         warm[name] = round(time.time() - t0, 2)
         print(f"{name}: cold {results[name]}s warm {warm[name]}s", flush=True)
     payload = {
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": spark.sparkContext.defaultParallelism,
         "queries": results,
         "queries_warm": warm,
         "total": round(sum(results.values()), 2),

@@ -16,7 +16,7 @@ from prometheus_parquet_server_spark import get_spark  # noqa: E402
 # ~29 min on a 32-core host — past the driver's verification budget (the
 # r14 record shows the run truncated mid-suite, tests_ok=false, which is
 # worse than a smaller completed run). The FAST tier (default) skips the
-# measured 147 slowest tests (the long-haul parity/stress/recall suites,
+# 145 measured slowest tests (the long-haul parity/stress/recall suites,
 # each ≥ ~4 s, together ~2/3 of the wall) and finishes in ~11 min.
 # RUN_SLOW=1 restores the full suite; CI/closing gates run both tiers.
 # Every skipped test still guards its operator: the fast tier keeps at
@@ -116,7 +116,6 @@ SLOW_TESTS = {
     "test_dsir.py::test_dsir_sample_gumbel_exact_and_seeded",
     "test_dsir.py::test_stream_dsir_ingest_drift_alert_failure_does_not_fail_batch",
     "test_dsir.py::test_topk_matches_reference_ranking_and_is_deterministic",
-    "test_ingest.py::test_compact_store_merges_small_files",
     "test_ingest.py::test_store_manifest_detects_tampering",
     "test_interpolate.py::test_chunked_resample_bit_identical",
     "test_minhash_store.py::test_dedup_bands_maintenance",
@@ -168,13 +167,25 @@ SLOW_TESTS = {
     "test_sq.py::test_sq8_codes_match_reference_and_self_probe_is_nearest",
     "test_sq.py::test_sq8_guards_and_dim_pinning",
     "test_sq.py::test_sq8_rerank_equals_exact_l2_when_candidates_cover",
-    "test_store_lifecycle.py::test_maintenance_on_file_scheme_hadoop_path",
     "test_streaming_server.py::test_stream_sessionize_native_closed_sessions_match_batch",
     "test_unit_sum.py::test_property_engine_oracle_bit_parity",
 }
 
 
 def pytest_collection_modifyitems(config, items):
+    # a SLOW_TESTS id naming a renamed or deleted test would silently stop
+    # skipping anything. Only files collected whole are checked, so a run
+    # over some files (or one ``file::test`` node) still works.
+    nodeids = {item.nodeid.split("tests/")[-1] for item in items}
+    narrowed = {
+        a.split("::", 1)[0].split("tests/")[-1] for a in config.args if "::" in a
+    }
+    whole = {n.split("::", 1)[0] for n in nodeids} - narrowed
+    stale = sorted(
+        t for t in SLOW_TESTS if t.split("::", 1)[0] in whole and t not in nodeids
+    )
+    if stale:
+        raise pytest.UsageError(f"SLOW_TESTS ids match no collected test: {stale}")
     if os.environ.get("RUN_SLOW") == "1":
         return
     skip = pytest.mark.skip(

@@ -241,153 +241,9 @@ def test_bucketed_store_shuffle_free_windows(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_compact_store_merges_small_files(spark, tmp_path):
-    """Fragmented partitions compact to fewer files with identical data;
-    partitions already at target shape are left byte-untouched."""
-    from pathlib import Path
-
-    from prometheus_parquet_server_spark.sources.store import (
-        compact_store,
-        read_store,
-        store_file_stats,
-        write_store,
-    )
-
-    def mk(name, n):
-        return spark.createDataFrame(
-            [(name, {"h": str(i % 3)}, float(i), float(i) * 2) for i in range(n)],
-            "name string, labels map<string,string>, ts double, value double",
-        )
-
-    store = str(tmp_path / "store")
-    write_store(mk("frag", 40), store)
-    # fragment the 'frag' partition with 5 tiny appends; 'ok' stays whole
-    for i in range(5):
-        mk("frag", 4).write.mode("append").parquet(f"{store}/name=frag")
-    mk("ok", 10).coalesce(1).write.mode("append").parquet(f"{store}/name=ok")
-    before = {r["name"]: r["n_files"] for r in store_file_stats(spark, store).collect()}
-    assert before["frag"] > 5
-    rows_before = sorted(
-        (r["ts"], r["value"], r["name"]) for r in read_store(spark, store).collect()
-    )
-    ok_files_before = sorted(
-        f.name for f in Path(f"{store}/name=ok").glob("*.parquet")
-    )
-
-    compacted = compact_store(spark, store, target_file_bytes=1 << 30)
-    assert compacted == ["frag"]
-    after = {r["name"]: r["n_files"] for r in store_file_stats(spark, store).collect()}
-    assert after["frag"] == 1
-    assert sorted(
-        f.name for f in Path(f"{store}/name=ok").glob("*.parquet")
-    ) == ok_files_before
-    rows_after = sorted(
-        (r["ts"], r["value"], r["name"]) for r in read_store(spark, store).collect()
-    )
-    assert rows_after == rows_before
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        compact_store(spark, store, target_file_bytes=0)
-
-
-def test_expire_store_retention(spark, tmp_path):
-    from pathlib import Path
-
-    from prometheus_parquet_server_spark.sources.store import (
-        expire_store,
-        read_store,
-        write_store,
-    )
-
-    df = spark.createDataFrame(
-        [("old", {}, 10.0, 1.0), ("old", {}, 20.0, 2.0),
-         ("mix", {}, 10.0, 3.0), ("mix", {}, 100.0, 4.0),
-         ("new", {}, 200.0, 5.0)],
-        "name string, labels map<string,string>, ts double, value double",
-    )
-    store = str(tmp_path / "store")
-    write_store(df, store)
-    new_files = sorted(f.name for f in Path(f"{store}/name=new").glob("*.parquet"))
-
-    dropped = expire_store(spark, store, min_ts=50.0)
-    assert dropped == {"old": 2, "mix": 1}
-    # fully-expired partition removed; untouched partition byte-identical
-    assert not Path(f"{store}/name=old").exists()
-    assert sorted(f.name for f in Path(f"{store}/name=new").glob("*.parquet")) == new_files
-    left = sorted((r["name"], r["ts"]) for r in read_store(spark, store).collect())
-    assert left == [("mix", 100.0), ("new", 200.0)]
-
-
-def test_maintenance_unescapes_hive_partition_names(spark, tmp_path):
-    """Recording-rule names contain ':' which Hive escapes to %3A in the
-    partition dir — census/compaction/expiry must report the REAL name."""
-    from prometheus_parquet_server_spark.sources.store import (
-        compact_store,
-        expire_store,
-        store_file_stats,
-        write_store,
-    )
-
-    df = spark.createDataFrame(
-        [("job:rate5m", {}, float(i), 1.0) for i in range(8)],
-        "name string, labels map<string,string>, ts double, value double",
-    )
-    store = str(tmp_path / "store")
-    write_store(df, store)
-    for _ in range(2):
-        df.limit(2).drop("name").write.mode("append").parquet(
-            f"{store}/name=job%3Arate5m"
-        )
-    names = [r["name"] for r in store_file_stats(spark, store).collect()]
-    assert names == ["job:rate5m"]
-    assert compact_store(spark, store, target_file_bytes=1 << 30) == ["job:rate5m"]
-    # 8 original rows (ts 0–7) + two appends of 2 rows each (ts 0, 1):
-    # cutoff 4.0 drops ts 0–3 (4 rows) plus all 4 appended rows
-    assert expire_store(spark, store, min_ts=4.0) == {"job:rate5m": 8}
-
-
-def test_upsert_store_updates_win_and_append(spark, tmp_path):
-    from prometheus_parquet_server_spark.sources.store import (
-        read_store,
-        upsert_store,
-        write_store,
-    )
-
-    base = spark.createDataFrame(
-        [("m", {"h": "a"}, 1.0, 10.0), ("m", {"h": "a"}, 2.0, 20.0),
-         ("other", {}, 1.0, 99.0)],
-        "name string, labels map<string,string>, ts double, value double",
-    )
-    store = str(tmp_path / "store")
-    write_store(base, store)
-    updates = spark.createDataFrame(
-        [("m", {"h": "a"}, 2.0, 21.0),   # replaces existing (series, ts)
-         ("m", {"h": "b"}, 2.0, 5.0),    # new series, same ts — appends
-         ("m", {"h": "a"}, 3.0, 30.0),   # new ts — appends
-         ("brand_new", {}, 1.0, 7.0)],   # new metric partition
-        "name string, labels map<string,string>, ts double, value double",
-    )
-    touched = upsert_store(spark, store, updates)
-    assert sorted(touched) == ["brand_new", "m"]
-    rows = {
-        (r["name"], r["labels"].get("h"), r["ts"]): r["value"]
-        for r in read_store(spark, store).collect()
-    }
-    assert rows[("m", "a", 2.0)] == 21.0      # update won
-    assert rows[("m", "a", 1.0)] == 10.0      # untouched sample kept
-    assert rows[("m", "b", 2.0)] == 5.0       # new series appended
-    assert rows[("m", "a", 3.0)] == 30.0      # new ts appended
-    assert rows[("brand_new", None, 1.0)] == 7.0
-    assert rows[("other", None, 1.0)] == 99.0  # untouched partition
-    assert len(rows) == 6
-
-
 def test_store_manifest_detects_tampering(spark, tmp_path):
     from prometheus_parquet_server_spark.sources.store import (
-        compact_store,
         store_manifest,
-        upsert_store,
         verify_store_manifest,
         write_store,
     )
@@ -395,8 +251,9 @@ def test_store_manifest_detects_tampering(spark, tmp_path):
     mk = lambda rows: spark.createDataFrame(
         rows, "name string, labels map<string,string>, ts double, value double"
     )
+    rows = [("a", {}, 1.0, 1.0), ("a", {}, 2.0, 2.0), ("b", {}, 1.0, 3.0)]
     store = str(tmp_path / "store")
-    write_store(mk([("a", {}, 1.0, 1.0), ("a", {}, 2.0, 2.0), ("b", {}, 1.0, 3.0)]), store)
+    write_store(mk(rows), store)
     # materialize to literal rows (as a persisted manifest would be) —
     # keeping it as a live plan over the same path would let Spark's
     # cache-plan matching serve stale data to BOTH sides of the diff
@@ -405,40 +262,25 @@ def test_store_manifest_detects_tampering(spark, tmp_path):
         "name string, n_rows long, content_hash decimal(20,0)",
     )
 
-    # intact store → empty diff; re-layout (compaction) must NOT trip it
-    for _ in range(2):
-        mk([("a", {}, 9.0, 9.0)]).drop("name").write.mode("append").parquet(
-            f"{store}/name=a"
-        )
-    upsert_store(spark, store, mk([("a", {}, 9.0, 9.0)]))  # dedupe the appends
-    compact_store(spark, store, target_file_bytes=1 << 30)
+    # the same rows under a different file layout must NOT trip it
+    write_store(mk(rows).repartition(3), store)
+    assert verify_store_manifest(spark, store, manifest).collect() == []
+
+    # extra parquet written straight into a partition dir: 'a' changed,
+    # 'b' intact and absent from the diff
+    mk([("a", {}, 9.0, 9.0)]).drop("name").write.mode("append").parquet(
+        f"{store}/name=a"
+    )
     diff = verify_store_manifest(spark, store, manifest).collect()
-    # 'a' genuinely changed (new ts=9 sample); 'b' intact and absent
     assert [(r["name"], r["status"]) for r in diff] == [("a", "changed")]
 
     # value flip detected even at identical row count
-    upsert_store(spark, store, mk([("b", {}, 1.0, 999.0)]))
+    mk([("b", {}, 1.0, 999.0)]).drop("name").write.mode("overwrite").parquet(
+        f"{store}/name=b"
+    )
     diff2 = {r["name"]: r["status"] for r in
              verify_store_manifest(spark, store, manifest).collect()}
-    assert diff2["b"] == "changed"
-
-
-def test_upsert_dedupes_duplicate_updates_deterministically(spark, tmp_path):
-    from prometheus_parquet_server_spark.sources.store import (
-        read_store,
-        upsert_store,
-        write_store,
-    )
-
-    mk = lambda rows: spark.createDataFrame(
-        rows, "name string, labels map<string,string>, ts double, value double"
-    )
-    store = str(tmp_path / "store")
-    write_store(mk([("m", {}, 1.0, 0.0)]), store)
-    # duplicate (series, ts) WITHIN the update batch → max value wins
-    upsert_store(spark, store, mk([("m", {}, 1.0, 21.0), ("m", {}, 1.0, 22.0)]))
-    rows = read_store(spark, store).collect()
-    assert [(r["ts"], r["value"]) for r in rows] == [(1.0, 22.0)]
+    assert diff2 == {"a": "changed", "b": "changed"}
 
 
 def test_metric_type_map_serving_types(spark):

@@ -568,9 +568,9 @@ def test_object_store_commit_backend_single_winner():
     schema_json = {"type": "struct", "fields": []}
 
     # (a) direct double-create on one slot: exactly one winner
-    from prometheus_parquet_server_spark.sources.pyds import _manifest_fs_path
+    from prometheus_parquet_server_spark.sources.snapshot_store import _manifest_path
 
-    slot = _manifest_fs_path(root + "_slot", 1)
+    slot = _manifest_path(root + "_slot", 1)
     assert _create_manifest_exclusive(slot, b"{}") is True
     assert _create_manifest_exclusive(slot, b"{}") is False
 
@@ -620,11 +620,11 @@ def test_s3_commit_backend_moto_race():
 
     from prometheus_parquet_server_spark.sources.pyds import (
         S3CommitBackend,
-        _manifest_fs_path,
         _publish_manifest,
         _read_manifest,
         register_commit_backend,
     )
+    from prometheus_parquet_server_spark.sources.snapshot_store import _manifest_path
 
     with mock_aws():
         client = boto3.client("s3", region_name="us-east-1")
@@ -633,7 +633,7 @@ def test_s3_commit_backend_moto_race():
 
         # (a) primitive: two racers on one slot — exactly one winner, the
         # loser sees S3's own 412 (not a fake), and the winner's bytes win
-        slot = _manifest_fs_path("s3://pps-test-bucket/store", 1)
+        slot = _manifest_path("s3://pps-test-bucket/store", 1)
         assert backend.create_exclusive(slot, b'{"racer": "A"}') is True
         assert backend.create_exclusive(slot, b'{"racer": "B"}') is False
         assert backend.read_bytes(slot) == b'{"racer": "A"}'
@@ -759,18 +759,18 @@ def test_gcs_commit_backend_race():
     the bound."""
     from prometheus_parquet_server_spark.sources.pyds import (
         GCSCommitBackend,
-        _manifest_fs_path,
         _publish_manifest,
         _read_manifest,
         register_commit_backend,
     )
+    from prometheus_parquet_server_spark.sources.snapshot_store import _manifest_path
 
     sess = _FakeGCSSession()
     backend = GCSCommitBackend(sess)
 
     # (a) primitive: one slot, two racers — exactly one winner; the
     # winner's bytes are what a read returns
-    slot = _manifest_fs_path("gs://pps-test-bucket/store", 1)
+    slot = _manifest_path("gs://pps-test-bucket/store", 1)
     assert backend.create_exclusive(slot, b'{"racer": "A"}') is True
     assert backend.create_exclusive(slot, b'{"racer": "B"}') is False
     assert backend.read_bytes(slot) == b'{"racer": "A"}'
@@ -822,7 +822,7 @@ def test_gcs_commit_backend_race():
     # (c) a transient 429 retries through to the win; at the bound the
     # create raises instead of silently giving up
     sess.throttle_next = 2
-    slot2 = _manifest_fs_path("gs://pps-test-bucket/store", 2)
+    slot2 = _manifest_path("gs://pps-test-bucket/store", 2)
     assert backend.create_exclusive(slot2, b"{}") is True
     sess.throttle_next = 10**9
     limited = GCSCommitBackend(sess, max_conflict_retries=2)
@@ -896,11 +896,11 @@ def test_abs_commit_backend_race():
     FileNotFoundError."""
     from prometheus_parquet_server_spark.sources.pyds import (
         ABSCommitBackend,
-        _manifest_fs_path,
         _publish_manifest,
         _read_manifest,
         register_commit_backend,
     )
+    from prometheus_parquet_server_spark.sources.snapshot_store import _manifest_path
 
     backend = ABSCommitBackend(_FakeBlobService())
 
@@ -909,7 +909,7 @@ def test_abs_commit_backend_race():
         "cont", "a/b",
     )
 
-    slot = _manifest_fs_path("wasbs://cont@acct.blob.core.windows.net/store", 1)
+    slot = _manifest_path("wasbs://cont@acct.blob.core.windows.net/store", 1)
     assert backend.create_exclusive(slot, b'{"racer": "A"}') is True
     assert backend.create_exclusive(slot, b'{"racer": "B"}') is False
     assert backend.read_bytes(slot) == b'{"racer": "A"}'

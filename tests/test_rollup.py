@@ -110,7 +110,7 @@ def test_rollup_ingest_incremental_equals_one_shot(spark, tmp_path):
         _resolve_tip,
         snapshot_expire,
     )
-    from prometheus_parquet_server_spark.sources.store import _StoreFS
+    from prometheus_parquet_server_spark.sources.snapshot_store import _StoreFS
 
     rows = [
         ("click", 10.0 + 37.0 * i, float((i * 13) % 97) / 7.0) for i in range(200)

@@ -2,8 +2,8 @@
 
 The object-store-safe table format (sources/snapshot_store.py): commits
 are create-if-absent manifest files, data files are immutable, readers
-see only committed state. These tests pin the commit atomicity story the
-directory-swap store cannot offer on object stores.
+see only committed state. These tests pin the commit atomicity story a
+rename-based rewrite cannot offer on object stores.
 """
 
 from __future__ import annotations
@@ -85,14 +85,25 @@ def test_upsert_rewrites_only_touched_files(spark, tmp_path):
     store = f"file://{tmp_path}/snap"
     snapshot_write(spark, store, mk(spark, [("a", {}, 1.0, 1.0)]), mode="overwrite")
     snapshot_write(spark, store, mk(spark, [("b", {}, 1.0, 2.0)]))
-    v = snapshot_upsert(
-        spark, store, mk(spark, [("b", {}, 1.0, 99.0), ("c", {}, 1.0, 3.0)])
-    )
+    updates = [
+        ("b", {}, 1.0, 99.0),  # replaces the existing (series, ts)
+        ("b", {"h": "x"}, 1.0, 5.0),  # new series, same ts: appends
+        ("b", {}, 2.0, 7.0),  # new ts: appends
+        ("c", {}, 1.0, 3.0),  # new metric
+    ]
+    v = snapshot_upsert(spark, store, mk(spark, updates))
     assert v == 3
     rows = {
-        (r["name"], r["ts"]): r["value"] for r in snapshot_read(spark, store).collect()
+        (r["name"], r["labels"].get("h"), r["ts"]): r["value"]
+        for r in snapshot_read(spark, store).collect()
     }
-    assert rows == {("a", 1.0): 1.0, ("b", 1.0): 99.0, ("c", 1.0): 3.0}
+    assert rows == {
+        ("a", None, 1.0): 1.0,
+        ("b", None, 1.0): 99.0,
+        ("b", "x", 1.0): 5.0,
+        ("b", None, 2.0): 7.0,
+        ("c", None, 1.0): 3.0,
+    }
     # 'a' file carried over by reference: same path in v2 and v3 manifests
     from prometheus_parquet_server_spark.sources.snapshot_store import (
         _read_manifest,
@@ -104,6 +115,24 @@ def test_upsert_rewrites_only_touched_files(spark, tmp_path):
         f["path"] for f in _read_manifest(fs, store, v)["files"] if f["min_name"] == "a"
     }
     assert paths(2) == paths(3) != set()
+
+
+def test_upsert_dedupes_duplicate_updates_deterministically(spark, tmp_path):
+    """Duplicate (series, ts) rows WITHIN one update batch resolve to the
+    max value (the merge's row_number tie-break on value desc) whatever
+    order and partitioning the batch arrives in — never by shuffle
+    layout. The existing sample loses to the batch even though its value
+    is larger: batch priority ranks before value."""
+    dupes = [("m", {}, 1.0, 21.0), ("m", {}, 1.0, 22.0), ("m", {}, 1.0, 20.0)]
+    layouts = [(dupes, 1), (dupes[::-1], 1), (dupes[::-1], 3)]
+    for i, (rows, parts) in enumerate(layouts):
+        store = f"file://{tmp_path}/snap{i}"
+        snapshot_write(
+            spark, store, mk(spark, [("m", {}, 1.0, 99.0)]), mode="overwrite"
+        )
+        snapshot_upsert(spark, store, mk(spark, rows).repartition(parts))
+        got = [(r["ts"], r["value"]) for r in snapshot_read(spark, store).collect()]
+        assert got == [(1.0, 22.0)], (i, got)
 
 
 def test_manifest_level_file_pruning(spark, tmp_path):
@@ -502,7 +531,7 @@ def test_write_rejects_null_keys_and_cleans_up(spark, tmp_path):
     read, expire and upsert on that manifest would break — one dirty
     batch would wedge the store permanently. The rejected tx dir is
     reclaimed immediately."""
-    from prometheus_parquet_server_spark.sources.store import _StoreFS
+    from prometheus_parquet_server_spark.sources.snapshot_store import _StoreFS
 
     store = f"file://{tmp_path}/snap"
     snapshot_write(spark, store, mk(spark, [("a", {}, 1.0, 1.0)]), mode="overwrite")
@@ -589,7 +618,7 @@ from prometheus_parquet_server_spark.sources.snapshot_store import (
     _read_manifest, _resolve_tip, _schema_json, _target_version, _try_commit,
     _write_data_files,
 )
-from prometheus_parquet_server_spark.sources.store import _StoreFS
+from prometheus_parquet_server_spark.sources.snapshot_store import _StoreFS
 
 tag, store, barrier_dir = sys.argv[1], sys.argv[2], sys.argv[3]
 spark = get_spark(f"racer-{{tag}}")
@@ -673,7 +702,7 @@ def test_graded_snapshot_select_prunes_files(spark):
         _resolve_tip,
         snapshot_select,
     )
-    from prometheus_parquet_server_spark.sources.store import _StoreFS
+    from prometheus_parquet_server_spark.sources.snapshot_store import _StoreFS
 
     store = _snapshot_store_for(spark, "/root/testdata/sf0.001")
     fs = _StoreFS(spark, store)
@@ -848,6 +877,34 @@ def test_append_type_conflict_rejected_store_stays_readable(spark, tmp_path):
 
     assert not os.listdir(f"{tmp_path}/s/data") == []  # no orphan tx dirs
     assert snapshot_version(spark, root) == 1
+
+
+def test_append_gate_ignores_nested_nullability(spark, tmp_path):
+    """labels built with F.create_map over literals carry
+    valueContainsNull=False; the store's recorded map (as parquet reads it
+    back) is nullable-valued. The gate compares type SHAPE
+    (simpleString), so the append must pass."""
+    from prometheus_parquet_server_spark.sources.snapshot_store import (
+        _read_manifest,
+        _StoreFS,
+    )
+
+    root = f"file://{tmp_path}/s"
+    snapshot_write(
+        spark, root, mk(spark, [("m", {"x": "1"}, 1.0, 2.0)]), mode="overwrite"
+    )
+    recorded = _read_manifest(_StoreFS(spark, root), root, 1)["schema"]
+    labels = {f["name"]: f["type"] for f in recorded["fields"]}["labels"]
+    assert labels["valueContainsNull"] is True
+    updates = spark.range(1).select(
+        F.lit("m").alias("name"),
+        F.create_map(F.lit("x"), F.lit("2")).alias("labels"),
+        F.lit(3.0).alias("ts"),
+        F.lit(4.0).alias("value"),
+    )
+    assert updates.schema["labels"].dataType.valueContainsNull is False
+    assert snapshot_write(spark, root, updates) == 2
+    assert snapshot_read(spark, root).count() == 2
 
 
 def test_append_column_set_mismatch_strict_vs_merge(spark, tmp_path):

@@ -1,33 +1,12 @@
-"""Store lifecycle: Hadoop-FS maintenance, crash-safety, streaming compose.
+"""Integrity digest of the name-partitioned plain sink.
 
-Round-6 coverage for VERDICT items 1/3/7 and the ADVICE store flags:
-- maintenance passes run against an explicit ``file:``-scheme Hadoop path
-  (the object-store-safe I/O layer, not driver-local pathlib);
-- crash-swap rollback keeps old data live;
-- stale staging/trash dirs from an interrupted pass are GC'd;
-- a partition dir with zero parquet files is skipped, not crashed on;
-- upsert of many metrics runs a bounded number of job waves (not one per
-  metric);
-- the manifest digest is multiplicity-sensitive (the XOR blind spot);
-- streaming ingest composes with the store lifecycle end-to-end.
+The manifest digest is multiplicity-sensitive (the XOR blind spot).
 """
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from prometheus_parquet_server_spark.sources.store import (
-    _gc_stale_maintenance_dirs,
-    _StoreFS,
-    _swap_partition_dir,
-    compact_store,
-    expire_store,
-    read_store,
-    store_file_stats,
     store_manifest,
-    upsert_store,
-    verify_store_manifest,
     write_store,
 )
 
@@ -36,101 +15,6 @@ def mk(spark, rows):
     return spark.createDataFrame(
         rows, "name string, labels map<string,string>, ts double, value double"
     )
-
-
-def test_maintenance_on_file_scheme_hadoop_path(spark, tmp_path):
-    """The whole lifecycle against an explicit ``file:`` URI — proves the
-    I/O layer speaks Hadoop FileSystem, not pathlib (VERDICT r5 #1)."""
-    store = f"file://{tmp_path}/store"
-    write_store(mk(spark, [("m", {}, float(t), float(t)) for t in range(10)]), store)
-    # fragment the partition with two extra appends
-    for v in (100.0, 200.0):
-        mk(spark, [("m", {}, v, v)]).drop("name").write.mode("append").parquet(
-            f"{store}/name=m"
-        )
-
-    stats = {r["name"]: r["n_files"] for r in store_file_stats(spark, store).collect()}
-    assert stats["m"] >= 3
-
-    assert compact_store(spark, store, target_file_bytes=1 << 30) == ["m"]
-    stats2 = {r["name"]: r["n_files"] for r in store_file_stats(spark, store).collect()}
-    assert stats2["m"] == 1
-
-    assert upsert_store(spark, store, mk(spark, [("m", {}, 0.0, -1.0), ("new", {}, 1.0, 1.0)])) == ["m", "new"]
-    got = {r["ts"]: r["value"] for r in read_store(spark, store).filter(F.col("name") == "m").collect()}
-    assert got[0.0] == -1.0  # update won over existing
-
-    dropped = expire_store(spark, store, min_ts=100.0)
-    assert dropped == {"m": 10, "new": 1}
-    names = {r["name"] for r in read_store(spark, store).select("name").distinct().collect()}
-    assert names == {"m"}  # 'new' fully expired and removed
-
-
-def test_crash_swap_rolls_back_to_old_data(spark, tmp_path):
-    store = str(tmp_path / "store")
-    write_store(mk(spark, [("m", {}, 1.0, 1.0)]), store)
-    fs = _StoreFS(spark, store)
-    [(part, _)] = [(d, n) for d, n in
-                   ((d, d) for d in fs.subdirs()) if "name=m" in d]
-    # tmp dir does not exist → the rename-in step fails mid-swap
-    with pytest.raises(Exception):
-        _swap_partition_dir(fs, part, f"{store}/.compact_tmp_missing")
-    rows = read_store(spark, store).collect()
-    assert [(r["name"], r["ts"], r["value"]) for r in rows] == [("m", 1.0, 1.0)]
-
-
-def test_stale_maintenance_dirs_are_gcd(spark, tmp_path):
-    store = str(tmp_path / "store")
-    write_store(mk(spark, [("m", {}, 1.0, 1.0)]), store)
-    for stale in (".compact_tmp_name=x", ".expire_tmp_name=y",
-                  ".upsert_stage_deadbeef", ".trash_name=m"):
-        (tmp_path / "store" / stale).mkdir()
-        (tmp_path / "store" / stale / "junk").write_text("x")
-    fs = _StoreFS(spark, store)
-    removed = _gc_stale_maintenance_dirs(fs)
-    assert len(removed) == 4
-    # live data untouched; a fresh pass starts clean
-    assert compact_store(spark, store) == []
-    assert read_store(spark, store).count() == 1
-
-
-def test_expire_skips_empty_partition_dir(spark, tmp_path):
-    store = str(tmp_path / "store")
-    write_store(mk(spark, [("m", {}, 1.0, 1.0), ("m", {}, 9.0, 9.0)]), store)
-    (tmp_path / "store" / "name=empty").mkdir()  # crash leftover, no files
-    dropped = expire_store(spark, store, min_ts=5.0)  # must not raise
-    assert dropped == {"m": 1}
-    assert read_store(spark, store).count() == 1
-
-
-def test_upsert_many_metrics_bounded_job_waves(spark, tmp_path):
-    """50-metric upsert must run a bounded number of Spark jobs (the
-    round-5 implementation launched one write job per metric)."""
-    store = str(tmp_path / "store")
-    n = 50
-    base = mk(spark, [(f"m{i}", {}, 1.0, 1.0) for i in range(n)])
-    write_store(base, store)
-    updates = mk(
-        spark,
-        [(f"m{i}", {}, 1.0, 10.0) for i in range(n)]  # replace
-        + [(f"fresh{i}", {}, 2.0, 2.0) for i in range(5)],  # brand-new
-    )
-
-    sc = spark.sparkContext
-    sc.setJobGroup("upsert_test", "bounded job waves")
-    try:
-        touched = upsert_store(spark, store, updates)
-    finally:
-        sc.setJobGroup(None, None)
-    jobs = sc.statusTracker().getJobIdsForGroup("upsert_test")
-    # ~7 in practice (collect + write + schema-inference/AQE bookkeeping);
-    # the round-5 per-metric loop would be > n. The contract is O(1) in n.
-    assert len(jobs) <= 10, f"upsert launched {len(jobs)} jobs for {n} metrics"
-    assert len(touched) == n + 5
-
-    out = read_store(spark, store)
-    assert out.filter(F.col("value") == 10.0).count() == n
-    assert out.filter(F.col("name").startswith("fresh")).count() == 5
 
 
 def test_manifest_sum_catches_even_multiplicity_swap(spark, tmp_path):
@@ -145,262 +29,3 @@ def test_manifest_sum_catches_even_multiplicity_swap(spark, tmp_path):
     m2 = store_manifest(spark, s2).collect()[0]
     assert m1["n_rows"] == m2["n_rows"] == 3
     assert m1["content_hash"] != m2["content_hash"]
-
-
-SF = "/root/testdata/sf0.001"
-
-
-def test_streaming_ingest_composes_with_store_lifecycle(spark, tmp_path):
-    sf_dir = SF
-    """End-to-end: drain a micro-batch stream through upsert_store via
-    foreachBatch (availableNow), then compact and manifest-verify — the
-    maintenance ops compose with live ingest (VERDICT r5 #7)."""
-    from prometheus_parquet_server_spark.streaming.ingest import (
-        stream_events_as_metrics,
-    )
-
-    store = str(tmp_path / "store")
-    metrics = stream_events_as_metrics(spark, sf_dir).select(
-        "name",
-        "labels",
-        F.unix_timestamp("event_time").cast("double").alias("ts"),
-        "value",
-    )
-
-    def sink_batch(batch_df, batch_id):
-        upsert_store(
-            batch_df.sparkSession,
-            store,
-            # MAX-dedupe within the batch happens inside upsert's window
-            batch_df,
-        )
-
-    q = (
-        metrics.writeStream.foreachBatch(sink_batch)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    stored = read_store(spark, store)
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # upsert dedupes (series, ts) collisions to the max value — compare
-    # against the equivalently deduped batch computation
-    from prometheus_parquet_server_spark.sources.ingest import epoch_micros
-
-    expect = (
-        batch.select(
-            F.col("event_type").alias("name"),
-            F.col("user_id").cast("string").alias("uid"),
-            (F.floor(epoch_micros(batch) / 1_000_000)).cast("double").alias("ts"),
-            "value",
-        )
-        .groupBy("name", "uid", "ts")
-        .agg(F.max("value"))
-    )
-    assert stored.count() == expect.count()
-
-    manifest = spark.createDataFrame(
-        store_manifest(spark, store).collect(),
-        "name string, n_rows long, content_hash decimal(20,0)",
-    )
-    compact_store(spark, store, target_file_bytes=1 << 30)
-    # compaction re-layouts but never changes content
-    assert verify_store_manifest(spark, store, manifest).collect() == []
-
-
-def test_non_atomic_rename_scheme_warns(spark, tmp_path, monkeypatch):
-    """On a copy-based-rename filesystem the maintenance pass must warn
-    (pointing at the snapshot store) instead of silently claiming the
-    local-FS crash-safety story."""
-    import warnings
-
-    from prometheus_parquet_server_spark.sources import store as store_mod
-
-    stored = str(tmp_path / "store")
-    write_store(mk(spark, [("m", {}, 1.0, 1.0)]), stored)
-    monkeypatch.setattr(
-        store_mod._StoreFS, "_ATOMIC_SCHEMES", frozenset({"hdfs"})
-    )
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        compact_store(spark, stored)
-    assert any("non-atomic" in str(w.message) for w in caught)
-
-
-def test_upsert_plan_shape_single_merge(spark, tmp_path):
-    """Plan-shape contract for the batch upsert: the merged frame is ONE
-    window over ONE union — at most 2 exchanges (the window's hash
-    exchange + AQE bookkeeping), never an exchange per touched metric."""
-    from prometheus_parquet_server_spark.model import series_key_str
-    from pyspark.sql import Window
-
-    store = str(tmp_path / "store")
-    write_store(mk(spark, [(f"m{i}", {}, 1.0, 1.0) for i in range(10)]), store)
-    updates = mk(spark, [(f"m{i}", {}, 1.0, 2.0) for i in range(10)])
-    # replicate upsert_store's merged plan (the write itself is not
-    # explainable post-hoc) and pin its exchange count
-    existing = read_store(spark, store).filter(
-        F.col("name").isin([f"m{i}" for i in range(10)])
-    ).withColumn("_prio", F.lit(1))
-    merged = (
-        updates.withColumn("_prio", F.lit(0))
-        .unionByName(existing.select(*updates.withColumn("_prio", F.lit(0)).columns))
-        .withColumn("_sk", series_key_str())
-    )
-    w = Window.partitionBy("_sk", "ts").orderBy("_prio", F.col("value").desc())
-    out = (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_prio", "_rn")
-        .sortWithinPartitions("name", "_sk", "ts")
-        .drop("_sk")
-    )
-    plan = spark._jvm.PythonSQLUtils.explainString(out._jdf.queryExecution(), "simple")
-    assert plan.count("Exchange") <= 2, plan
-
-
-def test_gc_restores_trash_after_hard_crash_mid_swap(spark, tmp_path):
-    """A maintainer killed between the two swap renames leaves the ONLY
-    copy of the partition in .trash_name=X (no live dir, no in-process
-    rollback). GC must restore it, never delete it — deleting would be
-    permanent data loss."""
-    import os
-
-    store = str(tmp_path / "store")
-    write_store(mk(spark, [("m", {}, 1.0, 42.0)]), store)
-    # simulate the crash window: live renamed aside, new data staged
-    os.rename(f"{store}/name=m", f"{store}/.trash_name=m")
-    (tmp_path / "store" / ".compact_tmp_name=m").mkdir()
-    fs = _StoreFS(spark, store)
-    removed = _gc_stale_maintenance_dirs(fs)
-    # staging deleted, trash RESTORED (not in removed)
-    assert any(".compact_tmp_name=m" in p for p in removed)
-    assert not any(".trash_name=m" in p for p in removed)
-    rows = read_store(spark, store).collect()
-    assert [(r["name"], r["ts"], r["value"]) for r in rows] == [("m", 1.0, 42.0)]
-    # and a full maintenance pass right after the crash heals + proceeds
-    assert compact_store(spark, store) == []
-
-
-def test_gc_completes_crashed_removal_not_restore(spark, tmp_path):
-    """A crash between a removal's rename-aside and its delete leaves
-    .removing_name=X with no live dir. GC must COMPLETE the delete —
-    restoring (the .trash_ rule) would resurrect a fully-expired
-    partition."""
-    import pathlib
-
-    from prometheus_parquet_server_spark.sources.store import (
-        _StoreFS,
-        _gc_stale_maintenance_dirs,
-        read_store,
-        write_store,
-    )
-
-    store = f"file://{tmp_path}/store"
-    df = spark.createDataFrame(
-        [("keep", {}, 1.0, 1.0), ("gone", {}, 2.0, 2.0)],
-        "name string, labels map<string,string>, ts double, value double",
-    )
-    write_store(df, store)
-    # simulate the crash: expired partition renamed aside, delete never ran
-    root = pathlib.Path(f"{tmp_path}/store")
-    (root / "name=gone").rename(root / ".removing_name=gone")
-    removed = _gc_stale_maintenance_dirs(_StoreFS(spark, store))
-    assert any(".removing_name=gone" in p for p in removed)
-    assert not (root / ".removing_name=gone").exists()
-    assert not (root / "name=gone").exists()  # stays deleted, not restored
-    assert [r["name"] for r in read_store(spark, store).collect()] == ["keep"]
-
-
-def test_upsert_store_rejects_null_names(spark, tmp_path):
-    from prometheus_parquet_server_spark.sources.store import (
-        upsert_store,
-        write_store,
-    )
-
-    store = f"file://{tmp_path}/store"
-    ok = spark.createDataFrame(
-        [("a", {}, 1.0, 1.0)],
-        "name string, labels map<string,string>, ts double, value double",
-    )
-    write_store(ok, store)
-    bad = spark.createDataFrame(
-        [(None, {}, 2.0, 2.0), ("a", {}, 3.0, 3.0)],
-        "name string, labels map<string,string>, ts double, value double",
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="NULL metric names"):
-        upsert_store(spark, store, bad)
-
-
-def test_upsert_rejects_schema_drift(spark, tmp_path):
-    """A type-conflicting upsert must be rejected: unionByName would
-    otherwise COERCE — value double + value string silently retypes the
-    whole rewritten partition to string. Added/missing columns are
-    rejected too (they would split the store into heterogeneous
-    partitions)."""
-    import pytest
-    from prometheus_parquet_server_spark.sources.store import (
-        read_store,
-        upsert_store,
-        write_store,
-    )
-
-    root = f"file://{tmp_path}/st"
-    base = spark.createDataFrame(
-        [("m", {"x": "1"}, 1.0, 2.0)],
-        "name string, labels map<string,string>, ts double, value double",
-    )
-    write_store(base, root)
-    bad_type = spark.createDataFrame(
-        [("m", {"x": "2"}, 3.0, "oops")],
-        "name string, labels map<string,string>, ts double, value string",
-    )
-    with pytest.raises(ValueError, match="type conflict"):
-        upsert_store(spark, root, bad_type)
-    bad_set = spark.createDataFrame(
-        [("m", {"x": "2"}, 3.0, 4.0, 9)],
-        "name string, labels map<string,string>, ts double, value double, "
-        "extra int",
-    )
-    with pytest.raises(ValueError, match="column set"):
-        upsert_store(spark, root, bad_set)
-    out = read_store(spark, root)  # untouched, still double
-    assert dict(out.dtypes)["value"] == "double"
-    assert out.count() == 1
-    # a clean upsert still works
-    good = spark.createDataFrame(
-        [("m", {"x": "2"}, 3.0, 4.0)],
-        "name string, labels map<string,string>, ts double, value double",
-    )
-    assert upsert_store(spark, root, good) == ["m"]
-    assert read_store(spark, root).count() == 2
-
-
-def test_upsert_gate_ignores_nested_nullability(spark, tmp_path):
-    """labels built with F.create_map over literals carry
-    valueContainsNull=False; the store's read-back map is nullable-valued.
-    The gate compares type SHAPE (simpleString), so this must pass."""
-    from prometheus_parquet_server_spark.sources.store import (
-        read_store,
-        upsert_store,
-        write_store,
-    )
-
-    root = f"file://{tmp_path}/st"
-    base = spark.createDataFrame(
-        [("m", {"x": "1"}, 1.0, 2.0)],
-        "name string, labels map<string,string>, ts double, value double",
-    )
-    write_store(base, root)
-    updates = spark.range(1).select(
-        F.lit("m").alias("name"),
-        F.create_map(F.lit("x"), F.lit("2")).alias("labels"),
-        F.lit(3.0).alias("ts"),
-        F.lit(4.0).alias("value"),
-    )
-    assert upsert_store(spark, root, updates) == ["m"]
-    assert read_store(spark, root).count() == 2
