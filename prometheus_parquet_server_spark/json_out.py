@@ -99,5 +99,9 @@ def scalar_result(value: float, at: float) -> dict[str, Any]:
     }
 
 
-def error_response(message: str) -> dict[str, Any]:
-    return {"status": "error", "error": message}
+def error_response(message: str, error_type: str | None = None) -> dict[str, Any]:
+    """Error envelope; ``error_type`` is the Prometheus API ``errorType``
+    (``bad_data``, ``internal``, ...)."""
+    if error_type is None:
+        return {"status": "error", "error": message}
+    return {"status": "error", "errorType": error_type, "error": message}

@@ -33,7 +33,17 @@ def canonical_labels_json(labels: Column) -> Column:
 
     Replaces the reference's ordered BTreeMap semantics (src/labels.rs:171-176)
     so equal label sets compare/hash equal regardless of map entry order.
+    A NULL map is the empty label set (``"{}"``), as on the batch path, so
+    every key built from it — ``series_key_str``, group and match keys —
+    is a real key: a NULL-labels series never shares a NULL key with the
+    NULL-labels series of other names.
     """
+    labels = F.coalesce(
+        labels,
+        F.map_from_arrays(
+            F.array().cast("array<string>"), F.array().cast("array<string>")
+        ),
+    )
     return F.to_json(F.map_from_entries(F.array_sort(F.map_entries(labels))))
 
 

@@ -189,12 +189,7 @@ def _grouped_agg(
         "value",
     )
     summed = prepared.groupBy("_name", "_gkey", "ts").agg(*aggs)
-    labels_back = F.coalesce(
-        F.from_json(F.col("_gkey"), "map<string,string>"),
-        F.map_from_arrays(
-            F.array().cast("array<string>"), F.array().cast("array<string>")
-        ),
-    )
+    labels_back = F.from_json(F.col("_gkey"), "map<string,string>")
     return summed.select(
         F.col("_name").alias("name"), labels_back.alias("labels"), "ts", *out_cols
     )

@@ -50,6 +50,17 @@ class RegularTimeRange:
     def __len__(self) -> int:
         return self._len
 
+    def is_prefix_of(self, other: "RegularTimeRange") -> bool:
+        """Same start and step, no more instants: this grid's instants are
+        ``other``'s first ones as the identical floats (both enumerate
+        ``start + n*inc``). A grid with another start is never a prefix —
+        ``start' + m*inc`` need not equal ``start + (k+m)*inc`` in f64."""
+        return (
+            self.start == other.start
+            and self.increment == other.increment
+            and self._len <= other._len
+        )
+
     def instants(self) -> list[float]:
         """Materialized grid (src/timevectors.rs:233-243): start + n*inc."""
         return [self.start + n * self.increment for n in range(self._len)]

@@ -156,22 +156,13 @@ def keyed_series(samples: DataFrame) -> tuple[DataFrame, DataFrame]:
         series_key_str,
     )
 
-    # NULL labels coalesce to the empty map BEFORE canonicalization
-    # (ADVICE r14): canonical_labels_json(NULL) is NULL, which made _skey
-    # NULL via concat — the series frame then fragmented into one distinct
-    # row per name and the _skey equi-join dropped those samples entirely.
-    # With the coalesce a NULL-labels series is the ordinary empty-label
-    # series on BOTH the keyed and series sides. (Known degenerate
-    # limitation, unchanged: a metric literally named U+0000 shares an
-    # _skey with a NULL-named series of the same labels — unreachable from
-    # any real ingest path, where names are non-NUL strings.)
-    labels_nn = F.coalesce(
-        F.col("labels"),
-        F.map_from_arrays(
-            F.array().cast("array<string>"), F.array().cast("array<string>")
-        ),
-    )
-    keyed = samples.withColumn("_skey", series_key_str(labels=labels_nn))
+    # NULL labels key as the empty map (canonical_labels_json coalesces),
+    # so a NULL-labels series is the ordinary empty-label series on BOTH
+    # the keyed and series sides. (Known degenerate limitation: a metric
+    # literally named U+0000 shares an _skey with a NULL-named series of
+    # the same labels — unreachable from any real ingest path, where names
+    # are non-NUL strings.)
+    keyed = samples.withColumn("_skey", series_key_str())
     # distinct-on-strings instead of groupBy(_skey).agg(first(labels))
     # (r14): `first` over a MAP column cannot use an UnsafeRow aggregation
     # buffer, so Spark planned a Sort + SortAggregate pair per series
@@ -186,7 +177,7 @@ def keyed_series(samples: DataFrame) -> tuple[DataFrame, DataFrame]:
         keyed.select(
             "_skey",
             "name",
-            canonical_labels_json(labels_nn).alias("_lj"),
+            canonical_labels_json(F.col("labels")).alias("_lj"),
         )
         .distinct()
         .select(

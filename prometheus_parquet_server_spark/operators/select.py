@@ -110,10 +110,5 @@ def series_sets(df: DataFrame, matchers: list[LabelMatcher]) -> DataFrame:
         )
         .distinct()
     )
-    labels_back = F.coalesce(
-        F.from_json(F.col("_lj"), "map<string,string>"),
-        F.map_from_arrays(
-            F.array().cast("array<string>"), F.array().cast("array<string>")
-        ),
-    )
+    labels_back = F.from_json(F.col("_lj"), "map<string,string>")
     return dedup.select("name", labels_back.alias("labels"))

@@ -21,6 +21,8 @@ anything else errors "Unknown function".
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
 from collections.abc import Callable
 from dataclasses import dataclass
 from dataclasses import replace as dc_replace
@@ -1022,6 +1024,77 @@ class _Collection:
     """Seed state marker (OriginalCollection)."""
 
 
+AlignedStore = tuple[DataFrame, DataFrame | None, int]
+
+
+class PlanMemo:
+    """Plans compiled on one anchor grid, reused on its prefix grids.
+
+    Range evaluation is per instant: the value at ``t`` depends on ``t``,
+    the start and the step (its window, its offset, the samples around
+    ``t``, a subquery's inner grid), never on the grid's end. A prefix grid
+    (``RegularTimeRange.is_prefix_of``) enumerates the anchor's first
+    instants as the identical floats, so the anchor's plan filtered to
+    ``ts <=`` the prefix's last instant yields the prefix grid's rows and
+    values bit for bit. Queries that read the grid's end (``@ end()``)
+    never come here (see :func:`run_query`).
+
+    ``grid`` is the anchor grid and ``aligned`` its aligned store,
+    ``(exact, backward-extended | None, pad steps)``. At most ``capacity``
+    plans are kept, least recently used evicted."""
+
+    def __init__(self, grid: RegularTimeRange, aligned: AlignedStore, capacity: int):
+        self.grid = grid
+        self.aligned = aligned
+        self._capacity = capacity
+        self._plans: OrderedDict[tuple, DataFrame] = OrderedDict()
+        self._lock = threading.Lock()
+
+    def plan(
+        self, key: tuple, grid: RegularTimeRange, compile_anchor: Callable[[], DataFrame]
+    ) -> DataFrame:
+        """``key``'s plan on ``grid``, a prefix of the anchor grid: the
+        memoized anchor plan (compiled by ``compile_anchor`` on a miss)
+        with one ``ts`` filter."""
+        with self._lock:
+            df = self._plans.get(key)
+            if df is not None:
+                self._plans.move_to_end(key)
+        if df is None:
+            df = compile_anchor()
+            with self._lock:
+                self._plans[key] = df
+                while len(self._plans) > self._capacity:
+                    self._plans.popitem(last=False)
+        if len(grid) < len(self.grid):
+            df = df.filter(F.col("ts") <= F.lit(grid.instants()[-1]))
+        return df
+
+    def serves_filtered(self, query: str, grid: RegularTimeRange) -> bool:
+        """Whether ``run_query(..., grid, plan_memo=self)`` answers ``query``
+        with the anchor plan under a ``ts`` filter — the only case whose
+        execution also evaluates instants past ``grid``'s end."""
+        return len(grid) < len(self.grid) and not _reads_grid_end(parse_promql(query))
+
+
+def _reads_grid_end(node: Node) -> bool:
+    """Whether the plan depends on the grid's end beyond per-instant
+    evaluation: an ``@ end()`` anchor anywhere in the tree."""
+    if getattr(node, "at_s", None) == "end":
+        return True
+    if isinstance(node, FuncNode):
+        kids = node.args
+    elif isinstance(node, BinaryNode):
+        kids = (node.lhs, node.rhs)
+    elif isinstance(node, UnaryNode):
+        kids = (node.operand,)
+    elif isinstance(node, SubqueryNode):
+        kids = (node.expr,)
+    else:
+        kids = ()
+    return any(_reads_grid_end(k) for k in kids)
+
+
 def run_query(
     spark: SparkSession,
     collection: DataFrame,
@@ -1030,8 +1103,9 @@ def run_query(
     aligned: DataFrame | None = None,
     aligned_ext: DataFrame | None = None,
     aligned_ext_steps: int = 0,
-    aligned_provider: Callable[[], tuple[DataFrame, DataFrame | None, int]] | None = None,
+    aligned_provider: Callable[[], AlignedStore] | None = None,
     exact_agg: bool | str = False,
+    plan_memo: PlanMemo | None = None,
 ) -> DataFrame:
     """``run_query`` (src/query.rs:583-596): parse → interpret → resample.
 
@@ -1047,12 +1121,35 @@ def run_query(
     ``exact_agg``: order-insensitive accumulation for sum/avg
     aggregations — True = decimal (aggregate.exact_sum), "unit" = integer
     micro-units (aggregate.unit_sum; bit-stable across engines).
+    ``plan_memo``: plans compiled on an anchor grid ``grid`` is a prefix
+    of (see :class:`PlanMemo`); the query is compiled on the anchor, with
+    the memo's aligned store, once per memo. ``@ end()`` queries ignore
+    it and compile on ``grid`` with the arguments above.
     """
     ast = parse_promql(query)
+    if plan_memo is not None and not _reads_grid_end(ast):
+        return plan_memo.plan(
+            (query, exact_agg),
+            grid,
+            lambda: _compile(
+                ast,
+                _Ctx(
+                    spark, collection, plan_memo.grid,
+                    aligned_ext_steps=plan_memo.aligned[2],
+                    aligned_provider=lambda: plan_memo.aligned,
+                    exact_agg=exact_agg,
+                ),
+            ),
+        )
     ctx = _Ctx(
         spark, collection, grid, aligned, aligned_ext, aligned_ext_steps,
         aligned_provider, exact_agg=exact_agg,
     )
+    return _compile(ast, ctx)
+
+
+def _compile(ast: Node, ctx: _Ctx) -> DataFrame:
+    """The range query's result frame for ``ast`` on ``ctx.grid``."""
     result = _eval(ast, ctx, _Collection())
     result = _resampled(result, ctx)
     if isinstance(result, GridScalar):

@@ -19,12 +19,14 @@ and the heavy lifting happens on executors.
 from __future__ import annotations
 
 import json
+import logging
 import threading
 from collections import OrderedDict
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from prometheus_parquet_server_spark.operators.interpolate import resample_to_grid
 
@@ -43,6 +45,8 @@ from prometheus_parquet_server_spark.operators.select import (
     series_sets,
 )
 from prometheus_parquet_server_spark.plans.compiler import (
+    AlignedStore,
+    PlanMemo,
     run_instant_query,
     run_query,
 )
@@ -71,6 +75,35 @@ def prepare_collection_for_serving(
         conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
         conf.set("spark.sql.adaptive.enabled", "false")
     return collection.coalesce(partitions).cache()
+
+
+_log = logging.getLogger(__name__)
+
+
+class _BadRequest(ValueError):
+    """A request body that cannot be read (answered 400 ``bad_data``)."""
+
+
+class _AlignedEntry(PlanMemo):
+    """One cached aligned-store grid: the persisted frame, built on the grid
+    extended ``pad`` steps backwards, and, as a ``PlanMemo`` over its own
+    view, the plans compiled on the grid (at most ``plan_capacity``,
+    evicted LRU)."""
+
+    def __init__(
+        self, grid: RegularTimeRange, pad: int, frame: DataFrame, plan_capacity: int
+    ):
+        self.grid, self.pad, self.frame = grid, pad, frame
+        super().__init__(grid, self.view(grid), plan_capacity)
+
+    def view(self, grid: RegularTimeRange) -> AlignedStore:
+        """(exact, backward-extended | None, pad) frames for a prefix grid."""
+        ext = self.frame
+        if len(grid) < len(self.grid):
+            ext = ext.filter(F.col("ts") <= grid.instants()[-1])
+        if not self.pad:
+            return ext, None, 0
+        return ext.filter(F.col("ts") >= F.lit(float(grid.start))), ext, self.pad
 
 
 class MetricsHTTPServer:
@@ -102,18 +135,26 @@ class MetricsHTTPServer:
         # frames can be cached without invalidation concerns.
         self._response_cache: "OrderedDict[tuple, tuple[int, dict]]" = OrderedDict()
         self._response_cache_size = response_cache_size
-        self._aligned: "OrderedDict[tuple, tuple[RegularTimeRange, int, DataFrame]]" = (
-            OrderedDict()
-        )
+        self._aligned: "OrderedDict[tuple, _AlignedEntry]" = OrderedDict()
         self._aligned_grids = aligned_store_grids
         self._aligned_pad_steps = aligned_pad_steps
         self._lock = threading.Lock()
 
     # ---- serving caches ----------------------------------------------------
 
-    def _aligned_for(
-        self, grid: RegularTimeRange
-    ) -> tuple[DataFrame, DataFrame | None, int]:
+    def _entry_for(self, grid: RegularTimeRange) -> _AlignedEntry | None:
+        """The cached aligned entry ``grid`` is a prefix of (same start and
+        step, no later end; ``RegularTimeRange.is_prefix_of``), marked most
+        recently used, or None. Both the aligned frames and the plan memo
+        of a request come from this one lookup."""
+        with self._lock:
+            for key, entry in self._aligned.items():
+                if grid.is_prefix_of(entry.grid):
+                    self._aligned.move_to_end(key)
+                    return entry
+        return None
+
+    def _aligned_for(self, grid: RegularTimeRange) -> AlignedStore:
         """Per-grid aligned store: every series interpolated onto the grid
         ONCE, persisted; all instant selectors on that grid then skip the
         resample stage, and rate() lags over it (the dominant per-query
@@ -127,28 +168,22 @@ class MetricsHTTPServer:
         add/subtract exactly) — and the exact view is a ts ≥ start filter.
 
         A request whose grid is a PREFIX of a cached one (same start, same
-        step, shorter range) is served by a ts filter on the cached frame:
-        both grids enumerate ``start + n*inc`` with the identical floats,
-        so the subset is bit-exact. (General sliding reuse is deliberately
-        NOT attempted — ``start' + m*inc`` need not equal
+        step, shorter range; found by ``_entry_for``) is served by a ts
+        filter on the cached frame: both grids enumerate ``start + n*inc``
+        with the identical floats, so the subset is bit-exact. The entry
+        is also the ``PlanMemo`` of the plans each query text compiled to
+        on the entry's own grid, which ``handle_query_range`` passes to
+        ``run_query``; evicting the entry drops its plans together with
+        its persisted frame. (General sliding reuse is deliberately NOT
+        attempted — ``start' + m*inc`` need not equal
         ``start + (k+m)*inc`` in f64, and the engine's grid arithmetic is
         bit-for-bit reference parity.)"""
-        from pyspark.sql import functions as F
+        entry = self._entry_for(grid)
+        if entry is None:
+            entry = self._build_aligned(grid)
+        return entry.view(grid)
 
-        start_lit = F.lit(float(grid.start))
-        with self._lock:
-            for key, (agrid, pad, df) in self._aligned.items():
-                if (
-                    agrid.start == grid.start
-                    and agrid.increment == grid.increment
-                    and len(grid) <= len(agrid)
-                ):
-                    self._aligned.move_to_end(key)
-                    ext = df
-                    if len(grid) < len(agrid):
-                        ext = df.filter(F.col("ts") <= grid.instants()[-1])
-                    exact = ext.filter(F.col("ts") >= start_lit) if pad else ext
-                    return exact, (ext if pad else None), pad
+    def _build_aligned(self, grid: RegularTimeRange) -> _AlignedEntry:
         pad = self._aligned_pad_steps
         if not (
             float(grid.start).is_integer() and float(grid.increment).is_integer()
@@ -159,26 +194,26 @@ class MetricsHTTPServer:
             build_grid = RegularTimeRange(
                 grid.start - pad * grid.increment, grid.end, grid.increment
             )
-        ext = resample_to_grid(
+        frame = resample_to_grid(
             self.collection, build_grid.to_df(self.spark), grid=build_grid
         ).persist()
-        ext.count()  # materialize outside the request's critical path
+        frame.count()  # materialize outside the request's critical path
+        entry = _AlignedEntry(grid, pad, frame, self._response_cache_size)
         key = (grid.start, grid.end, grid.increment)
         with self._lock:
             if key in self._aligned:
                 # a concurrent request built the same grid while we were
                 # outside the lock — keep theirs, drop our duplicate (an
                 # overwrite would orphan a persisted frame)
-                ext.unpersist()
-                _g, pad, ext = self._aligned[key]
+                frame.unpersist()
+                entry = self._aligned[key]
                 self._aligned.move_to_end(key)
             else:
-                self._aligned[key] = (grid, pad, ext)
+                self._aligned[key] = entry
                 while len(self._aligned) > self._aligned_grids:
-                    _, (_g, _p, old) = self._aligned.popitem(last=False)
-                    old.unpersist()
-        exact = ext.filter(F.col("ts") >= start_lit) if pad else ext
-        return exact, (ext if pad else None), pad
+                    _, old = self._aligned.popitem(last=False)
+                    old.frame.unpersist()
+        return entry
 
     def _cached_response(self, key: tuple, compute) -> tuple[int, dict]:
         with self._lock:
@@ -221,12 +256,31 @@ class MetricsHTTPServer:
                     and float(grid.increment).is_integer()
                     else 0
                 )
-                df = run_query(
-                    self.spark, self.collection, query, grid,
-                    aligned_ext_steps=pad_hint,
-                    aligned_provider=lambda: self._aligned_for(grid),
-                )
-                return 200, matrix_result(df, time_offset=self.time_offset)
+                # a grid that is a prefix of a cached aligned entry reuses
+                # the plan its query compiled to on the entry's own grid
+                entry = self._entry_for(grid)
+
+                def plan(plan_memo: PlanMemo | None) -> DataFrame:
+                    return run_query(
+                        self.spark, self.collection, query, grid,
+                        aligned_ext_steps=pad_hint,
+                        aligned_provider=lambda: self._aligned_for(grid),
+                        plan_memo=plan_memo,
+                    )
+
+                df = plan(entry)
+                try:
+                    payload = matrix_result(df, time_offset=self.time_offset)
+                except Exception:
+                    if entry is None or not entry.serves_filtered(query, grid):
+                        raise
+                    # a memoized plan also evaluates the entry's instants
+                    # past this grid's end before its ts filter: an error
+                    # raised only there (a strict histogram_quantile bucket
+                    # check, a duplicate match group) must not fail this
+                    # grid, so it is compiled for this grid alone
+                    payload = matrix_result(plan(None), time_offset=self.time_offset)
+                return 200, payload
             except Exception as e:  # query errors → 400 (src/main.rs:386-393)
                 return 400, error_response(str(e))
 
@@ -384,21 +438,34 @@ class MetricsHTTPServer:
             def _params(self) -> dict[str, str]:
                 parsed = urlparse(self.path)
                 params = {k: v[0] for k, v in parse_qs(parsed.query).items()}
-                length = int(self.headers.get("Content-Length") or 0)
-                if length:
-                    body = self.rfile.read(length).decode()
-                    ctype = self.headers.get("Content-Type", "")
-                    if "json" in ctype:
+                try:
+                    length = int(self.headers.get("Content-Length") or 0)
+                    body = self.rfile.read(length).decode() if length else ""
+                    if body and "json" in self.headers.get("Content-Type", ""):
+                        fields = json.loads(body)
+                        if not isinstance(fields, dict):
+                            raise ValueError("a JSON body must be an object")
                         # numeric JSON values must not crash the str-typed
                         # parsers — coerce everything to str like form data
-                        params.update(
-                            {k: str(v) for k, v in json.loads(body).items()}
-                        )
-                    else:
+                        params.update({k: str(v) for k, v in fields.items()})
+                    elif body:
                         params.update({k: v[0] for k, v in parse_qs(body).items()})
+                except ValueError as e:  # JSON, UTF-8 and length errors
+                    raise _BadRequest(f"bad request body: {e}") from None
                 return params
 
             def _route(self) -> None:
+                # the one top-level guard: every request gets an answer in
+                # the API's error shape, never a dropped connection
+                try:
+                    self._dispatch()
+                except _BadRequest as e:
+                    self._send(400, error_response(str(e), "bad_data"))
+                except Exception as e:
+                    _log.exception("internal error serving %s", self.path)
+                    self._send(500, error_response(f"internal error: {e}", "internal"))
+
+            def _dispatch(self) -> None:
                 path = urlparse(self.path).path
                 if path == "/":
                     self._send(*outer.handle_root())

@@ -2,7 +2,13 @@
 """Serving-latency benchmark: sequential /api/v1/query_range handler calls
 over a cached sf0.01 store on the BASELINE.md grid (7000 s range, 15 s step,
 467 points). Reports cold p50/p95 (first evaluation per query, aligned store
-pre-built), warm p50 (response-cache hits), and the aligned-store build cost.
+pre-built), prefix p50/p95 (first evaluation on grids 1, 5 and 20 steps
+shorter: aligned store and compiled plans reused), warm p50 (response-cache
+hits), the aligned-store build cost, and two kinds of grid that are no
+prefix of a cached one: slide (start and end 1, 5 and 20 steps later, a
+relative range refreshed) and grow (same start, end 1, 5 and 20 steps later,
+a "so far" view). Each slide or grow grid is new, so its first panel pays
+an aligned-store build.
 
 Usage: python scripts/bench_serving.py [sf_dir]
 """
@@ -34,6 +40,8 @@ PANEL_QUERIES = [
 ]
 
 START, END, STEP = 1704067200.0, 1704074200.0, 15.0  # 467 points
+PREFIX_TRIMS = (1, 5, 20)  # steps a prefix grid ends before END
+SHIFTS = (1, 5, 20)  # steps a slide or grow grid ends after END
 
 
 def main() -> None:
@@ -49,10 +57,10 @@ def main() -> None:
     srv._aligned_for(RegularTimeRange(START, END, STEP))
     align_s = time.time() - t0
 
-    def run_at(q: str, end: float) -> float:
+    def run_at(q: str, end: float, start: float = START) -> float:
         params = {
             "query": q,
-            "start": str(START),
+            "start": str(start),
             "end": str(end),
             "step": f"{int(STEP)}s",
         }
@@ -63,17 +71,33 @@ def main() -> None:
         return dt
 
     cold = [run_at(q, END) for q in PANEL_QUERIES]
-    # steady state: a NEW grid (zoomed end) → response cache misses, plans
-    # rebuilt, but JVM codegen is warm and the aligned store prefix-reuses
-    steady = [run_at(q, END - STEP) for q in PANEL_QUERIES]
-    steady2 = [run_at(q, END - 2 * STEP) for q in PANEL_QUERIES]
-    steady = [min(a, b) for a, b in zip(steady, steady2)]
+    # prefix grids (same start and step, earlier end): first evaluations,
+    # served from the aligned store and from the plans compiled in the cold
+    # pass; one list per trim, in PANEL_QUERIES order
+    prefix = {
+        trim: [run_at(q, END - trim * STEP) for q in PANEL_QUERIES]
+        for trim in PREFIX_TRIMS
+    }
     warm = [run_at(q, END) for q in PANEL_QUERIES]
+    # grids that are no prefix of a cached one: each builds its own aligned
+    # store (evicting older ones) and compiles every panel
+    slide = [
+        run_at(q, END + k * STEP, START + k * STEP)
+        for k in SHIFTS
+        for q in PANEL_QUERIES
+    ]
+    grow = [run_at(q, END + k * STEP) for k in SHIFTS for q in PANEL_QUERIES]
 
     print(f"aligned-store build: {align_s:.2f}s (once per grid anchor)")
-    for q, dt, dt2 in zip(PANEL_QUERIES, cold, steady):
-        print(f"  cold {dt * 1000:7.1f} ms   steady {dt2 * 1000:7.1f} ms  {q}")
-    for label, xs in (("cold", cold), ("steady", steady)):
+    for i, q in enumerate(PANEL_QUERIES):
+        per_trim = "  ".join(
+            f"-{trim:<2d} {prefix[trim][i] * 1000:6.1f}" for trim in PREFIX_TRIMS
+        )
+        print(f"  cold {cold[i] * 1000:7.1f} ms   prefix {per_trim} ms  {q}")
+    all_prefix = [dt for xs in prefix.values() for dt in xs]
+    for label, xs in (
+        ("cold", cold), ("prefix", all_prefix), ("slide", slide), ("grow", grow)
+    ):
         xs_sorted = sorted(xs)
         print(
             f"{label} p50 = {statistics.median(xs) * 1000:.0f} ms, "

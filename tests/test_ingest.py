@@ -283,6 +283,30 @@ def test_store_manifest_detects_tampering(spark, tmp_path):
     assert diff2 == {"a": "changed", "b": "changed"}
 
 
+def test_store_manifest_null_labels_digest(spark, tmp_path):
+    """A NULL label map keys as the empty set, so a NULL-labels row hashes
+    like the same row with ``{}`` labels (earlier versions keyed it NULL, so
+    their manifests of such stores now verify as ``changed``)."""
+    from prometheus_parquet_server_spark.sources.store import store_manifest
+
+    digests = []
+    for labels in (None, {}):
+        store = str(tmp_path / f"store{len(digests)}")
+        write_store(
+            spark.createDataFrame(
+                [("a", labels, 1.0, 2.0)],
+                "name string, labels map<string,string>, ts double, value double",
+            ),
+            store,
+        )
+        (row,) = store_manifest(spark, store).collect()
+        digests.append((row["n_rows"], int(row["content_hash"])))
+    assert digests == [(1, NULL_LABELS_DIGEST)] * 2
+
+
+NULL_LABELS_DIGEST = 16581603958427627685
+
+
 def test_metric_type_map_serving_types(spark):
     """ingest.metric_type_map: the histogram family reports "histogram"
     for every derived name; scalar tables report "unknown" (the Le-regex

@@ -269,7 +269,14 @@ def test_server_series_endpoint(server):
     assert st == 400
 
 
-def test_server_errors(server):
+def _post_json(url, body: bytes):
+    req = urllib.request.Request(
+        url, data=body, headers={"Content-Type": "application/json"}
+    )
+    return _get(req)
+
+
+def test_server_errors(server, monkeypatch):
     q = urllib.parse.quote("no_such_function(click{})")
     st, body = _get(f"{server}/api/v1/query_range?query={q}&start=0&end=10&step=1")
     assert st == 400 and "Unknown function" in body["error"]
@@ -279,6 +286,24 @@ def test_server_errors(server):
 
     st, _ = _get(f"{server}/nope")
     assert st == 404
+
+    # unreadable bodies: malformed JSON, and JSON that is not an object
+    for raw in (b"{bad", b"[1]", b'"x"', b"\xff"):
+        for path in ("/api/v1/query_range", "/api/v1/query"):
+            st, body = _post_json(f"{server}{path}", raw)
+            assert st == 400, (path, raw, body)
+            assert body["status"] == "error" and body["errorType"] == "bad_data"
+
+    # any other uncaught error answers 500 instead of dropping the connection
+    from prometheus_parquet_server_spark.server import app
+
+    def boom(_df):
+        raise RuntimeError("store unavailable")
+
+    monkeypatch.setattr(app, "series_count", boom)
+    st, body = _get(f"{server}/")
+    assert st == 500 and body["errorType"] == "internal"
+    assert "store unavailable" in body["error"]
 
 
 def test_streaming_near_dedup(spark, tmp_path):
