@@ -28,14 +28,18 @@ usually touches one file per commit). The recorded schema makes a
 legitimately EMPTY snapshot (everything expired / empty overwrite)
 readable as an empty frame instead of an error.
 
-Concurrency: a manifest is staged as a dot-prefixed temp file (complete
-bytes, invisible to version listing) and published with exclusive-create
-semantics; two writers racing to version N+1 see exactly one winner.
-Appends retry against the new tip (their file list is valid under any
-parent); conflicting upserts/overwrites raise :class:`ConcurrentWriteError`
-for the caller to retry at the merge level (serializable semantics, no
-lost updates). Readers skip any unreadable version file (legacy torn
-writes) rather than wedging, and writers number PAST such junk.
+Concurrency: every read and write of ``_snapshots/`` goes through the
+Spark-free manifest protocol (:mod:`.manifest`), which the Python data
+source's writers (:mod:`.pyds`) share. A commit prepared against a parent
+claims the smallest free slot above it with an exclusive create (a hard
+link of a complete temp file locally, a conditional put on an object
+store with a registered backend), so two writers racing to version N+1
+see exactly one winner and a slot is either absent or complete. Appends
+retry against the new tip (their file list is valid under any parent);
+conflicting upserts/overwrites raise :class:`ConcurrentWriteError` for
+the caller to retry at the merge level (serializable semantics, no lost
+updates). Readers skip any unreadable version file (legacy torn writes)
+rather than wedging, and writers number PAST such junk.
 
 Reference parity: same canonical long model as the plain sink
 (``TimeSeriesCollection``, src/timeseries.rs:396-445); this is the sink
@@ -45,38 +49,37 @@ side scaled past the reference's single-node filesystem assumptions.
 from __future__ import annotations
 
 import json
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from prometheus_parquet_server_spark.model import series_key_str
+from prometheus_parquet_server_spark.sources.manifest import (
+    ConcurrentWriteError,  # re-exported: callers import it from here
+    append,
+    commit,
+    history,
+    list_versions,
+    manifest_path,
+    name_overlaps,
+    prune,
+    read_manifest,
+    resolve,
+    resolve_tip,
+    stale_temps,
+    validated_append_schema,
+    version_as_of,
+)
 from prometheus_parquet_server_spark.sources.store import read_store
 
-_SNAP_DIR = "_snapshots"
-_MAX_COMMIT_RETRIES = 10
-
-# Serializes the exists→rename→verify critical section for writers in THIS
-# process: on a replace-semantics filesystem (POSIX rename) two in-process
-# threads could otherwise both slip through the exists check. Cross-process
-# local-FS writers keep the (microsecond) documented caveat; HDFS
-# (rename-refuses-existing) and conditional-PUT object stores are safe
-# without it.
-import threading as _threading
-
-_COMMIT_LOCK = _threading.Lock()
-
-
 class _StoreFS:
-    """All store I/O of this module — manifest listing and reads, the
-    manifest publish, the data-file census, vacuum deletes — routed
-    through the Hadoop ``FileSystem`` API of the session JVM
-    (``Path.getFileSystem``) instead of driver-local ``pathlib``/
-    ``shutil``, so the same code runs against any Hadoop-supported scheme
-    (``file:``, ``hdfs:``, ``s3a:``, ``abfs:``, ``gs:``), which is what the
-    100 TB deployment actually stores data on. Data files are never
-    renamed; the only rename is a manifest's publish (see
-    :func:`_try_commit`)."""
+    """Data-file I/O of this module — the census of a tx dir, vacuum's
+    deletes — routed through the Hadoop ``FileSystem`` API of the session
+    JVM (``Path.getFileSystem``), so the same code runs against any
+    Hadoop-supported scheme. Manifests are read and published by
+    :mod:`.manifest`, never through the JVM."""
 
     def __init__(self, spark: SparkSession, path: str):
         self._jvm = spark._jvm
@@ -125,290 +128,29 @@ def _basename(path_str: str) -> str:
     return path_str.rstrip("/").rsplit("/", 1)[-1]
 
 
-class ConcurrentWriteError(RuntimeError):
-    """Another writer committed between this transaction's read and its
-    commit attempt, and the operation cannot be blindly rebased
-    (overwrite/upsert). Re-run the operation against the new tip."""
-
-
-def _manifest_path(root: str, version: int) -> str:
-    return f"{root}/{_SNAP_DIR}/v{version:010d}.json"
-
-
-def _list_versions(fs: _StoreFS, root: str) -> list[int]:
-    """Every version number with a PUBLISHED manifest file — readable or
-    not. Writers number past the max; readers resolve via
-    :func:`_resolve_tip`, which skips unreadable entries."""
-    snap = f"{root}/{_SNAP_DIR}"
-    if not fs.exists(snap):
-        return []
-    out = []
-    for st in fs.fs.listStatus(fs.jpath(snap)):
-        base = str(st.getPath()).rsplit("/", 1)[-1]
-        if base.startswith("v") and base.endswith(".json"):
-            try:
-                out.append(int(base[1:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
-def _read_manifest(fs: _StoreFS, root: str, version: int) -> dict:
-    stream = fs.fs.open(fs.jpath(_manifest_path(root, version)))
-    try:
-        # commons-io is on Spark's classpath; a py4j byte[] comes back as
-        # Python bytes. (Reading into a Python bytearray would NOT work:
-        # py4j passes a copy to Java, so read(buf) can't fill it.)
-        data = bytes(fs._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-        return json.loads(data.decode("utf-8"))
-    finally:
-        stream.close()
-
-
-_TIP_HINT = ".tip_hint"  # dot-prefixed: invisible to version listing
-
-
-def _write_tip_hint(fs: _StoreFS, root: str, version: int) -> None:
-    """Best-effort advisory tip pointer (the Delta `_last_checkpoint`
-    idea): written AFTER a successful commit, read by :func:`_resolve_tip`
-    to start probing at the hinted version instead of listing the whole
-    manifest directory. Purely an optimization — a missing, stale, or
-    corrupt hint falls back to the listing path, and a hint is only ever
-    written for a version whose manifest has already published, so
-    probing forward from it cannot skip the true tip (commit numbering is
-    contiguous above any published version). Failures are swallowed: the
-    hint must never fail a commit that already succeeded."""
-    try:
-        stream = fs.fs.create(fs.jpath(f"{root}/{_SNAP_DIR}/{_TIP_HINT}"), True)
-        try:
-            stream.write(bytearray(str(version).encode("ascii")))
-        finally:
-            stream.close()
-    except Exception:
-        pass
-
-
-def _read_tip_hint(fs: _StoreFS, root: str) -> int | None:
-    try:
-        stream = fs.fs.open(fs.jpath(f"{root}/{_SNAP_DIR}/{_TIP_HINT}"))
-        try:
-            data = bytes(
-                fs._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            )
-        finally:
-            stream.close()
-        v = int(data.decode("ascii").strip())
-        return v if v >= 1 else None
-    except Exception:
-        return None
-
-
-def _resolve_tip(fs: _StoreFS, root: str) -> tuple[int | None, dict | None]:
-    """(version, manifest) of the highest READABLE snapshot — a torn or
-    corrupt version file (possible only from pre-temp+rename writers or
-    external tampering) is skipped, not fatal, so one bad file can never
-    wedge every read and write of the store.
-
-    Fast path: the advisory :data:`_TIP_HINT` gives a published version to
-    probe FORWARD from (O(1 + commits-since-hint) exists-checks instead of
-    listing a manifest directory that can hold deep retained history).
-    Probing is sound because version numbers are contiguous above any
-    published manifest (_target_version takes the smallest free slot).
-    The walk back down from the probe top skips unreadable junk; if it
-    reaches below the hinted floor — or the hint is missing / stale /
-    corrupt / pointing at a vacuumed manifest — resolution falls back to
-    the exhaustive listing, so the hint can never change WHAT resolves,
-    only how fast."""
-    hint = _read_tip_hint(fs, root)
-    if hint is not None and fs.exists(_manifest_path(root, hint)):
-        top = hint
-        while fs.exists(_manifest_path(root, top + 1)):
-            top += 1
-        for v in range(top, hint - 1, -1):
-            try:
-                return v, _read_manifest(fs, root, v)
-            except Exception:
-                continue
-        # every manifest from top down to the hinted floor is unreadable —
-        # resolve exhaustively below it
-    for v in reversed(_list_versions(fs, root)):
-        try:
-            return v, _read_manifest(fs, root, v)
-        except Exception:
-            continue
-    return None, None
-
-
-def _target_version(fs: _StoreFS, root: str, parent: int | None) -> int | None:
-    """The version this commit must land at, as a CAS against ``parent``:
-    the smallest free number above the parent, skipping only UNREADABLE
-    junk slots (legacy torn writes). Returns None when a READABLE manifest
-    already occupies a slot above the parent — the tip moved, the caller
-    must re-resolve and rebuild its file list on the new tip. This
-    determinism is what makes the commit a compare-and-swap: two racers
-    that merged from the same parent compute the SAME target, so the
-    exclusive publish lets exactly one through, and the loser can never
-    'number past' the winner and silently drop its files."""
-    t = (parent or 0) + 1
-    while fs.exists(_manifest_path(root, t)):
-        if _readable(fs, root, t):
-            return None  # tip moved under us
-        t += 1  # junk slot — skip deterministically
-    return t
-
-
-def _try_commit(fs: _StoreFS, root: str, manifest: dict) -> bool:
-    """Publish a manifest; returns False if the version was lost to a
-    racing writer. Two layers:
-
-    - the COMPLETE bytes are first written to a dot-prefixed temp file
-      (invisible to version listing), then renamed to the final name — a
-      crash can no longer leave a torn ``vNNN.json``, only ignorable
-      temp junk;
-    - a writer nonce is verified by reading the final file back. On HDFS
-      (rename fails onto an existing destination) and conditional-PUT
-      object stores the rename alone decides the winner; on the LOCAL
-      filesystem POSIX rename silently REPLACES, so same-version racers
-      are instead decided by the read-back — the clobbered writer sees a
-      foreign nonce, returns False, and retries at the next version.
-      Residual local-FS caveat: a loser's rename landing between the
-      winner's rename and verify makes the LOSER the survivor — still
-      exactly one winner per version, no torn bytes, no lost append
-      (the displaced writer fails its verify and retries).
-    """
-    import time as _time
-
-    manifest = dict(
-        manifest, _writer=uuid.uuid4().hex, committed_at=_time.time()
-    )
-    final = fs.jpath(_manifest_path(root, manifest["version"]))
-    tmp = fs.jpath(
-        f"{root}/{_SNAP_DIR}/.tmp_v{manifest['version']:010d}_{manifest['_writer'][:8]}.json"
-    )
-    fs.fs.mkdirs(fs.jpath(f"{root}/{_SNAP_DIR}"))
-    stream = fs.fs.create(tmp, True)
-    try:
-        stream.write(bytearray(json.dumps(manifest).encode("utf-8")))
-    finally:
-        stream.close()
-    with _COMMIT_LOCK:
-        try:
-            if fs.fs.exists(final) or not fs.fs.rename(tmp, final):
-                fs.delete(tmp)
-                return False
-        except Exception:
-            fs.delete(tmp)
-            return False
-        try:
-            back = _read_manifest(fs, root, manifest["version"])
-        except Exception as e:
-            # the rename SUCCEEDED but the verify read failed: the commit
-            # may well be live. Returning False here would make an append
-            # retry and double-apply its own files on top of its own
-            # commit — an ambiguous commit must fail loudly instead.
-            raise IOError(
-                f"commit v{manifest['version']} published but unverifiable "
-                f"({e}) — inspect the store before retrying"
-            ) from e
-        won = back.get("_writer") == manifest["_writer"]
-        if won:
-            _write_tip_hint(fs, root, manifest["version"])
-        return won
-
-
 def _schema_json(df: DataFrame) -> dict:
     return json.loads(df.schema.json())
-
-
-def _validated_append_schema(
-    recorded: dict | None,
-    df: DataFrame,
-    merge_schema: bool,
-) -> dict:
-    """The manifest schema an APPEND must record, after validating the
-    incoming frame against the store's recorded schema. Without this
-    gate a type-conflicting append COMMITS and then every read of the
-    store fails on the parquet type mismatch — one dirty batch wedges
-    the table permanently (the schema sibling of the NULL-key write
-    rejection).
-
-    - a column present on both sides must have the SAME type (nullability
-      and metadata are not load-bearing and are ignored);
-    - strict mode (default) additionally requires the same column SET —
-      no new, no missing;
-    - ``merge_schema`` (the public Delta mergeSchema pattern) allows NEW
-      columns (recorded schema becomes the union; old files null-fill at
-      read) and MISSING ones (the new files null-fill instead), but a
-      type conflict stays fatal in both modes."""
-    from pyspark.sql import types as T
-
-    if recorded is None:
-        return _schema_json(df)  # pre-schema store: adopt the frame's
-    rec = T.StructType.fromJson(recorded)
-    # simpleString compares the TYPE SHAPE and drops nullability at every
-    # nesting level (StructField.nullable, array containsNull, map
-    # valueContainsNull) — a map<string,string> built from non-null
-    # literals must not conflict with the same map read back from
-    # parquet, where the value side is nullable
-    rec_types = {f.name: f.dataType.simpleString() for f in rec.fields}
-    new_types = {
-        f.name: f.dataType.simpleString() for f in df.schema.fields
-    }
-    conflicts = {
-        n: (rec_types[n], t)
-        for n, t in new_types.items()
-        if n in rec_types and rec_types[n] != t
-    }
-    if conflicts:
-        raise ValueError(
-            f"snapshot append rejected: column type conflict with the "
-            f"store's recorded schema (recorded, batch): {conflicts} — a "
-            f"committed conflict would fail every later read"
-        )
-    added = [n for n in new_types if n not in rec_types]
-    missing = [n for n in rec_types if n not in new_types]
-    if not merge_schema and (added or missing):
-        raise ValueError(
-            f"snapshot append rejected: column set differs from the "
-            f"store's recorded schema (added={added}, missing={missing}); "
-            "pass merge_schema=True to evolve the schema additively"
-        )
-    if added:
-        merged = T.StructType(
-            list(rec.fields)
-            + [f for f in df.schema.fields if f.name in set(added)]
-        )
-        return json.loads(merged.json())
-    return recorded  # the store's field order stays canonical
 
 
 def snapshot_version(spark: SparkSession, path: str) -> int | None:
     """Highest readable committed version, or None for an uninitialized
     store."""
-    fs = _StoreFS(spark, path)
-    v, _ = _resolve_tip(fs, path)
-    return v
+    return resolve_tip(path)[0]
 
 
 def snapshot_history(spark: SparkSession, path: str) -> DataFrame:
     """(version, parent, operation, n_files, n_rows) per readable
     committed snapshot — the audit trail time travel reads."""
-    fs = _StoreFS(spark, path)
-    rows = []
-    for v in _list_versions(fs, path):
-        try:
-            m = _read_manifest(fs, path, v)
-        except Exception:
-            continue  # legacy torn write — ignorable junk
-        rows.append(
-            (
-                v,
-                m.get("parent"),
-                m.get("operation", "?"),
-                len(m["files"]),
-                sum(f["n_rows"] for f in m["files"]),
-            )
+    rows = [
+        (
+            v,
+            m.get("parent"),
+            m.get("operation", "?"),
+            len(m["files"]),
+            sum(f["n_rows"] for f in m["files"]),
         )
+        for v, m in reversed(list(history(path)))
+    ]
     return spark.createDataFrame(
         rows, "version long, parent long, operation string, n_files long, n_rows long"
     )
@@ -559,27 +301,6 @@ def _tx_manifest_entries(spark: SparkSession, path: str, tx: str) -> list[dict]:
     ]
 
 
-def _name_overlaps(f: dict, names) -> bool:
-    """Does a manifest file entry's name range intersect ``names``?
-    Null stats (a pre-guard manifest written before the NULL/NaN write
-    rejection, or external tooling) are treated as ALWAYS intersecting —
-    the file is read and row-filtered instead of wedging the plan with a
-    None comparison; correctness never depends on pruning."""
-    if f.get("min_name") is None or f.get("max_name") is None:
-        return True
-    return any(f["min_name"] <= n <= f["max_name"] for n in names)
-
-
-def _ts_overlaps(f: dict, lo: float, hi: float) -> bool:
-    """Ts-range analogue of :func:`_name_overlaps` (null-stat entries
-    always intersect; NaN stats fail both comparisons and also land on
-    the safe read-it side via the ``not``)."""
-    mn, mx = f.get("min_ts"), f.get("max_ts")
-    if mn is None or mx is None:
-        return True
-    return not (mx < lo or mn > hi)
-
-
 def _pinned_reader(spark: SparkSession, parent_m: dict | None):
     """A reader pinned to the manifest-recorded schema when one exists —
     every maintenance rewrite (upsert, merge, compact, expire) must read
@@ -621,8 +342,8 @@ def snapshot_write(
 
     Appends are schema-validated against the store's recorded schema
     BEFORE any data file is written (see
-    :func:`_validated_append_schema`): same-name columns must type-match
-    in every mode; the column set must match exactly unless
+    :func:`.manifest.validated_append_schema`): same-name columns must
+    type-match in every mode; the column set must match exactly unless
     ``merge_schema=True``, which admits additive evolution (new columns
     join the recorded schema, old files null-fill; missing columns
     null-fill the new files) — type conflicts stay fatal because a
@@ -672,97 +393,44 @@ def snapshot_write(
         if not app_id or "\n" in str(app_id):
             raise ValueError(f"txn app_id must be a non-empty line, got {app_id!r}")
         txn_key = f"txn_{app_id}"
-    fs = _StoreFS(spark, path)
     # one tip resolve serves both layout inheritance and the commit's
     # expected-parent check — appends run per streaming micro-batch, so
     # a second directory listing + manifest read per call is real driver
     # I/O, not noise
-    expected, expected_m = _resolve_tip(fs, path)
+    expected, expected_m = resolve_tip(path)
     if txn_key is not None and expected_m is not None:
         recorded = ((expected_m.get("properties") or {})).get(txn_key)
         if recorded is not None and int(txn[1]) <= int(recorded):
             return expected  # already committed — redelivery no-op, no write
-    if time_chunk_s is None and mode == "append":
-        time_chunk_s = _inherited_chunk(expected_m)
     if mode == "append":
+        if time_chunk_s is None:
+            time_chunk_s = _inherited_chunk(expected_m)
         # validate BEFORE writing data files — a rejected batch must not
         # leave a tx dir for vacuum to sweep
-        schema = _validated_append_schema(
-            (expected_m or {}).get("schema"), df, merge_schema
+        validated_append_schema(
+            (expected_m or {}).get("schema"), df.schema, merge_schema
         )
-    else:
-        schema = _schema_json(df)
     new_files = _write_data_files(spark, path, df, time_chunk_s=time_chunk_s)
-    for attempt in range(_MAX_COMMIT_RETRIES):
-        parent, parent_m = (
-            (expected, expected_m) if attempt == 0 else _resolve_tip(fs, path)
+    if mode == "append":
+        # a rebase lands on a DIFFERENT parent: manifest.append re-gates
+        # the schema and re-checks properties and the txn marker there
+        return append(
+            path, new_files, df.schema, merge_schema,
+            tip=(expected, expected_m), properties=properties, txn=txn,
+            require_parent=require_parent, time_chunk_s=time_chunk_s,
         )
-        if mode == "overwrite" and parent != expected:
-            raise ConcurrentWriteError(
-                f"overwrite prepared against v{expected} but tip moved to v{parent}"
-            )
-        if require_parent is not None and parent != require_parent:
-            raise ConcurrentWriteError(
-                f"append required parent v{require_parent} but tip is v{parent}"
-            )
-        base: list[dict] = []
-        if mode == "append" and parent is not None:
-            if parent_m is None:
-                parent_m = _read_manifest(fs, path, parent)
-            base = parent_m["files"]
-            if attempt > 0:
-                # a rebase lands on a DIFFERENT parent — its schema may
-                # have evolved since the pre-write validation
-                schema = _validated_append_schema(
-                    parent_m.get("schema"), df, merge_schema
-                )
-        target = _target_version(fs, path, parent)
-        if target is None:
-            continue  # tip moved between resolve and target — rebase
-        manifest = {
-            "version": target,
-            "parent": parent,
-            "operation": mode,
-            "schema": schema,
-            "files": base + new_files,
-        }
-        # properties travel with the store: appends inherit the parent's
-        # (an overwrite is a fresh start and drops them)
-        if mode == "append" and parent is not None:
-            _props = (parent_m or _read_manifest(fs, path, parent)).get("properties")
-            if _props:
-                manifest["properties"] = dict(_props)
-        if properties:
-            inherited = manifest.get("properties") or {}
-            conflicts = {
-                k: (inherited[k], v)
-                for k, v in properties.items()
-                if k in inherited and inherited[k] != v
-            }
-            if mode == "append" and conflicts:
-                raise ValueError(
-                    f"snapshot_write: properties conflict with the store's "
-                    f"recorded values (recorded, supplied): {conflicts}"
-                )
-            manifest["properties"] = {**inherited, **properties}
-        if time_chunk_s is not None:
-            manifest.setdefault("properties", {})["time_chunk_s"] = float(
-                time_chunk_s
-            )
-        if txn_key is not None:
-            # re-check against THIS parent: a rebase may have landed a newer
-            # marker (same-writer redelivery racing itself); ≤ means the
-            # batch already committed and the prepared files are orphans
-            # the next vacuum sweeps
-            recorded = (manifest.get("properties") or {}).get(txn_key)
-            if recorded is not None and int(txn[1]) <= int(recorded):
-                return parent
-            manifest.setdefault("properties", {})[txn_key] = int(txn[1])
-        if _try_commit(fs, path, manifest):
-            return manifest["version"]
-    raise ConcurrentWriteError(
-        f"lost {_MAX_COMMIT_RETRIES} straight commit races on {path}"
-    )
+    # an overwrite is a fresh start: no inherited properties
+    props = dict(properties or {})
+    if time_chunk_s is not None:
+        props["time_chunk_s"] = float(time_chunk_s)
+    manifest = {
+        "operation": "overwrite",
+        "schema": _schema_json(df),
+        "files": new_files,
+    }
+    if props:
+        manifest["properties"] = props
+    return commit(path, expected, manifest)
 
 
 def snapshot_read(
@@ -779,19 +447,9 @@ def snapshot_read(
     The residual row-level filter is applied too, so the result is exact.
     An empty snapshot (everything expired, empty overwrite) returns an
     empty frame with the manifest-recorded schema."""
-    fs = _StoreFS(spark, path)
-    if version is None:
-        version, m = _resolve_tip(fs, path)
-        if version is None:
-            raise FileNotFoundError(f"no committed snapshot under {path}")
-    else:
-        m = _read_manifest(fs, path, version)
-    files = m["files"]
-    if names is not None:
-        files = [f for f in files if _name_overlaps(f, names)]
-    if ts_range is not None:
-        lo, hi = ts_range
-        files = [f for f in files if _ts_overlaps(f, lo, hi)]
+    version, m = resolve(path, version)
+    lo, hi = ts_range if ts_range is not None else (float("-inf"), float("inf"))
+    files = prune(m["files"], names, lo, hi)
     if not files:
         from pyspark.sql import types as T
 
@@ -828,7 +486,6 @@ def snapshot_upsert(spark: SparkSession, path: str, updates: DataFrame) -> int:
     cost is proportional to the touched data, not the store. A commit race
     raises :class:`ConcurrentWriteError` (the merge read a tip that moved;
     blind rebase could lose the racer's rows)."""
-    fs = _StoreFS(spark, path)
     updates = updates.cache()
     try:
         distinct_names = [
@@ -845,9 +502,9 @@ def snapshot_upsert(spark: SparkSession, path: str, updates: DataFrame) -> int:
         names = sorted(distinct_names)
         if not names:
             return snapshot_version(spark, path) or 0
-        parent, parent_m = _resolve_tip(fs, path)
+        parent, parent_m = resolve_tip(path)
         base_files: list[dict] = parent_m["files"] if parent_m else []
-        touched = [f for f in base_files if _name_overlaps(f, names)]
+        touched = [f for f in base_files if name_overlaps(f, names)]
         # set-of-paths membership: list `in` is O(files x touched) full-dict
         # comparisons on the driver — quadratic at the ~1e5-file stores the
         # manifest design targets
@@ -856,8 +513,8 @@ def snapshot_upsert(spark: SparkSession, path: str, updates: DataFrame) -> int:
         # strict schema check (the append gate's upsert twin): updates
         # that dropped a store column would silently erase it from every
         # rewritten row of the touched files
-        _validated_append_schema(
-            (parent_m or {}).get("schema"), updates, merge_schema=False
+        validated_append_schema(
+            (parent_m or {}).get("schema"), updates.schema, merge_schema=False
         )
         merged = updates.withColumn("_prio", F.lit(0))
         if touched:
@@ -875,16 +532,8 @@ def snapshot_upsert(spark: SparkSession, path: str, updates: DataFrame) -> int:
         new_files = _write_data_files(
             spark, path, out, time_chunk_s=_inherited_chunk(parent_m)
         )
-        target = _target_version(fs, path, parent)
-        if target is None:
-            raise ConcurrentWriteError(
-                f"upsert prepared against v{parent} but the tip moved — "
-                f"re-run against the new tip"
-            )
         _props = (parent_m or {}).get("properties")
         manifest = {
-            "version": target,
-            "parent": parent,
             "operation": "upsert",
             # most files carry over from the base, so the PARENT's schema
             # is the store's schema; recording the updates' schema would
@@ -896,12 +545,7 @@ def snapshot_upsert(spark: SparkSession, path: str, updates: DataFrame) -> int:
         }
         if _props:
             manifest["properties"] = _props
-        if not _try_commit(fs, path, manifest):
-            raise ConcurrentWriteError(
-                f"upsert prepared against v{parent} but v{manifest['version']} "
-                f"already exists — re-run against the new tip"
-            )
-        return manifest["version"]
+        return commit(path, parent, manifest)
     finally:
         updates.unpersist()
 
@@ -965,7 +609,6 @@ def snapshot_merge(
     overhead per commit and multiplies the files every later read-back
     opens. None keeps the adaptive default (unbounded stores).
     """
-    fs = _StoreFS(spark, path)
     updates = updates.cache()
     try:
         distinct_names = [
@@ -985,7 +628,7 @@ def snapshot_merge(
                     f"{path} — nothing to commit and no version to return"
                 )
             return v
-        parent, parent_m = _resolve_tip(fs, path)
+        parent, parent_m = resolve_tip(path)
         parent_props = (parent_m or {}).get("properties") or {}
         txn_key = None
         if txn is not None:
@@ -1013,7 +656,7 @@ def snapshot_merge(
         if txn_key is not None:
             merged_props[txn_key] = int(txn[1])
         base_files: list[dict] = parent_m["files"] if parent_m else []
-        touched = [f for f in base_files if _name_overlaps(f, names)]
+        touched = [f for f in base_files if name_overlaps(f, names)]
         # set-of-paths membership: list `in` is O(files x touched) full-dict
         # comparisons on the driver — quadratic at the ~1e5-file stores the
         # manifest design targets
@@ -1028,22 +671,14 @@ def snapshot_merge(
         # the combined frame replaces the touched files — a schema drift
         # here (combine dropped or retyped a column) is the same
         # wedge/erasure hazard the append gate closes
-        _validated_append_schema(
-            (parent_m or {}).get("schema"), out, merge_schema=False
+        validated_append_schema(
+            (parent_m or {}).get("schema"), out.schema, merge_schema=False
         )
         new_files = _write_data_files(
             spark, path, out, time_chunk_s=_inherited_chunk(parent_m),
             num_partitions=num_partitions,
         )
-        target = _target_version(fs, path, parent)
-        if target is None:
-            raise ConcurrentWriteError(
-                f"merge prepared against v{parent} but the tip moved — "
-                f"re-run against the new tip"
-            )
         manifest = {
-            "version": target,
-            "parent": parent,
             "operation": "merge",
             "schema": (parent_m.get("schema") if parent_m else None)
             or _schema_json(out),
@@ -1051,12 +686,7 @@ def snapshot_merge(
         }
         if merged_props:
             manifest["properties"] = merged_props
-        if not _try_commit(fs, path, manifest):
-            raise ConcurrentWriteError(
-                f"merge prepared against v{parent} but v{manifest['version']} "
-                f"already exists — re-run against the new tip"
-            )
-        return manifest["version"]
+        return commit(path, parent, manifest)
     finally:
         updates.unpersist()
 
@@ -1089,19 +719,9 @@ def snapshot_stats(
 
     ``n_bytes``/``n_files`` count every predicate-INTERSECTING file (the
     I/O a real scan would plan), not just contained ones."""
-    fs = _StoreFS(spark, path)
-    if version is None:
-        version, m = _resolve_tip(fs, path)
-        if version is None:
-            raise FileNotFoundError(f"no committed snapshot under {path}")
-    else:
-        m = _read_manifest(fs, path, version)
-    files = m["files"]
-    if names is not None:
-        files = [f for f in files if _name_overlaps(f, names)]
-    if ts_range is not None:
-        lo, hi = ts_range
-        files = [f for f in files if _ts_overlaps(f, lo, hi)]
+    version, m = resolve(path, version)
+    lo, hi = ts_range if ts_range is not None else (float("-inf"), float("inf"))
+    files = prune(m["files"], names, lo, hi)
 
     def _contained(f: dict) -> bool:
         if names is not None:
@@ -1167,11 +787,7 @@ def snapshot_properties(
     facts that travel with the store (e.g. a rollup store's ingest
     width). Inherited commit-to-commit by :func:`snapshot_merge`, which
     rejects conflicting re-declarations."""
-    fs = _StoreFS(spark, path)
-    if version is None:
-        _, m = _resolve_tip(fs, path)
-    else:
-        m = _read_manifest(fs, path, version)
+    m = resolve_tip(path)[1] if version is None else read_manifest(path, version)
     return (m or {}).get("properties") or {}
 
 
@@ -1191,8 +807,7 @@ def snapshot_compact(
     manifests without a recorded size are treated as small (rewritten
     once, gaining a size entry). Returns the new version, or None if
     there was nothing to compact."""
-    fs = _StoreFS(spark, path)
-    parent, parent_m = _resolve_tip(fs, path)
+    parent, parent_m = resolve_tip(path)
     if parent is None:
         return None
     base = parent_m["files"]
@@ -1222,25 +837,14 @@ def snapshot_compact(
         spark, path, df, time_chunk_s=_inherited_chunk(parent_m),
         num_partitions=n_out,
     )
-    target = _target_version(fs, path, parent)
-    if target is None:
-        raise ConcurrentWriteError(
-            f"compact prepared against v{parent} but the tip moved"
-        )
     manifest = {
-        "version": target,
-        "parent": parent,
         "operation": "compact",
         "schema": parent_m.get("schema") or _schema_json(df),
         "files": kept + new_files,
     }
     if parent_m.get("properties"):
         manifest["properties"] = parent_m["properties"]
-    if not _try_commit(fs, path, manifest):
-        raise ConcurrentWriteError(
-            f"compact prepared against v{parent} but the tip moved"
-        )
-    return manifest["version"]
+    return commit(path, parent, manifest)
 
 
 def snapshot_zorder(
@@ -1273,8 +877,7 @@ def snapshot_zorder(
     """
     if not 1 <= bits <= 16:
         raise ValueError(f"bits must be in [1, 16], got {bits}")
-    fs = _StoreFS(spark, path)
-    parent, parent_m = _resolve_tip(fs, path)
+    parent, parent_m = resolve_tip(path)
     if parent is None:
         return None
     if _inherited_chunk(parent_m) is not None:
@@ -1320,25 +923,14 @@ def snapshot_zorder(
         .parquet(tx)
     )
     new_files = _tx_manifest_entries(spark, path, tx)
-    target = _target_version(fs, path, parent)
-    if target is None:
-        raise ConcurrentWriteError(
-            f"zorder prepared against v{parent} but the tip moved"
-        )
     manifest = {
-        "version": target,
-        "parent": parent,
         "operation": "zorder",
         "schema": parent_m.get("schema") or _schema_json(df),
         "files": new_files,
     }
     if parent_m.get("properties"):
         manifest["properties"] = parent_m["properties"]
-    if not _try_commit(fs, path, manifest):
-        raise ConcurrentWriteError(
-            f"zorder prepared against v{parent} but the tip moved"
-        )
-    return manifest["version"]
+    return commit(path, parent, manifest)
 
 
 def snapshot_as_of(spark: SparkSession, path: str, ts: float) -> int | None:
@@ -1346,15 +938,7 @@ def snapshot_as_of(spark: SparkSession, path: str, ts: float) -> int | None:
     commit time is <= ``ts`` (epoch seconds) — "the store as it was at
     2 a.m.". Versions without a recorded commit time (pre-round-6) are
     treated as infinitely old, i.e. always eligible."""
-    fs = _StoreFS(spark, path)
-    for v in reversed(_list_versions(fs, path)):
-        try:
-            m = _read_manifest(fs, path, v)
-        except Exception:
-            continue
-        if m.get("committed_at", float("-inf")) <= ts:
-            return v
-    return None
+    return version_as_of(path, ts)[0]
 
 
 def snapshot_clone(
@@ -1380,23 +964,14 @@ def snapshot_clone(
 
     ``version`` clones a historical snapshot (defaults to the tip).
     ``dest`` must not already hold a committed store. Returns the clone's
-    version (always 1)."""
-    sfs = _StoreFS(spark, source)
-    if version is None:
-        version, m = _resolve_tip(sfs, source)
-        if version is None:
-            raise FileNotFoundError(f"no committed snapshot under {source}")
-    else:
-        m = _read_manifest(sfs, source, version)
-    dfs = _StoreFS(spark, dest)
-    if _resolve_tip(dfs, dest)[0] is not None:
+    version: 1, unless junk occupies that slot."""
+    version, m = resolve(source, version)
+    if resolve_tip(dest)[0] is not None:
         raise ValueError(
             f"snapshot_clone refuses: {dest} already holds a committed "
             f"store (cloning over it would orphan its history)"
         )
     manifest = {
-        "version": 1,
-        "parent": None,
         "operation": "clone",
         "cloned_from": {"path": source, "version": version},
         "schema": m.get("schema"),
@@ -1404,11 +979,7 @@ def snapshot_clone(
     }
     if m.get("properties"):
         manifest["properties"] = m["properties"]
-    if not _try_commit(dfs, dest, manifest):
-        raise ConcurrentWriteError(
-            f"clone of {source} v{version} lost the v1 commit race at {dest}"
-        )
-    return 1
+    return commit(dest, None, manifest)
 
 
 def snapshot_restore(spark: SparkSession, path: str, version: int) -> int:
@@ -1420,26 +991,19 @@ def snapshot_restore(spark: SparkSession, path: str, version: int) -> int:
     time-travelable until vacuum. Raises if ``version`` is unreadable
     (never committed, or its files already vacuumed — restoring it would
     publish a tip that cannot be scanned)."""
-    fs = _StoreFS(spark, path)
-    parent, _parent_m = _resolve_tip(fs, path)
+    parent, _parent_m = resolve_tip(path)
     if parent is None:
         raise FileNotFoundError(f"no committed snapshot under {path}")
     if version == parent:
         return parent  # restoring the tip is a no-op, not a new commit
-    if not _readable(fs, path, version):
+    try:
+        m = read_manifest(path, version)
+    except (FileNotFoundError, ValueError):
         raise ValueError(
             f"cannot restore v{version}: not committed, or its data files "
             f"were vacuumed (an unreadable tip would wedge every reader)"
-        )
-    m = _read_manifest(fs, path, version)
-    target = _target_version(fs, path, parent)
-    if target is None:
-        raise ConcurrentWriteError(
-            f"restore prepared against v{parent} but the tip moved"
-        )
+        ) from None
     manifest = {
-        "version": target,
-        "parent": parent,
         "operation": "restore",
         "restored_version": version,
         "schema": m.get("schema"),
@@ -1447,11 +1011,7 @@ def snapshot_restore(spark: SparkSession, path: str, version: int) -> int:
     }
     if m.get("properties"):
         manifest["properties"] = m["properties"]
-    if not _try_commit(fs, path, manifest):
-        raise ConcurrentWriteError(
-            f"restore prepared against v{parent} but the tip moved"
-        )
-    return manifest["version"]
+    return commit(path, parent, manifest)
 
 
 def snapshot_select(
@@ -1487,8 +1047,7 @@ def read_any_store(spark: SparkSession, path: str) -> DataFrame:
     version; anything else reads as the Hive name-partitioned plain sink
     (:func:`.store.write_store`). Lets query-side code accept either
     store format without caring which one wrote it."""
-    fs = _StoreFS(spark, path)
-    if _resolve_tip(fs, path)[0] is not None:
+    if resolve_tip(path)[0] is not None:
         return snapshot_read(spark, path)
     return read_store(spark, path)
 
@@ -1505,8 +1064,7 @@ def snapshot_expire(
     carry over by reference. Expiring EVERYTHING is a legal commit (the
     empty snapshot stays readable via its recorded schema). Returns the
     committed version, or None if nothing was expirable."""
-    fs = _StoreFS(spark, path)
-    parent, parent_m = _resolve_tip(fs, path)
+    parent, parent_m = resolve_tip(path)
     if parent is None:
         return None
     base = parent_m["files"]
@@ -1540,25 +1098,14 @@ def snapshot_expire(
         new_files = _write_data_files(
             spark, path, survivors, time_chunk_s=_inherited_chunk(parent_m)
         )
-    target = _target_version(fs, path, parent)
-    if target is None:
-        raise ConcurrentWriteError(
-            f"expire prepared against v{parent} but the tip moved"
-        )
     manifest = {
-        "version": target,
-        "parent": parent,
         "operation": "expire",
         "schema": schema,
         "files": kept + new_files,
     }
     if parent_m.get("properties"):
         manifest["properties"] = parent_m["properties"]
-    if not _try_commit(fs, path, manifest):
-        raise ConcurrentWriteError(
-            f"expire prepared against v{parent} but the tip moved"
-        )
-    return manifest["version"]
+    return commit(path, parent, manifest)
 
 
 def snapshot_delete(
@@ -1590,18 +1137,10 @@ def snapshot_delete(
             "delete is snapshot_write(mode='overwrite') of an empty "
             "frame; say that explicitly"
         )
-    fs = _StoreFS(spark, path)
-    parent, parent_m = _resolve_tip(fs, path)
+    parent, parent_m = resolve_tip(path)
     if parent is None:
         return None
-    lo, hi = ts_range if ts_range is not None else (None, None)
-
-    def _overlaps(f: dict) -> bool:
-        if names is not None and not _name_overlaps(f, names):
-            return False
-        if ts_range is not None and not _ts_overlaps(f, lo, hi):
-            return False
-        return True
+    lo, hi = ts_range if ts_range is not None else (float("-inf"), float("inf"))
 
     def _contained(f: dict) -> bool:
         # every row the file CAN hold matches the predicate (the
@@ -1625,14 +1164,10 @@ def snapshot_delete(
     # contained could still hold NULL-key rows — rows the delete predicate
     # can never match. Unattested files fall through to the straddle
     # rewrite, where the null-safe negated filter keeps them row by row.
-    dead = [
-        f for f in base
-        if f.get("null_free") and _overlaps(f) and _contained(f)
-    ]
+    overlapping = prune(base, names, lo, hi)
+    dead = [f for f in overlapping if f.get("null_free") and _contained(f)]
     _dp = {f["path"] for f in dead}
-    straddle = [
-        f for f in base if f["path"] not in _dp and _overlaps(f)
-    ]
+    straddle = [f for f in overlapping if f["path"] not in _dp]
     if not dead and not straddle:
         return None
     _gone = _dp | {f["path"] for f in straddle}
@@ -1674,25 +1209,14 @@ def snapshot_delete(
                 f"(foreign/legacy data file); repair or drop that file "
                 f"before deleting. Original: {e}"
             ) from e
-    target = _target_version(fs, path, parent)
-    if target is None:
-        raise ConcurrentWriteError(
-            f"delete prepared against v{parent} but the tip moved"
-        )
     manifest = {
-        "version": target,
-        "parent": parent,
         "operation": "delete",
         "schema": schema,
         "files": kept + new_files,
     }
     if parent_m.get("properties"):
         manifest["properties"] = parent_m["properties"]
-    if not _try_commit(fs, path, manifest):
-        raise ConcurrentWriteError(
-            f"delete prepared against v{parent} but the tip moved"
-        )
-    return manifest["version"]
+    return commit(path, parent, manifest)
 
 
 def snapshot_update(
@@ -1738,11 +1262,10 @@ def snapshot_update(
             "snapshot_update needs names and/or ts_range — an unbounded "
             "update is a read-transform-overwrite; say that explicitly"
         )
-    fs = _StoreFS(spark, path)
-    parent, parent_m = _resolve_tip(fs, path)
+    parent, parent_m = resolve_tip(path)
     if parent is None:
         return None
-    lo, hi = ts_range if ts_range is not None else (None, None)
+    lo, hi = ts_range if ts_range is not None else (float("-inf"), float("inf"))
     schema_cols = [f["name"] for f in (parent_m.get("schema") or {}).get("fields", [])]
     for col in assignments:
         if schema_cols and col not in schema_cols:
@@ -1752,15 +1275,8 @@ def snapshot_update(
                 f"merge_schema append for evolution)"
             )
 
-    def _overlaps(f: dict) -> bool:
-        if names is not None and not _name_overlaps(f, names):
-            return False
-        if ts_range is not None and not _ts_overlaps(f, lo, hi):
-            return False
-        return True
-
     base = parent_m["files"]
-    touched = [f for f in base if _overlaps(f)]
+    touched = prune(base, names, lo, hi)
     if not touched:
         return None
     kept = [f for f in base if f["path"] not in {t["path"] for t in touched}]
@@ -1809,25 +1325,14 @@ def snapshot_update(
             f"the non-null key contract; fix the assignment or repair the "
             f"file. Original: {e}"
         ) from e
-    target = _target_version(fs, path, parent)
-    if target is None:
-        raise ConcurrentWriteError(
-            f"update prepared against v{parent} but the tip moved"
-        )
     manifest = {
-        "version": target,
-        "parent": parent,
         "operation": "update",
         "schema": schema,
         "files": kept + new_files,
     }
     if parent_m.get("properties"):
         manifest["properties"] = parent_m["properties"]
-    if not _try_commit(fs, path, manifest):
-        raise ConcurrentWriteError(
-            f"update prepared against v{parent} but the tip moved"
-        )
-    return manifest["version"]
+    return commit(path, parent, manifest)
 
 
 def snapshot_diff(
@@ -1859,9 +1364,8 @@ def snapshot_diff(
     two versions (under additive-only evolution that is the superset,
     so a reverse diff across an evolution sees the evolved columns and
     stays the exact label-swap of the forward diff)."""
-    fs = _StoreFS(spark, path)
-    m_from = _read_manifest(fs, path, from_version)
-    m_to = _read_manifest(fs, path, to_version)
+    m_from = read_manifest(path, from_version)
+    m_to = read_manifest(path, to_version)
     files_from = {f["path"] for f in m_from["files"]}
     files_to = {f["path"] for f in m_to["files"]}
     only_from = sorted(files_from - files_to)
@@ -1969,24 +1473,20 @@ def snapshot_vacuum(
     alone — only files old enough that no live transaction can still be
     about to reference them are reclaimed. Lower it (or pass 0) only when
     no writer can be active. Returns deleted paths."""
-    import time
-
     if keep_last < 1:
         raise ValueError(f"keep_last must be >= 1, got {keep_last}")
     if min_age_s < 0:
         raise ValueError(f"min_age_s must be >= 0, got {min_age_s}")
     fs = _StoreFS(spark, path)
-    versions = _list_versions(fs, path)
-    if not versions:
-        return []
-    readable = [v for v in versions if _readable(fs, path, v)]
-    if not readable:
+    versions = list_versions(path)
+    manifests = dict(history(path))
+    if not manifests:
         # every manifest is torn/tampered — exactly the state readers are
         # built to survive and an operator can repair. An empty live set
         # here would delete every manifest and (past min_age_s) every data
         # file: vacuum must never turn a repairable store into data loss.
         return []
-    kept_versions = set(readable[-keep_last:])
+    kept_versions = sorted(manifests)[-keep_last:]
 
     def norm(p: str) -> str:
         # input_file_name() says file:///x, FS listings say file:/x —
@@ -1995,32 +1495,24 @@ def snapshot_vacuum(
 
     live_norm: set[str] = set()
     for v in kept_versions:
-        live_norm.update(norm(f["path"]) for f in _read_manifest(fs, path, v)["files"])
+        live_norm.update(norm(f["path"]) for f in manifests[v]["files"])
     deleted: list[str] = []
     # delete only BELOW the kept floor — never a slot BETWEEN kept
-    # versions (only unreadable junk can sit there): deleting it would
-    # punch a gap into the contiguous slot sequence that the tip-hint
-    # probe-forward in _resolve_tip relies on, letting a stale hint stop
-    # at the gap and resolve a pre-gap version as the tip (review
-    # finding: stale reads AND a forked commit parented before the real
-    # tip). Retained junk slots are invisible to readers and writers
-    # skip them deterministically.
-    floor = min(kept_versions, default=versions[-1] + 1)
+    # versions (only unreadable junk can sit there): slot numbers are
+    # never reused, so the retained junk stays invisible to readers and
+    # writers keep skipping it
     for v in versions:
-        if v < floor:
-            fs.delete(_manifest_path(path, v))
-            deleted.append(_manifest_path(path, v))
-    cutoff_ms = (time.time() - min_age_s) * 1000.0
-    # stale manifest temps: a writer that crashed between staging and
-    # rename leaves .tmp_v*.json junk (harmless — invisible to version
+        if v < kept_versions[0]:
+            fs.delete(manifest_path(path, v))
+            deleted.append(manifest_path(path, v))
+    cutoff = time.time() - min_age_s
+    # stale publish temps: a writer that crashed between staging and
+    # linking leaves .tmp_v*.json junk (harmless — invisible to version
     # listing — but it accumulates); reclaim it under the same age guard
-    snap_dir = f"{path}/{_SNAP_DIR}"
-    if fs.exists(snap_dir):
-        for st in fs.fs.listStatus(fs.jpath(snap_dir)):
-            base = str(st.getPath()).rsplit("/", 1)[-1]
-            if base.startswith(".tmp_") and st.getModificationTime() <= cutoff_ms:
-                fs.delete(str(st.getPath()))
-                deleted.append(str(st.getPath()))
+    for tmp in stale_temps(path, cutoff):
+        fs.delete(tmp)
+        deleted.append(tmp)
+    cutoff_ms = cutoff * 1000.0
     data_root = f"{path}/data"
     if fs.exists(data_root):
         for tx in fs.subdirs(data_root):
@@ -2039,10 +1531,3 @@ def snapshot_vacuum(
                 fs.delete(tx)  # tx dir fully unreferenced
     return deleted
 
-
-def _readable(fs: _StoreFS, root: str, version: int) -> bool:
-    try:
-        _read_manifest(fs, root, version)
-        return True
-    except Exception:
-        return False

@@ -36,11 +36,7 @@ from prometheus_parquet_server_spark.pipeline.ann_store import (
     ivf_search,
 )
 from prometheus_parquet_server_spark.pipeline.similarity import brute_force_topk
-from prometheus_parquet_server_spark.sources.snapshot_store import (
-    _StoreFS,
-    _name_overlaps,
-    _resolve_tip,
-)
+from prometheus_parquet_server_spark.sources.manifest import name_overlaps, resolve_tip
 
 DIM = 64
 
@@ -68,8 +64,7 @@ def main() -> None:
     ivf_build(spark, store, vecs, n_centroids=k_cent, kmeans_iterations=1, dim=DIM)
     t_build = time.time() - t0
 
-    fs = _StoreFS(spark, store)
-    _, m = _resolve_tip(fs, store)
+    _, m = resolve_tip(store)
     n_files = len(m["files"])
 
     probes = vecs.limit(5).select(
@@ -105,7 +100,7 @@ def main() -> None:
             for c in r["cs"]
         }
     )
-    opened = sum(1 for f in m["files"] if _name_overlaps(f, probed))
+    opened = sum(1 for f in m["files"] if name_overlaps(f, probed))
 
     t0 = time.time()
     brute = brute_force_topk(vecs, probes, k=10)

@@ -45,10 +45,8 @@ from prometheus_parquet_server_spark.pipeline.pq import (
     ivfpq_build,
     ivfpq_search,
 )
+from prometheus_parquet_server_spark.sources.manifest import name_overlaps, resolve_tip
 from prometheus_parquet_server_spark.sources.snapshot_store import (
-    _StoreFS,
-    _name_overlaps,
-    _resolve_tip,
     snapshot_version,
 )
 
@@ -113,8 +111,7 @@ def production_phase(spark, vecs, probes, probe_rows, twin_ids, n, n_cells):
     )
     t_build = round(time.time() - t0, 2)
 
-    fs = _StoreFS(spark, store)
-    _, manifest = _resolve_tip(fs, store)
+    _, manifest = resolve_tip(store)
     index_bytes = sum(int(f.get("n_bytes", 0)) for f in manifest["files"])
     raw_bytes = n * DIM * 8
 
@@ -236,8 +233,7 @@ def main() -> None:
     )
     t_build = round(time.time() - t0, 2)
 
-    fs = _StoreFS(spark, store)
-    _, manifest = _resolve_tip(fs, store)
+    _, manifest = resolve_tip(store)
     # a file carries cell data iff its name range overlaps the cell names
     # (range clustering can pack the reserved _coarse/_codebook rows into
     # the same file as the first cells at small scale)
@@ -343,7 +339,7 @@ def main() -> None:
         probed_names = sorted(
             {f"cell={c:04d}" for cells in probed_cells.values() for c in cells}
         )
-        opened = sum(1 for f in data_files if _name_overlaps(f, probed_names))
+        opened = sum(1 for f in data_files if name_overlaps(f, probed_names))
         sweep.append(
             {
                 "cells_probed": len(probed_names),

@@ -42,10 +42,7 @@ from prometheus_parquet_server_spark.pipeline.sq import (
     sq8_rerank_topk,
     sq8_topk,
 )
-from prometheus_parquet_server_spark.sources.snapshot_store import (
-    _StoreFS,
-    _resolve_tip,
-)
+from prometheus_parquet_server_spark.sources.manifest import resolve_tip
 
 DIM = 64
 N_TWINS = 20
@@ -88,8 +85,7 @@ def run(spark, n):
     sq8_build(spark, store, vecs, dim=DIM)
     t_build = round(time.time() - t0, 2)
 
-    fs = _StoreFS(spark, store)
-    _, manifest = _resolve_tip(fs, store)
+    _, manifest = resolve_tip(store)
     index_bytes = sum(int(f.get("n_bytes", 0)) for f in manifest["files"])
     raw_f64_bytes = (n + N_TWINS) * DIM * 8
     raw_parquet_bytes = sum(

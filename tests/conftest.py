@@ -3,13 +3,7 @@ import os
 
 import pytest
 
-# 16, not 4 (r15): the heavy parity tests are compute-bound enough that
-# 16-thread local mode runs them ~30% faster (measured: the two slowest,
-# chunked_asof + chunked_slot_ops, 121 s at 4 cores vs 85 s at 16), and
-# the small ones are overhead-bound either way. Explicit env still wins.
-os.environ.setdefault("SPARK_GRAFT_CPUS", "16")
-
-from prometheus_parquet_server_spark import get_spark  # noqa: E402
+from prometheus_parquet_server_spark import get_spark
 
 # ---------------------------------------------------------------------------
 # Two-tier suite (r15, VERDICT r14 next #2): the full 656-test run takes

@@ -48,11 +48,7 @@ def test_store_search_equals_direct_ivf(spark, tmp_path):
 def test_search_prunes_to_probed_cells(spark, tmp_path):
     """The corpus scan's file list (manifest names-pruning) must be a
     strict subset of the index files when n_probe < n_centroids."""
-    from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _StoreFS,
-        _name_overlaps,
-        _resolve_tip,
-    )
+    from prometheus_parquet_server_spark.sources.manifest import name_overlaps, resolve_tip
 
     emb = _emb(spark)
     store = f"file://{tmp_path}/index"
@@ -65,8 +61,7 @@ def test_search_prunes_to_probed_cells(spark, tmp_path):
         ivf_build(spark, store, emb, n_centroids=8, kmeans_iterations=0, dim=64)
     finally:
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev)
-    fs = _StoreFS(spark, store)
-    _, m = _resolve_tip(fs, store)
+    _, m = resolve_tip(store)
     files = m["files"]
     assert len(files) > 2, "need several files for pruning to mean anything"
 
@@ -87,7 +82,7 @@ def test_search_prunes_to_probed_cells(spark, tmp_path):
         "c", centroid_cells_udf(centroids, 1)(F.col("probe_vec"))[0]
     ).collect()[0]["c"]
     probed = [f"cell={cell:04d}"]
-    touched = [f for f in files if _name_overlaps(f, probed)]
+    touched = [f for f in files if name_overlaps(f, probed)]
     assert 0 < len(touched) < len(files)
 
 
@@ -322,9 +317,8 @@ def test_quantized_index_recall_and_size(spark, tmp_path):
     mode via the manifest property, and the quantized cell files are
     materially smaller than the float ones."""
     from prometheus_parquet_server_spark.pipeline.ann_store import ivf_append
+    from prometheus_parquet_server_spark.sources.manifest import resolve_tip
     from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _StoreFS,
-        _resolve_tip,
         snapshot_properties,
         snapshot_read,
     )
@@ -365,8 +359,7 @@ def test_quantized_index_recall_and_size(spark, tmp_path):
 
     # 4x storage claim: compare per-row data bytes of cell files
     def data_bytes(store):
-        fs = _StoreFS(spark, store)
-        _, m = _resolve_tip(fs, store)
+        _, m = resolve_tip(store)
         return sum(f["n_bytes"] for f in m["files"])
 
     assert data_bytes(qstore) < 0.5 * data_bytes(fstore), (

@@ -80,20 +80,15 @@ def test_commits_are_pure_appends_never_rewrites(spark, tmp_path):
     manifest carries ALL prior data files BY REFERENCE (no file of the
     previous manifest disappears or is rewritten) and adds only new
     files — commit cost O(new fingerprints) regardless of store size."""
-    from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _StoreFS,
-        _read_manifest,
-        _resolve_tip,
-    )
+    from prometheus_parquet_server_spark.sources.manifest import resolve_tip
 
     store = f"file://{tmp_path}/seen"
     dedup_ingest(spark, store, docs(spark, [(1, "one"), (2, "two")]))
-    fs = _StoreFS(spark, store)
-    v1, m1 = _resolve_tip(fs, store)
+    v1, m1 = resolve_tip(store)
     files_v1 = {f["path"] for f in m1["files"]}
 
     dedup_ingest(spark, store, docs(spark, [(3, "two"), (4, "three")]))
-    v2, m2 = _resolve_tip(fs, store)
+    v2, m2 = resolve_tip(store)
     files_v2 = {f["path"] for f in m2["files"]}
     assert v2 > v1
     assert files_v1 <= files_v2, "append rewrote or dropped a prior file"
@@ -180,10 +175,7 @@ def test_stream_compaction_preserves_membership(spark, tmp_path):
     """compact_every=1 compacts after every batch; membership semantics
     must be unchanged (the compacted store still filters dups) and the
     file count must not grow one-per-batch."""
-    from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _StoreFS,
-        _resolve_tip,
-    )
+    from prometheus_parquet_server_spark.sources.manifest import resolve_tip
 
     src = tmp_path / "src"
     src.mkdir()
@@ -206,8 +198,7 @@ def test_stream_compaction_preserves_membership(spark, tmp_path):
     )
     assert ids == [1, 2, 4, 6]
     assert snapshot_read(spark, store).count() == 4
-    fs = _StoreFS(spark, store)
-    _, m = _resolve_tip(fs, store)
+    _, m = resolve_tip(store)
     # 3 appended batches would be ≥3 files un-compacted; compaction folds
     # the small-file debt into one
     assert len(m["files"]) == 1
@@ -245,16 +236,14 @@ def test_stream_vacuum_reclaims_superseded_files(spark, tmp_path):
     # data file while the tip keeps answering
     import pathlib
 
+    from prometheus_parquet_server_spark.sources.manifest import resolve_tip
     from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _StoreFS,
-        _resolve_tip,
         snapshot_vacuum,
     )
 
     deleted = snapshot_vacuum(spark, store, keep_last=1, min_age_s=0)
     assert deleted, "compaction left superseded files; vacuum must reclaim them"
-    fs = _StoreFS(spark, store)
-    _, m = _resolve_tip(fs, store)
+    _, m = resolve_tip(store)
     live = {pathlib.Path(f["path"].replace("file:", "")).name for f in m["files"]}
     on_disk = {
         p.name

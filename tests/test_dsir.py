@@ -557,14 +557,13 @@ def test_counts_ingest_writes_one_file_per_commit(spark, tmp_path):
     dsir_counts_ingest(spark, store, docs.filter("doc_id % 2 = 0"), side="raw", m=64)
     dsir_counts_ingest(spark, store, docs.filter("doc_id % 2 = 1"), side="raw", m=64)
     dsir_counts_ingest(spark, store, docs.filter("doc_id % 17 = 3"), side="target", m=64)
+    from prometheus_parquet_server_spark.sources.manifest import read_manifest
     from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _StoreFS,
-        _read_manifest,
         snapshot_version,
     )
 
     tip = snapshot_version(spark, store)
-    files = _read_manifest(_StoreFS(spark, store), store, tip)["files"]
+    files = read_manifest(store, tip)["files"]
     assert len(files) <= 2, files  # one raw file + one target file
     # and the read-back is the fold of all three batches
     raw = snapshot_read(spark, store, names=["raw"])

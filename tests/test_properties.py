@@ -122,11 +122,11 @@ def test_pyds_prune_is_conservative(files, names, lo, hi):
     any file whose recorded ranges intersect the predicate (null stats =
     unknown = intersecting) survives. Spark re-applies the row filter,
     so over-keeping is always safe; under-keeping never is."""
-    from prometheus_parquet_server_spark.sources.pyds import _prune
+    from prometheus_parquet_server_spark.sources.manifest import prune
 
     if lo > hi:
         lo, hi = hi, lo
-    kept = {id(f) for f in _prune(files, names, lo, hi)}
+    kept = {id(f) for f in prune(files, names, lo, hi)}
     for f in files:
         name_could_match = (
             names is None

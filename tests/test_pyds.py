@@ -12,6 +12,7 @@ commits unless ignore_changes=true.
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from prometheus_parquet_server_spark.sources.pyds import (
     SnapshotBatchReader,
@@ -526,11 +527,12 @@ def test_object_store_commit_backend_single_winner():
     the registry (behavior unchanged, covered by the other tests)."""
     import threading
 
-    from prometheus_parquet_server_spark.sources.pyds import (
+    from prometheus_parquet_server_spark.sources.manifest import (
         CommitBackend,
-        _create_manifest_exclusive,
-        _publish_manifest,
-        _read_manifest,
+        append,
+        manifest_path,
+        publish,
+        read_manifest,
         register_commit_backend,
     )
 
@@ -565,28 +567,24 @@ def test_object_store_commit_backend_single_winner():
     register_commit_backend("memcas", MemStore())
     # fresh store object per test id to avoid cross-test state
     root = "memcas://bucket/store"
-    schema_json = {"type": "struct", "fields": []}
+    schema = StructType([])
 
     # (a) direct double-create on one slot: exactly one winner
-    from prometheus_parquet_server_spark.sources.snapshot_store import _manifest_path
-
-    slot = _manifest_path(root + "_slot", 1)
-    assert _create_manifest_exclusive(slot, b"{}") is True
-    assert _create_manifest_exclusive(slot, b"{}") is False
+    slot = manifest_path(root + "_slot", 1)
+    assert publish(slot, b"{}") is True
+    assert publish(slot, b"{}") is False
 
     # (b) 8 racing appends: all commit, distinct versions, union file list
     results, errors = [], []
 
     def publish(i):
         try:
-            v = _publish_manifest(
+            v = append(
                 root,
-                "append",
-                schema_json,
                 [{"path": f"memcas://bucket/store/data/f{i}.parquet",
                   "n_rows": 1, "n_bytes": 1, "min_name": "a",
                   "max_name": "a", "min_ts": 0.0, "max_ts": 1.0}],
-                None,
+                schema,
             )
             results.append(v)
         except Exception as e:  # pragma: no cover - fail loudly below
@@ -599,7 +597,7 @@ def test_object_store_commit_backend_single_winner():
         t.join()
     assert not errors, errors
     assert sorted(results) == list(range(1, 9))
-    tip = _read_manifest(root, 8)
+    tip = read_manifest(root, 8)
     committed = sorted(f["path"] for f in tip["files"])
     assert committed == sorted(
         f"memcas://bucket/store/data/f{i}.parquet" for i in range(8)
@@ -618,13 +616,13 @@ def test_s3_commit_backend_moto_race():
     import boto3
     from moto import mock_aws
 
-    from prometheus_parquet_server_spark.sources.pyds import (
+    from prometheus_parquet_server_spark.sources.manifest import (
         S3CommitBackend,
-        _publish_manifest,
-        _read_manifest,
+        append,
+        manifest_path,
+        read_manifest,
         register_commit_backend,
     )
-    from prometheus_parquet_server_spark.sources.snapshot_store import _manifest_path
 
     with mock_aws():
         client = boto3.client("s3", region_name="us-east-1")
@@ -633,7 +631,7 @@ def test_s3_commit_backend_moto_race():
 
         # (a) primitive: two racers on one slot — exactly one winner, the
         # loser sees S3's own 412 (not a fake), and the winner's bytes win
-        slot = _manifest_path("s3://pps-test-bucket/store", 1)
+        slot = manifest_path("s3://pps-test-bucket/store", 1)
         assert backend.create_exclusive(slot, b'{"racer": "A"}') is True
         assert backend.create_exclusive(slot, b'{"racer": "B"}') is False
         assert backend.read_bytes(slot) == b'{"racer": "A"}'
@@ -649,20 +647,18 @@ def test_s3_commit_backend_moto_race():
         # both commit, to distinct versions, the tip unions the file lists
         register_commit_backend("s3", backend)
         root = "s3://pps-test-bucket/store2"
-        schema_json = {"type": "struct", "fields": []}
+        schema = StructType([])
 
         def pub(i):
-            return _publish_manifest(
+            return append(
                 root,
-                "append",
-                schema_json,
                 [{"path": f"{root}/data/f{i}.parquet", "n_rows": 1,
                   "n_bytes": 1, "min_name": "a", "max_name": "a",
                   "min_ts": 0.0, "max_ts": 1.0}],
-                None,
+                schema,
             )
         assert [pub(0), pub(1), pub(2)] == [1, 2, 3]
-        tip = _read_manifest(root, 3)
+        tip = read_manifest(root, 3)
         assert sorted(f["path"] for f in tip["files"]) == [
             f"{root}/data/f{i}.parquet" for i in range(3)
         ]
@@ -757,20 +753,20 @@ def test_gcs_commit_backend_race():
     paginated listing ride the same public JSON API shapes the stub
     session enforces; 429 same-object throttling retries then raises at
     the bound."""
-    from prometheus_parquet_server_spark.sources.pyds import (
+    from prometheus_parquet_server_spark.sources.manifest import (
         GCSCommitBackend,
-        _publish_manifest,
-        _read_manifest,
+        append,
+        manifest_path,
+        read_manifest,
         register_commit_backend,
     )
-    from prometheus_parquet_server_spark.sources.snapshot_store import _manifest_path
 
     sess = _FakeGCSSession()
     backend = GCSCommitBackend(sess)
 
     # (a) primitive: one slot, two racers — exactly one winner; the
     # winner's bytes are what a read returns
-    slot = _manifest_path("gs://pps-test-bucket/store", 1)
+    slot = manifest_path("gs://pps-test-bucket/store", 1)
     assert backend.create_exclusive(slot, b'{"racer": "A"}') is True
     assert backend.create_exclusive(slot, b'{"racer": "B"}') is False
     assert backend.read_bytes(slot) == b'{"racer": "A"}'
@@ -793,21 +789,19 @@ def test_gcs_commit_backend_race():
     # listing exercises pageToken pagination (page size 2 in the stub)
     register_commit_backend("gs", backend)
     root = "gs://pps-test-bucket/store2"
-    schema_json = {"type": "struct", "fields": []}
+    schema = StructType([])
 
     def pub(i):
-        return _publish_manifest(
+        return append(
             root,
-            "append",
-            schema_json,
             [{"path": f"{root}/data/f{i}.parquet", "n_rows": 1,
               "n_bytes": 1, "min_name": "a", "max_name": "a",
               "min_ts": 0.0, "max_ts": 1.0}],
-            None,
+            schema,
         )
 
     assert [pub(0), pub(1), pub(2)] == [1, 2, 3]
-    tip = _read_manifest(root, 3)
+    tip = read_manifest(root, 3)
     assert sorted(f["path"] for f in tip["files"]) == [
         f"{root}/data/f{i}.parquet" for i in range(3)
     ]
@@ -822,7 +816,7 @@ def test_gcs_commit_backend_race():
     # (c) a transient 429 retries through to the win; at the bound the
     # create raises instead of silently giving up
     sess.throttle_next = 2
-    slot2 = _manifest_path("gs://pps-test-bucket/store", 2)
+    slot2 = manifest_path("gs://pps-test-bucket/store", 2)
     assert backend.create_exclusive(slot2, b"{}") is True
     sess.throttle_next = 10**9
     limited = GCSCommitBackend(sess, max_conflict_retries=2)
@@ -894,13 +888,13 @@ def test_abs_commit_backend_race():
     exactly one racer, the loser sees 409 BlobAlreadyExists and rebases
     through the manifest protocol; container@account URI parsing; 404 →
     FileNotFoundError."""
-    from prometheus_parquet_server_spark.sources.pyds import (
+    from prometheus_parquet_server_spark.sources.manifest import (
         ABSCommitBackend,
-        _publish_manifest,
-        _read_manifest,
+        append,
+        manifest_path,
+        read_manifest,
         register_commit_backend,
     )
-    from prometheus_parquet_server_spark.sources.snapshot_store import _manifest_path
 
     backend = ABSCommitBackend(_FakeBlobService())
 
@@ -909,7 +903,7 @@ def test_abs_commit_backend_race():
         "cont", "a/b",
     )
 
-    slot = _manifest_path("wasbs://cont@acct.blob.core.windows.net/store", 1)
+    slot = manifest_path("wasbs://cont@acct.blob.core.windows.net/store", 1)
     assert backend.create_exclusive(slot, b'{"racer": "A"}') is True
     assert backend.create_exclusive(slot, b'{"racer": "B"}') is False
     assert backend.read_bytes(slot) == b'{"racer": "A"}'
@@ -921,21 +915,19 @@ def test_abs_commit_backend_race():
 
     register_commit_backend("wasbs", backend)
     root = "wasbs://cont@acct.blob.core.windows.net/store2"
-    schema_json = {"type": "struct", "fields": []}
+    schema = StructType([])
 
     def pub(i):
-        return _publish_manifest(
+        return append(
             root,
-            "append",
-            schema_json,
             [{"path": f"{root}/data/f{i}.parquet", "n_rows": 1,
               "n_bytes": 1, "min_name": "a", "max_name": "a",
               "min_ts": 0.0, "max_ts": 1.0}],
-            None,
+            schema,
         )
 
     assert [pub(0), pub(1), pub(2)] == [1, 2, 3]
-    tip = _read_manifest(root, 3)
+    tip = read_manifest(root, 3)
     assert sorted(f["path"] for f in tip["files"]) == [
         f"{root}/data/f{i}.parquet" for i in range(3)
     ]

@@ -105,12 +105,10 @@ def test_rollup_ingest_incremental_equals_one_shot(spark, tmp_path):
         rollup_ingest,
         rollup_read,
     )
+    from prometheus_parquet_server_spark.sources.manifest import resolve_tip
     from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _read_manifest,
-        _resolve_tip,
         snapshot_expire,
     )
-    from prometheus_parquet_server_spark.sources.snapshot_store import _StoreFS
 
     rows = [
         ("click", 10.0 + 37.0 * i, float((i * 13) % 97) / 7.0) for i in range(200)
@@ -144,8 +142,7 @@ def test_rollup_ingest_incremental_equals_one_shot(spark, tmp_path):
     assert snap(inc) == want
 
     # a batch touching ONLY 'view' must carry 'click' files by reference
-    fs = _StoreFS(spark, inc)
-    _, before = _resolve_tip(fs, inc)
+    _, before = resolve_tip(inc)
     click_files_before = {
         f["path"] for f in before["files"] if f["max_name"] <= "click"
     }
@@ -153,7 +150,7 @@ def test_rollup_ingest_incremental_equals_one_shot(spark, tmp_path):
         [("view", 100000.0, 5.0)], "event_type string, ts double, value double"
     )
     rollup_ingest(spark, inc, more)
-    _, after = _resolve_tip(fs, inc)
+    _, after = resolve_tip(inc)
     assert click_files_before <= {f["path"] for f in after["files"]}
 
     # retention composes: manifest-level expire on the partial store

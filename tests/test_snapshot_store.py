@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from prometheus_parquet_server_spark.sources import manifest
 from prometheus_parquet_server_spark.sources.snapshot_store import (
     ConcurrentWriteError,
     snapshot_compact,
@@ -63,19 +64,14 @@ def test_uncommitted_writer_is_invisible(spark, tmp_path):
 def test_commit_race_one_winner(spark, tmp_path):
     """Two writers racing to the same version: exactly one wins; the
     append retries onto the new tip, the overwrite refuses."""
-    from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _StoreFS,
-        _try_commit,
-    )
-
     store = f"file://{tmp_path}/snap"
     snapshot_write(spark, store, mk(spark, [("a", {}, 1.0, 1.0)]), mode="overwrite")
-    fs = _StoreFS(spark, store)
     # steal version 2 out from under the next writer
-    m2 = {"version": 2, "parent": 1, "operation": "test", "files": []}
-    assert _try_commit(fs, store, m2)
+    m2 = {"operation": "test", "files": []}
+    assert manifest.commit(store, 1, m2) == 2
     # same version again → loser
-    assert not _try_commit(fs, store, m2)
+    with pytest.raises(ConcurrentWriteError):
+        manifest.commit(store, 1, m2)
     # an append rebases: lands at v3
     v = snapshot_write(spark, store, mk(spark, [("b", {}, 2.0, 2.0)]))
     assert v == 3
@@ -105,14 +101,8 @@ def test_upsert_rewrites_only_touched_files(spark, tmp_path):
         ("c", None, 1.0): 3.0,
     }
     # 'a' file carried over by reference: same path in v2 and v3 manifests
-    from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _read_manifest,
-        _StoreFS,
-    )
-
-    fs = _StoreFS(spark, store)
     paths = lambda v: {
-        f["path"] for f in _read_manifest(fs, store, v)["files"] if f["min_name"] == "a"
+        f["path"] for f in manifest.read_manifest(store, v)["files"] if f["min_name"] == "a"
     }
     assert paths(2) == paths(3) != set()
 
@@ -147,15 +137,9 @@ def test_manifest_level_file_pruning(spark, tmp_path):
     df = snapshot_read(spark, store, names=["m1"])
     assert df.count() == 5
     scanned = df.select(F.input_file_name()).distinct().collect()
-    from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _read_manifest,
-        _StoreFS,
-    )
-
-    fs = _StoreFS(spark, store)
     m2_files = {
         f["path"].split("://", 1)[-1]
-        for f in _read_manifest(fs, store, 2)["files"]
+        for f in manifest.read_manifest(store, 2)["files"]
         if f["min_name"] == "m2"
     }
     for r in scanned:
@@ -199,8 +183,6 @@ def test_expire_drops_whole_files_without_scan(spark, tmp_path):
     """Files entirely below the cutoff drop by manifest arithmetic; only
     straddling files are rewritten; clean files carry over by reference."""
     from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _read_manifest,
-        _StoreFS,
         snapshot_expire,
     )
 
@@ -209,16 +191,15 @@ def test_expire_drops_whole_files_without_scan(spark, tmp_path):
     snapshot_write(spark, store, mk(spark, [("m", {}, float(t), 1.0) for t in range(5)]), mode="overwrite")
     snapshot_write(spark, store, mk(spark, [("m", {}, float(t), 2.0) for t in range(8, 13)]))
     snapshot_write(spark, store, mk(spark, [("m", {}, float(t), 3.0) for t in range(20, 25)]))
-    fs = _StoreFS(spark, store)
     fresh_paths = {
-        f["path"] for f in _read_manifest(fs, store, 3)["files"] if f["min_ts"] >= 20
+        f["path"] for f in manifest.read_manifest(store, 3)["files"] if f["min_ts"] >= 20
     }
 
     v = snapshot_expire(spark, store, min_ts=10.0)
     assert v == 4
     rows = sorted(r["ts"] for r in snapshot_read(spark, store).collect())
     assert rows == [10.0, 11.0, 12.0, 20.0, 21.0, 22.0, 23.0, 24.0]
-    after = _read_manifest(fs, store, 4)["files"]
+    after = manifest.read_manifest(store, 4)["files"]
     # the fresh file was carried by reference, not rewritten
     assert fresh_paths <= {f["path"] for f in after}
     # nothing left to expire → no-op returns None, no empty commit
@@ -302,24 +283,18 @@ def test_read_any_store_detects_format(spark, tmp_path):
 def test_compact_rewrites_only_small_files(spark, tmp_path):
     """Files already at target size carry over by reference — compaction
     cost tracks the small-file debt, not the store size."""
-    from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _read_manifest,
-        _StoreFS,
-    )
-
     store = f"file://{tmp_path}/snap"
     snapshot_write(spark, store, mk(spark, [("big", {}, float(t), 1.0) for t in range(100)]), mode="overwrite")
     snapshot_write(spark, store, mk(spark, [("s1", {}, 1.0, 1.0)]))
     snapshot_write(spark, store, mk(spark, [("s2", {}, 1.0, 2.0)]))
-    fs = _StoreFS(spark, store)
-    m3 = _read_manifest(fs, store, 3)["files"]
+    m3 = manifest.read_manifest(store, 3)["files"]
     big_paths = {f["path"] for f in m3 if f["min_name"] == "big"}
     big_bytes = max(f["n_bytes"] for f in m3 if f["min_name"] == "big")
 
     # threshold between the big file and the tiny ones → only tiny rewritten
     v = snapshot_compact(spark, store, target_file_bytes=big_bytes)
     assert v == 4
-    m4 = _read_manifest(fs, store, 4)["files"]
+    m4 = manifest.read_manifest(store, 4)["files"]
     assert big_paths <= {f["path"] for f in m4}  # carried by reference
     assert snapshot_read(spark, store).count() == 102
     # everything at/above target now → no-op, no empty commit
@@ -404,14 +379,7 @@ def test_snapshot_select_prunes_and_filters_exactly(spark, tmp_path):
 
 
 def _is_mem_file(spark, store, path):
-    from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _read_manifest,
-        _resolve_tip,
-        _StoreFS,
-    )
-
-    fs = _StoreFS(spark, store)
-    _, m = _resolve_tip(fs, store)
+    _, m = manifest.resolve_tip(store)
     mem = {f["path"].split("://", 1)[-1] for f in m["files"] if f["min_name"] == "mem"}
     return path.split("://", 1)[-1] in mem
 
@@ -594,8 +562,8 @@ def test_upsert_keeps_parent_schema_for_empty_reads(spark, tmp_path):
 
 
 def test_cross_process_commit_race_one_winner(spark, tmp_path):
-    """TWO OS PROCESSES (separate JVMs — the in-process _COMMIT_LOCK
-    cannot arbitrate them) race the same append commit: a file-based
+    """TWO OS PROCESSES (separate interpreters and JVMs — no in-process
+    lock can arbitrate them) race the same append commit: a file-based
     barrier aligns them immediately before the commit loop, so both
     compute the same CAS target version. Exactly one must win each
     version; the loser must rebase and land on the next — no lost
@@ -614,11 +582,10 @@ import json, sys, time
 sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession
 from prometheus_parquet_server_spark import get_spark
+from prometheus_parquet_server_spark.sources import manifest
 from prometheus_parquet_server_spark.sources.snapshot_store import (
-    _read_manifest, _resolve_tip, _schema_json, _target_version, _try_commit,
-    _write_data_files,
+    _schema_json, _write_data_files,
 )
-from prometheus_parquet_server_spark.sources.snapshot_store import _StoreFS
 
 tag, store, barrier_dir = sys.argv[1], sys.argv[2], sys.argv[3]
 spark = get_spark(f"racer-{{tag}}")
@@ -626,7 +593,6 @@ df = spark.createDataFrame(
     [(f"proc-{{tag}}", {{}}, 1.0, 1.0)],
     "name string, labels map<string,string>, ts double, value double",
 )
-fs = _StoreFS(spark, store)
 new_files = _write_data_files(spark, store, df)
 schema = _schema_json(df)
 
@@ -644,16 +610,15 @@ attempts = 0
 version = None
 for _ in range(10):
     attempts += 1
-    parent, parent_m = _resolve_tip(fs, store)
+    parent, parent_m = manifest.resolve_tip(store)
     base = parent_m["files"] if parent_m else []
-    target = _target_version(fs, store, parent)
-    if target is None:
-        continue
-    manifest = {{"version": target, "parent": parent, "operation": "append",
-                "schema": schema, "files": base + new_files}}
-    if _try_commit(fs, store, manifest):
-        version = target
+    try:
+        version = manifest.commit(store, parent, {{
+            "operation": "append", "schema": schema, "files": base + new_files,
+        }})
         break
+    except manifest.ConcurrentWriteError:
+        continue
 print(json.dumps({{"tag": tag, "version": version, "attempts": attempts}}))
 """
     import os
@@ -698,15 +663,11 @@ def test_graded_snapshot_select_prunes_files(spark):
     )
     from prometheus_parquet_server_spark.labels import LabelMatcher
     from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _read_manifest,
-        _resolve_tip,
         snapshot_select,
     )
-    from prometheus_parquet_server_spark.sources.snapshot_store import _StoreFS
 
     store = _snapshot_store_for(spark, "/root/testdata/sf0.001")
-    fs = _StoreFS(spark, store)
-    v, m = _resolve_tip(fs, store)
+    v, m = manifest.resolve_tip(store)
     total_files = len(m["files"])
     assert total_files > 1  # pruning needs something to prune
 
@@ -764,8 +725,6 @@ def test_time_chunked_layout_prunes_ts_slices(spark, tmp_path):
     maintenance paths: appends and compaction inherit the pinned layout
     property without restating it."""
     from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _read_manifest,
-        _resolve_tip,
         _StoreFS,
         snapshot_properties,
     )
@@ -783,14 +742,9 @@ def test_time_chunked_layout_prunes_ts_slices(spark, tmp_path):
     )
 
     def planned(store, **kw):
-        fs = _StoreFS(spark, store)
-        v, m = _resolve_tip(fs, store)
-        from prometheus_parquet_server_spark.sources.snapshot_store import (
-            _ts_overlaps,
-        )
-
+        v, m = manifest.resolve_tip(store)
         lo, hi = kw["ts_range"]
-        return len([f for f in m["files"] if _ts_overlaps(f, lo, hi)]), len(
+        return len([f for f in m["files"] if manifest.ts_overlaps(f, lo, hi)]), len(
             m["files"]
         )
 
@@ -818,8 +772,7 @@ def test_time_chunked_layout_prunes_ts_slices(spark, tmp_path):
     v = snapshot_compact(spark, chunked, target_file_bytes=10**9)
     if v is not None:  # everything rewritten into chunked files again
         n_after = planned(chunked, **slice_kw)[0]
-        fs = _StoreFS(spark, chunked)
-        total = len(_read_manifest(fs, chunked, v)["files"])
+        total = len(manifest.read_manifest(chunked, v)["files"])
         assert n_after < total, (n_after, total)
     got2 = sorted(map(key, snapshot_read(spark, chunked, **slice_kw).collect()))
     assert got2 == want
@@ -884,16 +837,11 @@ def test_append_gate_ignores_nested_nullability(spark, tmp_path):
     valueContainsNull=False; the store's recorded map (as parquet reads it
     back) is nullable-valued. The gate compares type SHAPE
     (simpleString), so the append must pass."""
-    from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _read_manifest,
-        _StoreFS,
-    )
-
     root = f"file://{tmp_path}/s"
     snapshot_write(
         spark, root, mk(spark, [("m", {"x": "1"}, 1.0, 2.0)]), mode="overwrite"
     )
-    recorded = _read_manifest(_StoreFS(spark, root), root, 1)["schema"]
+    recorded = manifest.read_manifest(root, 1)["schema"]
     labels = {f["name"]: f["type"] for f in recorded["fields"]}["labels"]
     assert labels["valueContainsNull"] is True
     updates = spark.range(1).select(
@@ -1278,10 +1226,6 @@ def test_zorder_content_pruning_and_history(spark, tmp_path):
     time travel still serves the pre-rewrite layout, chunked stores
     refuse."""
     from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _read_manifest,
-        _StoreFS,
-        _name_overlaps,
-        _ts_overlaps,
         snapshot_zorder,
     )
 
@@ -1299,17 +1243,16 @@ def test_zorder_content_pruning_and_history(spark, tmp_path):
             spark, store, mk(spark, batch),
             mode="overwrite" if g == 0 else "append",
         )
-    fs = _StoreFS(spark, store)
     v1 = snapshot_version(spark, store)
-    before = _read_manifest(fs, store, v1)["files"]
+    before = manifest.read_manifest(store, v1)["files"]
     assert len(before) > 4  # pruning needs something to prune
 
     def pruned(files, names=None, ts=None):
         out = files
         if names is not None:
-            out = [f for f in out if _name_overlaps(f, names)]
+            out = [f for f in out if manifest.name_overlaps(f, names)]
         if ts is not None:
-            out = [f for f in out if _ts_overlaps(f, *ts)]
+            out = [f for f in out if manifest.ts_overlaps(f, *ts)]
         return len(out)
 
     # name-major baseline: ts predicate prunes nothing
@@ -1317,7 +1260,7 @@ def test_zorder_content_pruning_and_history(spark, tmp_path):
 
     v2 = snapshot_zorder(spark, store, bits=4, target_file_bytes=2_000)
     assert v2 == v1 + 1
-    after = _read_manifest(fs, store, v2)["files"]
+    after = manifest.read_manifest(store, v2)["files"]
     assert len(after) > 4
 
     # content identical
@@ -1402,8 +1345,6 @@ def test_shallow_clone_zero_copy_divergence_and_vacuum_safety(spark, tmp_path):
     never deletes source files; compaction materializes the clone away
     from source references; cloning onto an existing store refuses."""
     from prometheus_parquet_server_spark.sources.snapshot_store import (
-        _read_manifest,
-        _StoreFS,
         snapshot_clone,
         snapshot_compact,
     )
@@ -1416,8 +1357,7 @@ def test_shallow_clone_zero_copy_divergence_and_vacuum_safety(spark, tmp_path):
     dst = f"file://{tmp_path}/dst"
     assert snapshot_clone(spark, src, dst) == 1
     # zero-copy: the clone references the SOURCE's files
-    dfs = _StoreFS(spark, dst)
-    cm = _read_manifest(dfs, dst, 1)
+    cm = manifest.read_manifest(dst, 1)
     assert all(f"{tmp_path}/src/" in f["path"] for f in cm["files"])
     assert sorted(r["name"] for r in snapshot_read(spark, dst).collect()) == [
         "a", "a", "a", "a", "b"]
@@ -1435,7 +1375,7 @@ def test_shallow_clone_zero_copy_divergence_and_vacuum_safety(spark, tmp_path):
     # compaction detaches: all clone files become clone-owned
     v = snapshot_compact(spark, dst, target_file_bytes=10**9)
     assert v is not None
-    after = _read_manifest(dfs, dst, v)
+    after = manifest.read_manifest(dst, v)
     assert all(f"{tmp_path}/dst/" in f["path"] for f in after["files"])
     assert snapshot_read(spark, dst).count() == 6
 
@@ -1452,18 +1392,19 @@ def test_shallow_clone_zero_copy_divergence_and_vacuum_safety(spark, tmp_path):
 def test_maintenance_verbs_race_raise_not_overwrite(spark, tmp_path, monkeypatch):
     """zorder / restore / compact must RAISE when the tip moves between
     prepare and commit — never silently drop the interleaved commit.
-    The race is injected by advancing the tip inside _target_version
-    resolution (the same window the cross-process test exercises)."""
+    The race is injected by advancing the tip inside the manifest
+    module's CAS target resolution (the same window the cross-process
+    test exercises)."""
     import prometheus_parquet_server_spark.sources.snapshot_store as ss
 
     store = f"file://{tmp_path}/race"
     snapshot_write(spark, store, mk(spark, [("a", {}, 1.0, 1.0)]), mode="overwrite")
     snapshot_write(spark, store, mk(spark, [("b", {}, 2.0, 2.0)]))
 
-    real_target = ss._target_version
+    real_target = manifest.cas_target
     racing = {"armed": False}
 
-    def racing_target(fs, root, parent):
+    def racing_target(root, parent):
         if racing["armed"]:
             # another writer lands an append between prepare and commit;
             # disarm first — the inner write resolves its own target
@@ -1471,7 +1412,7 @@ def test_maintenance_verbs_race_raise_not_overwrite(spark, tmp_path, monkeypatch
             ss.snapshot_write(
                 spark, store, mk(spark, [("z", {}, 9.0, 9.0)]), mode="append"
             )
-        return real_target(fs, root, parent)
+        return real_target(root, parent)
 
     for verb, call in [
         ("zorder", lambda: ss.snapshot_zorder(spark, store, bits=2)),
@@ -1479,74 +1420,21 @@ def test_maintenance_verbs_race_raise_not_overwrite(spark, tmp_path, monkeypatch
         ("compact", lambda: ss.snapshot_compact(
             spark, store, target_file_bytes=10**9)),
     ]:
-        monkeypatch.setattr(ss, "_target_version", racing_target)
+        monkeypatch.setattr(manifest, "cas_target", racing_target)
         racing["armed"] = True
         try:
             with pytest.raises(ConcurrentWriteError):
                 call()
         finally:
-            monkeypatch.setattr(ss, "_target_version", real_target)
+            monkeypatch.setattr(manifest, "cas_target", real_target)
         # the interleaved append survived; the store still reads
         assert snapshot_read(spark, store).count() >= 3, verb
 
 
-def test_tip_hint_fast_path_and_fallbacks(spark, tmp_path, monkeypatch):
-    """The advisory tip hint makes resolution listing-free on the happy
-    path (proven by poisoning _list_versions) and can never change WHAT
-    resolves: stale, corrupt, and missing hints all fall back."""
-    import prometheus_parquet_server_spark.sources.snapshot_store as ss
-
-    store = f"file://{tmp_path}/hint"
-    snapshot_write(spark, store, mk(spark, [("a", {}, 1.0, 1.0)]), mode="overwrite")
-    snapshot_write(spark, store, mk(spark, [("b", {}, 2.0, 2.0)]))
-    fs = ss._StoreFS(spark, store)
-
-    # hint written by the commits and pointing at the tip
-    assert ss._read_tip_hint(fs, store) == 2
-
-    # happy path never lists the manifest dir
-    def boom(*a, **kw):
-        raise AssertionError("listing reached on the hinted fast path")
-
-    monkeypatch.setattr(ss, "_list_versions", boom)
-    v, m = ss._resolve_tip(fs, store)
-    assert (v, m["version"]) == (2, 2)
-    monkeypatch.undo()
-
-    # stale hint: points at v1; probing forward still finds v2
-    ss._write_tip_hint(fs, store, 1)
-    monkeypatch.setattr(ss, "_list_versions", boom)
-    assert ss._resolve_tip(fs, store)[0] == 2
-    monkeypatch.undo()
-
-    # corrupt hint falls back to listing (and still resolves)
-    stream = fs.fs.create(fs.jpath(f"{store}/{ss._SNAP_DIR}/{ss._TIP_HINT}"), True)
-    stream.write(bytearray(b"not-a-number"))
-    stream.close()
-    assert ss._resolve_tip(fs, store)[0] == 2
-
-    # missing hint (legacy store) falls back
-    fs.delete(f"{store}/{ss._SNAP_DIR}/{ss._TIP_HINT}")
-    assert ss._resolve_tip(fs, store)[0] == 2
-
-    # hint ahead of a deleted tip manifest (external tampering) falls back
-    ss._write_tip_hint(fs, store, 7)
-    assert ss._resolve_tip(fs, store)[0] == 2
-
-    # vacuum keeps resolution working with the hint in place
-    ss._write_tip_hint(fs, store, 2)
-    snapshot_vacuum(spark, store, keep_last=1, min_age_s=0.0)
-    assert ss._resolve_tip(fs, store)[0] == 2
-    assert snapshot_read(spark, store).count() == 2
-
-
 def test_vacuum_never_gaps_slots_between_kept_versions(spark, tmp_path):
-    """Review-found hazard: a torn junk manifest BETWEEN two kept
-    versions must survive vacuum — deleting it would punch a gap into the
-    contiguous slot sequence, and a stale tip hint probing forward would
-    stop at the gap, resolving a pre-gap tip (stale reads + a forked
-    commit). After vacuum, a hint stale at the junk's predecessor must
-    still resolve the true tip."""
+    """A torn junk manifest BETWEEN two kept versions must survive
+    vacuum — slot numbers are never reused — and the store keeps
+    resolving the true tip and numbering past the junk."""
     import prometheus_parquet_server_spark.sources.snapshot_store as ss
 
     store = f"file://{tmp_path}/gap"
@@ -1556,8 +1444,8 @@ def test_vacuum_never_gaps_slots_between_kept_versions(spark, tmp_path):
             mode="overwrite" if i == 0 else "append",
         )  # v1, v2, v3
     fs = ss._StoreFS(spark, store)
-    # torn junk at v4 (raw write, no temp+rename), then a real v5 commit
-    stream = fs.fs.create(fs.jpath(ss._manifest_path(store, 4)), True)
+    # torn junk at v4 (raw write, no temp+link), then a real v5 commit
+    stream = fs.fs.create(fs.jpath(manifest.manifest_path(store, 4)), True)
     stream.write(bytearray(b"{torn"))
     stream.close()
     v5 = snapshot_write(spark, store, mk(spark, [("e", {}, 5.0, 1.0)]))
@@ -1565,13 +1453,10 @@ def test_vacuum_never_gaps_slots_between_kept_versions(spark, tmp_path):
 
     snapshot_vacuum(spark, store, keep_last=2, min_age_s=0.0)
     # kept = {3, 5}; junk v4 must survive; v1/v2 go
-    assert fs.exists(ss._manifest_path(store, 4))
-    assert not fs.exists(ss._manifest_path(store, 1))
-    assert not fs.exists(ss._manifest_path(store, 2))
-
-    # stale hint at v3: probe-forward must cross the junk slot to v5
-    ss._write_tip_hint(fs, store, 3)
-    assert ss._resolve_tip(fs, store)[0] == 5
+    assert fs.exists(manifest.manifest_path(store, 4))
+    assert not fs.exists(manifest.manifest_path(store, 1))
+    assert not fs.exists(manifest.manifest_path(store, 2))
+    assert manifest.resolve_tip(store)[0] == 5
     # and a writer parented at the resolved tip lands at 6, not a fork
     assert snapshot_write(spark, store, mk(spark, [("f", {}, 6.0, 1.0)])) == 6
 
