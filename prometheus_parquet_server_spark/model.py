@@ -21,11 +21,10 @@ window operators shuffle-align for free.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 METRIC_COLUMNS = ["name", "labels", "ts", "value"]
-SERIES_KEY = "series_key"
 
 
 def canonical_labels_json(labels: Column) -> Column:
@@ -52,10 +51,6 @@ def series_key_col(name: Column | None = None, labels: Column | None = None) -> 
     name = F.col("name") if name is None else name
     labels = F.col("labels") if labels is None else labels
     return F.xxhash64(F.coalesce(name, F.lit("")), canonical_labels_json(labels))
-
-
-def with_series_key(df: DataFrame) -> DataFrame:
-    return df.withColumn(SERIES_KEY, series_key_col())
 
 
 def series_key_str(name: Column | None = None, labels: Column | None = None) -> Column:

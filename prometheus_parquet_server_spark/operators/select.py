@@ -87,11 +87,6 @@ def series_count(df: DataFrame) -> int:
     return df.select(series_key_col().alias("sk")).distinct().count()
 
 
-def filter_by_name(df: DataFrame, name: str) -> DataFrame:
-    """M4: all series for one metric name (src/timeseries.rs:447-457)."""
-    return df.filter(F.col("name") == name)
-
-
 def series_sets(df: DataFrame, matchers: list[LabelMatcher]) -> DataFrame:
     """Distinct (name, labels) pairs matching the selector — the
     ``/api/v1/series`` metadata query (beyond-reference: the reference has

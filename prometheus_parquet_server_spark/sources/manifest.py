@@ -854,6 +854,40 @@ def stale_temps(root: str, cutoff: float) -> list[str]:
 
 
 # ---------------------------------------------------------------------------
+# Data-file entries
+# ---------------------------------------------------------------------------
+
+
+def file_entry(
+    path: str,
+    n_rows: int,
+    n_bytes: int,
+    min_name: str,
+    max_name: str,
+    min_ts: float,
+    max_ts: float,
+) -> dict:
+    """The manifest entry of one data file, for both writers. Callers
+    pass only files whose every row passed the key guard (non-null name,
+    non-null finite ts), so the entry records ``null_free``: its min/max
+    stats DESCRIBE EVERY ROW. ``snapshot_delete``'s zero-scan drop of a
+    fully contained file requires it — min/max are null-blind, so an
+    entry without the flag (external tooling, pre-guard manifests) could
+    hide NULL-key rows inside a "contained" range and is rewritten row by
+    row instead."""
+    return {
+        "path": path,
+        "n_rows": n_rows,
+        "n_bytes": n_bytes,
+        "min_name": min_name,
+        "max_name": max_name,
+        "min_ts": min_ts,
+        "max_ts": max_ts,
+        "null_free": True,
+    }
+
+
+# ---------------------------------------------------------------------------
 # Manifest-level pruning
 # ---------------------------------------------------------------------------
 

@@ -69,7 +69,9 @@ Write (batch and streaming)
     ``df.write.format("pps_snapshot")`` commits one atomic manifest per
     job: executor tasks stream their Arrow batches into one parquet
     file each (stats measured on the same pass that writes the bytes;
-    NULL/NaN keys fail the task so nothing commits), and the driver
+    NULL/NaN keys fail the task so nothing commits, and each entry,
+    built by ``manifest.file_entry`` like snapshot_write's, records
+    ``null_free``), and the driver
     commits the manifest through :mod:`.manifest`, the one protocol
     ``snapshot_write`` and every other JVM-side verb commit through —
     exclusive publish into the CAS slot, junk-slot skipping, append
@@ -124,6 +126,7 @@ from pyspark.sql.types import StructType
 from prometheus_parquet_server_spark.sources.manifest import (
     append,
     commit,
+    file_entry,
     local_path,
     prune,
     read_manifest,
@@ -416,9 +419,10 @@ class SnapshotStreamReader(DataSourceStreamReader):
 # ---------------------------------------------------------------------------
 # Write path. Executors stream their Arrow batches straight into one
 # parquet file each under a fresh tx dir (no shuffle, no JVM hop back);
-# the driver's commit() assembles the per-file stats the tasks measured
-# into a manifest and commits it through manifest.commit/append, the
-# protocol every snapshot_store verb uses. Layout note: the Python writer
+# the driver's commit() gathers the manifest entries the tasks built
+# (manifest.file_entry, the builder snapshot_write's entries come from
+# too) and commits them through manifest.commit/append, the protocol
+# every snapshot_store verb uses. Layout note: the Python writer
 # keeps whatever partitioning the upstream plan produced — callers wanting the
 # store's name-clustered pruning layout should repartitionByRange("name",
 # "ts") first; stats stay exact either way, pruning just gets wider
@@ -428,20 +432,15 @@ class SnapshotStreamReader(DataSourceStreamReader):
 
 @dataclass
 class _FileCommit(WriterCommitMessage):
-    path: str | None
-    n_rows: int
-    n_bytes: int
-    min_name: str | None
-    max_name: str | None
-    min_ts: float | None
-    max_ts: float | None
+    entry: dict | None  # the file's manifest entry; None for an empty task
 
 
 def _write_task(iterator, tx_uri: str, columns: list[str]) -> _FileCommit:
-    """One executor task → at most one parquet file + its exact stats.
-    NULL name / NULL-or-NaN ts rows fail the TASK (so the job aborts and
-    nothing commits) — the same dirty-batch rejection snapshot_write
-    enforces, measured on the same pass that writes the bytes."""
+    """One executor task → at most one parquet file + its manifest entry
+    with exact stats. NULL name / NULL-or-NaN ts rows fail the TASK (so
+    the job aborts and nothing commits) — the same dirty-batch rejection
+    snapshot_write enforces, measured on the same pass that writes the
+    bytes, which is what lets the entry attest ``null_free``."""
     import math
     import uuid as _uuid
 
@@ -492,10 +491,12 @@ def _write_task(iterator, tx_uri: str, columns: list[str]) -> _FileCommit:
             os.unlink(lp)
         raise
     if writer is None:  # empty task — no file, no manifest entry
-        return _FileCommit(None, 0, 0, None, None, None, None)
+        return _FileCommit(None)
     writer.close()
     return _FileCommit(
-        path, n_rows, os.path.getsize(lp), min_name, max_name, min_ts, max_ts
+        file_entry(
+            path, n_rows, os.path.getsize(lp), min_name, max_name, min_ts, max_ts
+        )
     )
 
 
@@ -540,17 +541,7 @@ class SnapshotBatchWriter(DataSourceArrowWriter):
 
     def _entries(self, messages) -> list[dict]:
         return [
-            {
-                "path": m.path,
-                "n_rows": m.n_rows,
-                "n_bytes": m.n_bytes,
-                "min_name": m.min_name,
-                "max_name": m.max_name,
-                "min_ts": m.min_ts,
-                "max_ts": m.max_ts,
-            }
-            for m in messages
-            if m is not None and m.path is not None
+            m.entry for m in messages if m is not None and m.entry is not None
         ]
 
     def _commit(self, new_files: list[dict], txn: tuple[str, int] | None):

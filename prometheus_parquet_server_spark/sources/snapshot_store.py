@@ -52,14 +52,16 @@ import json
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from prometheus_parquet_server_spark.model import series_key_str
+from prometheus_parquet_server_spark.sources.footer import footer_stats, read_parquet
 from prometheus_parquet_server_spark.sources.manifest import (
     ConcurrentWriteError,  # re-exported: callers import it from here
     append,
     commit,
+    file_entry,
     history,
     list_versions,
     manifest_path,
@@ -109,18 +111,22 @@ class _StoreFS:
         ]
         return sorted(out, key=_basename)
 
-    def parquet_files(self, p) -> list[tuple[str, int]]:
-        """Recursive (path, bytes) census of ``*.parquet`` under ``p`` via
-        ``listFiles(recursive=True)`` — on object stores this is one
-        LIST call per 1000 keys, not a per-directory walk."""
+    def parquet_files(self, p) -> list[tuple[str, int, str]]:
+        """Recursive (path, bytes, uri) census of ``*.parquet`` under
+        ``p`` via ``listFiles(recursive=True)`` — on object stores this is
+        one LIST call per 1000 keys, not a per-directory walk. ``uri`` is
+        the percent-encoded form ``input_file_name()`` reports for the
+        file (``file:///x`` where the path is ``file:/x``), the form
+        manifest entries record."""
         p = self.jpath(p) if isinstance(p, str) else p
         it = self.fs.listFiles(p, True)
-        files: list[tuple[str, int]] = []
+        files: list[tuple[str, int, str]] = []
         while it.hasNext():
             st = it.next()
-            fp = str(st.getPath())
+            jp = st.getPath()
+            fp = str(jp)
             if fp.endswith(".parquet"):
-                files.append((fp, int(st.getLen())))
+                files.append((fp, int(st.getLen()), str(jp.toUri().toString())))
         return files
 
 
@@ -156,6 +162,20 @@ def snapshot_history(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
+def _key_guard(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with the commit's key guard attached: an ``Observation``
+    counting rows with a NULL name, NULL ts or NaN ts. NULL/NaN keys must
+    never commit — they would publish JSON-null (or NaN) min/max stats,
+    and every later pruned read, expire and upsert comparison on that
+    manifest then breaks; one dirty batch would wedge the store
+    permanently. Attach it after the last shuffle and sort, so the count
+    rides the write stage itself (not the range partitioner's sampling
+    job) and sees each row once."""
+    guard = Observation()
+    bad = F.col("name").isNull() | F.col("ts").isNull() | F.isnan("ts")
+    return df.observe(guard, F.count_if(bad).alias("n_bad")), guard
+
+
 def _write_data_files(
     spark: SparkSession,
     path: str,
@@ -164,9 +184,9 @@ def _write_data_files(
     num_partitions: int | None = None,
 ) -> list[dict]:
     """Write ``df`` as immutable name-clustered data files under a fresh
-    tx dir and return their manifest entries (per-file row count, size,
-    and name/ts ranges, computed by ONE narrow aggregate over the files
-    just written — no footer parsing, no driver loop).
+    tx dir and return their manifest entries (see
+    :func:`_tx_manifest_entries`: per-file row count, size and name/ts
+    ranges from the written footers; the key guard rides the write job).
 
     ``time_chunk_s`` switches the layout from name-major to
     name-then-time-major (the hypertable chunking pattern): the range key
@@ -187,13 +207,13 @@ def _write_data_files(
     staged = df.withColumn("_sk", sk)
     if time_chunk_s is not None:
         # NaN ts would floor to chunk 0 and silently mis-cluster — but the
-        # post-write stats scan rejects any NaN-ts batch wholesale, so the
-        # bucket value never reaches a committed manifest.
+        # key guard rejects any NaN-ts batch wholesale before its manifest
+        # is built, so the bucket value never reaches a committed manifest.
         staged = staged.withColumn(
             "_tc", F.floor(F.col("ts") / F.lit(float(time_chunk_s)))
         )
     range_args = ([num_partitions] if num_partitions is not None else []) + range_key
-    writer = (
+    guarded, guard = _key_guard(
         # RANGE partitioning, not hash-on-name: files stay name-contiguous
         # (tight min/max name ranges → effective manifest pruning) while a
         # hot metric still splits across tasks by series key instead of
@@ -204,11 +224,9 @@ def _write_data_files(
         # alone — ts inside the range key keeps hot names splittable.
         # num_partitions (compaction) overrides AQE's advisory sizing so
         # outputs can GRADUATE past a caller's size threshold
-        staged.repartitionByRange(*range_args)
-        .sortWithinPartitions(*range_key)
-        .drop("_sk")
-        .write.mode("overwrite")
+        staged.repartitionByRange(*range_args).sortWithinPartitions(*range_key)
     )
+    writer = guarded.drop("_sk").write.mode("overwrite")
     if time_chunk_s is not None:
         # partitionBy, not just the range key: each chunk gets its OWN
         # files regardless of how AQE coalesces the shuffle, so a chunk
@@ -217,53 +235,61 @@ def _write_data_files(
         # concrete files, so the column never resurfaces.
         writer = writer.partitionBy("_tc")
     writer.parquet(tx)
-    return _tx_manifest_entries(spark, path, tx)
+    return _tx_manifest_entries(spark, path, tx, guard)
 
 
-def _tx_manifest_entries(spark: SparkSession, path: str, tx: str) -> list[dict]:
-    """Shared post-write half of :func:`_write_data_files`: list the tx
-    dir, compute per-file manifest stats with ONE narrow aggregate,
-    reject dirty keys wholesale, return the manifest entries. Every
-    rewrite flavor (append/overwrite staging, compaction, z-order) funnels
-    here so the stats/NULL-key contract cannot drift between them."""
-    fs = _StoreFS(spark, path)
-    listed = fs.parquet_files(tx)
-    if not listed:
-        # an empty partitionBy write emits only _SUCCESS (unlike the flat
-        # path, which writes one schema-bearing empty file) — there are no
-        # data files to reference and no stats to scan; an empty batch is
-        # a legal no-op file set, not an error
-        fs.delete(tx)
-        return []
-    stats = (
-        spark.read.parquet(tx)
+def _scan_stats(spark: SparkSession, paths: list[str]) -> dict[str, tuple]:
+    """uri → ``(n_rows, min_name, max_name, min_ts, max_ts)`` of the
+    non-empty files among ``paths``, by one narrow aggregate over them —
+    the fallback for files whose footers cannot answer
+    (:func:`.footer.footer_stats`)."""
+    rows = (
+        spark.read.parquet(*paths)
         .groupBy(F.input_file_name().alias("path"))
         .agg(
-            F.count("*").alias("n_rows"),
-            F.min("name").alias("min_name"),
-            F.max("name").alias("max_name"),
-            F.min("ts").alias("min_ts"),
-            F.max("ts").alias("max_ts"),
-            # rides the same stats scan for free: NULL/NaN name/ts rows
-            # must never commit — they would publish JSON-null (or NaN)
-            # min/max stats, and every later pruned read, expire and
-            # upsert comparison on that manifest then breaks. One dirty
-            # batch would wedge the store permanently.
-            F.count_if(
-                F.col("name").isNull() | F.col("ts").isNull() | F.isnan("ts")
-            ).alias("n_bad"),
+            F.count("*"),
+            F.min("name"),
+            F.max("name"),
+            F.min("ts"),
+            F.max("ts"),
         )
         .collect()
     )
-    if not stats:
-        # the FLAT layout writes one schema-bearing empty part file for an
-        # empty batch, so `listed` was non-empty — but zero stat groups
-        # means zero rows: same no-op commit, and the tx dir must not be
-        # left orphaned (frequent empty streaming micro-batches would
-        # accumulate unreferenced dirs until vacuum)
+    return {r[0]: tuple(r[1:]) for r in rows}
+
+
+def _tx_manifest_entries(
+    spark: SparkSession, path: str, tx: str, guard: Observation
+) -> list[dict]:
+    """Shared post-write half of :func:`_write_data_files`: list the tx
+    dir, reject the batch wholesale when ``guard`` (:func:`_key_guard`,
+    attached to the write) counted a dirty key, and return one manifest
+    entry per non-empty file. Row counts and name/ts ranges come from the
+    files' footers, read on the driver; only a file whose footer cannot
+    answer (no name stats above 4 KB, a non-local scheme) is scanned.
+    Every rewrite flavor (append/overwrite staging, compaction, z-order)
+    funnels here so the stats/NULL-key contract cannot drift between
+    them."""
+    fs = _StoreFS(spark, path)
+    listed = fs.parquet_files(tx)
+    stats: dict[str, tuple] = {}
+    rescan: list[tuple[str, str]] = []
+    for p, _sz, uri in listed:
+        st = footer_stats(uri)
+        if st is None:
+            rescan.append((p, uri))
+        elif st[0]:
+            stats[uri] = st
+    if not stats and not rescan:
+        # an empty batch is a legal no-op file set, not an error: the
+        # flat layout writes one schema-bearing empty part file, an empty
+        # partitionBy write only _SUCCESS. Either way the tx dir must not
+        # be left orphaned (frequent empty streaming micro-batches would
+        # accumulate unreferenced dirs until vacuum). The guard is not
+        # consulted: no row reached the write.
         fs.delete(tx)
         return []
-    n_bad = sum(r["n_bad"] for r in stats)
+    n_bad = guard.get["n_bad"]
     if n_bad:
         fs.delete(tx)  # nothing references the tx dir yet — take it back
         raise ValueError(
@@ -271,33 +297,16 @@ def _tx_manifest_entries(spark: SparkSession, path: str, tx: str) -> list[dict]:
             f"ts, or NaN ts — the canonical model requires non-null finite "
             f"keys; clean the batch before committing"
         )
-    # the stats job reports file:///x, the FS listing file:/x — key both
-    # by the URI path component
-    sizes = {str(fs.jpath(p).toUri().getPath()): sz for p, sz in listed}
-
-    def _size(p: str) -> int:
-        return sizes.get(str(fs.jpath(p).toUri().getPath()), 0)
-
+    if rescan:
+        scanned = _scan_stats(spark, [p for p, _ in rescan])
+        stats.update((uri, scanned[uri]) for _, uri in rescan if uri in scanned)
+    if not stats:
+        fs.delete(tx)
+        return []
     return [
-        {
-            "path": r["path"],
-            "n_rows": r["n_rows"],
-            "n_bytes": _size(r["path"]),
-            "min_name": r["min_name"],
-            "max_name": r["max_name"],
-            "min_ts": r["min_ts"],
-            "max_ts": r["max_ts"],
-            # attestation the NULL-key rejection above just earned: every
-            # row in this file has non-null finite keys, so min/max stats
-            # DESCRIBE EVERY ROW. snapshot_delete's zero-scan contained
-            # drop requires it — min/max are null-blind, so a foreign
-            # file (external tooling, pre-guard manifests) could hide
-            # NULL-key rows inside a "fully contained" range; entries
-            # without the flag route to the scan-and-rewrite path where
-            # the null-safe filter decides row by row.
-            "null_free": True,
-        }
-        for r in stats
+        file_entry(uri, stats[uri][0], sz, *stats[uri][1:])
+        for _p, sz, uri in listed
+        if uri in stats
     ]
 
 
@@ -456,7 +465,7 @@ def snapshot_read(
         if m.get("schema") is not None:
             return spark.createDataFrame([], T.StructType.fromJson(m["schema"]))
         if m["files"]:  # pruned to nothing: borrow any base file's schema
-            schema = spark.read.parquet(m["files"][0]["path"]).schema
+            schema = read_parquet(spark, m["files"][0]["path"]).schema
             return spark.createDataFrame([], schema)
         raise FileNotFoundError(
             f"snapshot v{version} of {path} is empty and predates recorded schemas"
@@ -914,15 +923,13 @@ def snapshot_zorder(
     total_bytes = sum(f.get("n_bytes", 0) for f in parent_m["files"])
     n_out = max(1, -(-total_bytes // target_file_bytes)) if total_bytes else 1
     tx = f"{path}/data/tx_{uuid.uuid4().hex[:12]}"
-    (
+    guarded, guard = _key_guard(
         staged.withColumn("_z", z)
         .repartitionByRange(n_out, "_z")
         .sortWithinPartitions("_z", "name", "ts")
-        .drop("_zb_n", "_zb_t", "_z")
-        .write.mode("overwrite")
-        .parquet(tx)
     )
-    new_files = _tx_manifest_entries(spark, path, tx)
+    guarded.drop("_zb_n", "_zb_t", "_z").write.mode("overwrite").parquet(tx)
+    new_files = _tx_manifest_entries(spark, path, tx, guard)
     manifest = {
         "operation": "zorder",
         "schema": parent_m.get("schema") or _schema_json(df),
@@ -1518,7 +1525,7 @@ def snapshot_vacuum(
         for tx in fs.subdirs(data_root):
             files = fs.parquet_files(tx)
             dead = []
-            for p, _sz in files:
+            for p, _sz, _uri in files:
                 if norm(p) in live_norm:
                     continue
                 mtime = fs.fs.getFileStatus(fs.jpath(p)).getModificationTime()

@@ -12,6 +12,12 @@ Spark stance (SURVEY §2.1 S1): unzip once to a scratch directory and let
 so keeping them zipped would serialize the scan through one reader. At
 100 TB the ingest job reads an already-unzipped object-store prefix and this
 module is only the compatibility shim for the reference's input layout.
+
+Building the frame runs no Spark job: each member's schema is converted
+from its Parquet footer on the driver (:func:`.footer.read_parquet`) and
+handed to the reader, instead of one schema-inference job per member. A
+member written by Spark, or one whose footer cannot be converted, is
+inferred as before; a corrupt member fails either way and is skipped.
 """
 
 from __future__ import annotations
@@ -25,6 +31,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from prometheus_parquet_server_spark.labels import legalize_metric_name
+from prometheus_parquet_server_spark.sources.footer import read_parquet
 from prometheus_parquet_server_spark.sources.ingest import wide_to_long
 from prometheus_parquet_server_spark.sources.retag import member_prefix
 
@@ -68,7 +75,7 @@ def ingest_zip(
             fixed = (mapping or {}).get(prefix, {})
             try:
                 extracted = zf.extract(member, scratch)
-                wide = spark.read.parquet(str(extracted))
+                wide = read_parquet(spark, str(extracted))
                 if types_out is not None:
                     from prometheus_parquet_server_spark.sources.ingest import (
                         metric_type_map,
