@@ -15,8 +15,7 @@ Every reference concept maps onto one DataFrame shape:
 
 At 100 TB the physical layout is this table written
 ``partitionBy("name")`` (src/timeseries.rs:389-403's name-keyed HashMap
-becomes partition pruning) and bucketed by ``series_key`` so per-series
-window operators shuffle-align for free.
+becomes partition pruning) or the snapshot store's name-clustered files.
 """
 
 from __future__ import annotations

@@ -22,11 +22,12 @@ to the Spark job the footer replaces.
 from __future__ import annotations
 
 import json
-from urllib.parse import unquote, urlparse
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from prometheus_parquet_server_spark.sources.manifest import local_path
 
 #: footer key under which Spark records the writing frame's schema; its
 #: inference prefers that schema over converting the Parquet one
@@ -73,22 +74,22 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 
 def footer_stats(uri: str) -> tuple | None:
     """``(n_rows, min_name, max_name, min_ts, max_ts)`` of the local
-    Parquet file at ``uri`` (a bare path or a percent-encoded ``file:``
-    URI), combined over its non-empty row groups; the bounds of a
-    zero-row file are None. The two columns are found by leaf path, so
-    nested columns such as the ``labels`` map do not shift them. None
-    when the footer cannot answer: a non-empty row group carries no
-    min/max for either column (parquet-mr drops binary statistics above
-    4 KB), or the file cannot be opened or is not local — pyarrow
-    resolves object stores with its own credentials, not the Hadoop conf
-    the data was written with."""
+    Parquet file at ``uri`` (a bare path or a manifest entry path, see
+    :func:`.manifest.data_file_path`), combined over its non-empty row
+    groups; the bounds of a zero-row file are None. The two columns are
+    found by leaf path, so nested columns such as the ``labels`` map do
+    not shift them. None when the footer cannot answer: a non-empty row
+    group carries no min/max for either column (parquet-mr drops binary
+    statistics above 4 KB), or the file cannot be opened or is not
+    local — pyarrow resolves object stores with its own credentials, not
+    the Hadoop conf the data was written with."""
     import pyarrow.parquet as pq
 
-    u = urlparse(uri)
-    if u.scheme not in ("", "file"):
+    lp = local_path(uri)
+    if lp is None:
         return None
     try:
-        md = pq.read_metadata(unquote(u.path) if u.scheme else uri)
+        md = pq.read_metadata(lp)
     except (OSError, ValueError):  # missing or corrupt: the scan decides
         return None
     if not md.num_rows:

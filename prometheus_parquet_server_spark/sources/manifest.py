@@ -75,6 +75,24 @@ def local_path(uri: str) -> str | None:
     return None
 
 
+def data_file_path(p: str, encoded: bool = False) -> str:
+    """The path a manifest entry records for a data file:
+    ``scheme://authority/path`` with the path NOT percent-encoded, the
+    form Hadoop's ``Path`` (so ``spark.read``) and :func:`local_path`
+    open literally. ``p`` is a Hadoop listing path (``file:/a b/f``), a
+    recorded entry or a bare local path; with ``encoded=True`` it is the
+    percent-encoded URI ``input_file_name()`` reports
+    (``file:///a%20b/f``). Equal files give equal strings, so vacuum
+    compares listings with entries through it."""
+    if encoded:
+        from urllib.parse import unquote, urlsplit
+
+        u = urlsplit(p)
+        p = f"{u.scheme}://{u.netloc}{unquote(u.path)}" if u.scheme else unquote(p)
+    lp = local_path(p)
+    return p if lp is None else f"file://{lp}"
+
+
 # ---------------------------------------------------------------------------
 # Object-store commit backends
 # ---------------------------------------------------------------------------
@@ -706,6 +724,61 @@ def commit(root: str, parent: int | None, manifest: dict) -> int:
     )
 
 
+def new_manifest(
+    operation: str, schema: dict | None, files: list[dict], properties=None, **extra
+) -> dict:
+    """The body :func:`commit` stamps: ``operation``, any ``extra`` keys
+    (``cloned_from``, ``restored_version``), ``schema``, ``files`` and,
+    when non-empty, ``properties``."""
+    m = {"operation": operation, **extra, "schema": schema, "files": files}
+    if properties:
+        m["properties"] = properties
+    return m
+
+
+def commit_properties(
+    verb: str,
+    parent_m: dict | None,
+    properties: dict | None = None,
+    txn: tuple[str, int] | None = None,
+    time_chunk_s: float | None = None,
+) -> dict | None:
+    """The properties a commit on top of ``parent_m`` records — the one
+    property/txn policy of every writer. The parent's set carries over
+    (pass None for a fresh start); ``txn=(app_id, version)`` returns None
+    when the parent already records ``txn_<app_id>`` >= ``version`` (a
+    redelivered batch: commit nothing) and records the marker otherwise;
+    ``properties`` merge over the carried set, and a value that conflicts
+    with a recorded one raises ValueError naming ``verb``;
+    ``time_chunk_s`` pins the layout property. The txn marker is
+    monotonic and bypasses the conflict check."""
+    props = dict((parent_m or {}).get("properties") or {})
+    if txn is not None:
+        app_id, version = txn
+        if not app_id or "\n" in str(app_id):
+            raise ValueError(f"txn app_id must be a non-empty line, got {app_id!r}")
+        key = f"txn_{app_id}"
+        if key in props and int(version) <= int(props[key]):
+            return None
+    if properties:
+        conflicts = {
+            k: (props[k], v)
+            for k, v in properties.items()
+            if k in props and props[k] != v
+        }
+        if conflicts:
+            raise ValueError(
+                f"{verb}: properties conflict with the store's recorded "
+                f"values (recorded, supplied): {conflicts}"
+            )
+        props.update(properties)
+    if time_chunk_s is not None:
+        props["time_chunk_s"] = float(time_chunk_s)
+    if txn is not None:
+        props[key] = int(version)
+    return props
+
+
 def append(
     root: str,
     new_files: list[dict],
@@ -725,13 +798,11 @@ def append(
     committed version.
 
     Per parent: the schema is gated by :func:`validated_append_schema`;
-    the parent's files and properties carry over; ``properties`` merge
-    over them and a conflicting value raises ValueError; ``time_chunk_s``
-    pins the layout property; ``txn=(app_id, version)`` records the
-    writer's marker ``txn_<app_id>`` and returns the parent WITHOUT
-    committing when the parent already records a version >= it (a
-    redelivered batch). ``require_parent`` raises ConcurrentWriteError
-    instead of rebasing when the parent is another version. ``tip`` is a
+    the parent's files carry over and its properties follow
+    :func:`commit_properties` (``properties``, ``txn`` and
+    ``time_chunk_s``; a redelivered ``txn`` returns the parent WITHOUT
+    committing). ``require_parent`` raises ConcurrentWriteError instead
+    of rebasing when the parent is another version. ``tip`` is a
     (version, manifest) pair the caller already resolved."""
     parent, parent_m = tip if tip is not None else resolve_tip(root)
     for attempt in range(MAX_COMMIT_RETRIES):
@@ -742,33 +813,15 @@ def append(
                 f"append required parent v{require_parent} but tip is v{parent}"
             )
         pm = parent_m or {}
-        props = dict(pm.get("properties") or {})
-        if properties:
-            conflicts = {
-                k: (props[k], v)
-                for k, v in properties.items()
-                if k in props and props[k] != v
-            }
-            if conflicts:
-                raise ValueError(
-                    f"append: properties conflict with the store's recorded "
-                    f"values (recorded, supplied): {conflicts}"
-                )
-            props.update(properties)
-        if time_chunk_s is not None:
-            props["time_chunk_s"] = float(time_chunk_s)
-        if txn is not None:
-            key = f"txn_{txn[0]}"
-            if key in props and int(txn[1]) <= int(props[key]):
-                return parent  # already committed by this writer
-            props[key] = int(txn[1])
-        manifest = {
-            "operation": "append",
-            "schema": validated_append_schema(pm.get("schema"), schema, merge_schema),
-            "files": pm.get("files", []) + new_files,
-        }
-        if props:
-            manifest["properties"] = props
+        props = commit_properties("append", pm, properties, txn, time_chunk_s)
+        if props is None:
+            return parent  # already committed by this writer
+        manifest = new_manifest(
+            "append",
+            validated_append_schema(pm.get("schema"), schema, merge_schema),
+            pm.get("files", []) + new_files,
+            props,
+        )
         try:
             return commit(root, parent, manifest)
         except ConcurrentWriteError:
@@ -927,3 +980,22 @@ def prune(
     if ts_lo > float("-inf") or ts_hi < float("inf"):
         out = [f for f in out if ts_overlaps(f, ts_lo, ts_hi)]
     return out
+
+
+def contained(f: dict, names=None, ts_range: tuple[float, float] | None = None) -> bool:
+    """Can every row a file entry holds be proven, from its stats alone,
+    to have a name in ``names`` (None = no name predicate) and ts in
+    ``ts_range`` (None = no ts predicate)? Provable only for a
+    single-name file under a names predicate and non-null ts stats inside
+    the range. min/max stats are null-blind, so a caller that DROPS
+    contained files must also require ``null_free``."""
+    if names is not None:
+        if f.get("min_name") is None or f["min_name"] != f.get("max_name"):
+            return False
+        if f["min_name"] not in names:
+            return False
+    if ts_range is not None:
+        mn, mx = f.get("min_ts"), f.get("max_ts")
+        if mn is None or mx is None or not (ts_range[0] <= mn and mx <= ts_range[1]):
+            return False
+    return True

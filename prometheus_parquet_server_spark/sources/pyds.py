@@ -126,8 +126,10 @@ from pyspark.sql.types import StructType
 from prometheus_parquet_server_spark.sources.manifest import (
     append,
     commit,
+    commit_properties,
     file_entry,
     local_path,
+    new_manifest,
     prune,
     read_manifest,
     resolve,
@@ -547,21 +549,16 @@ class SnapshotBatchWriter(DataSourceArrowWriter):
     def _commit(self, new_files: list[dict], txn: tuple[str, int] | None):
         tip = resolve_tip(self._root)
         if self._overwrite:
-            manifest = {
-                "operation": "overwrite",
-                "schema": json.loads(self._schema.json()),
-                "files": new_files,
-            }
+            manifest = new_manifest(
+                "overwrite", json.loads(self._schema.json()), new_files
+            )
             commit(self._root, tip[0], manifest)
             return
-        if txn is not None:
+        if commit_properties("append", tip[1], txn=txn) is None:
             # a redelivered micro-batch drops its files; append re-checks
             # the marker against whichever parent it lands on
-            props = (tip[1] or {}).get("properties") or {}
-            recorded = props.get(f"txn_{txn[0]}")
-            if recorded is not None and int(txn[1]) <= int(recorded):
-                self._drop(new_files)
-                return
+            self._drop(new_files)
+            return
         append(
             self._root, new_files, self._schema, self._merge, tip=tip, txn=txn
         )

@@ -28,6 +28,15 @@ usually touches one file per commit). The recorded schema makes a
 legitimately EMPTY snapshot (everything expired / empty overwrite)
 readable as an empty frame instead of an error.
 
+Maintenance: every rewriting verb (upsert, merge, compact, expire,
+delete, update) is a ``pick`` of the entries to drop or read back plus a
+``transform`` of what it read, run by one rewrite commit
+(:func:`_rewrite`): resolve the tip, read through the recorded schema,
+write with the inherited layout, and commit the parent's schema and
+properties (:func:`.manifest.commit_properties`). Z-order shares its
+reader and commit tail; clone and restore only commit. Entries record
+each data file's literal path (:func:`.manifest.data_file_path`).
+
 Concurrency: every read and write of ``_snapshots/`` goes through the
 Spark-free manifest protocol (:mod:`.manifest`), which the Python data
 source's writers (:mod:`.pyds`) share. A commit prepared against a parent
@@ -61,11 +70,15 @@ from prometheus_parquet_server_spark.sources.manifest import (
     ConcurrentWriteError,  # re-exported: callers import it from here
     append,
     commit,
+    commit_properties,
+    contained,
+    data_file_path,
     file_entry,
     history,
     list_versions,
     manifest_path,
     name_overlaps,
+    new_manifest,
     prune,
     read_manifest,
     resolve,
@@ -111,22 +124,19 @@ class _StoreFS:
         ]
         return sorted(out, key=_basename)
 
-    def parquet_files(self, p) -> list[tuple[str, int, str]]:
-        """Recursive (path, bytes, uri) census of ``*.parquet`` under
-        ``p`` via ``listFiles(recursive=True)`` — on object stores this is
-        one LIST call per 1000 keys, not a per-directory walk. ``uri`` is
-        the percent-encoded form ``input_file_name()`` reports for the
-        file (``file:///x`` where the path is ``file:/x``), the form
-        manifest entries record."""
+    def parquet_files(self, p) -> list[tuple[str, int]]:
+        """Recursive (path, bytes) census of ``*.parquet`` under ``p`` via
+        ``listFiles(recursive=True)`` — on object stores this is one LIST
+        call per 1000 keys, not a per-directory walk. Paths are in the
+        form manifest entries record (:func:`.manifest.data_file_path`)."""
         p = self.jpath(p) if isinstance(p, str) else p
         it = self.fs.listFiles(p, True)
-        files: list[tuple[str, int, str]] = []
+        files: list[tuple[str, int]] = []
         while it.hasNext():
             st = it.next()
-            jp = st.getPath()
-            fp = str(jp)
+            fp = str(st.getPath())
             if fp.endswith(".parquet"):
-                files.append((fp, int(st.getLen()), str(jp.toUri().toString())))
+                files.append((data_file_path(fp), int(st.getLen())))
         return files
 
 
@@ -239,9 +249,9 @@ def _write_data_files(
 
 
 def _scan_stats(spark: SparkSession, paths: list[str]) -> dict[str, tuple]:
-    """uri → ``(n_rows, min_name, max_name, min_ts, max_ts)`` of the
-    non-empty files among ``paths``, by one narrow aggregate over them —
-    the fallback for files whose footers cannot answer
+    """entry path → ``(n_rows, min_name, max_name, min_ts, max_ts)`` of
+    the non-empty files among ``paths``, by one narrow aggregate over
+    them — the fallback for files whose footers cannot answer
     (:func:`.footer.footer_stats`)."""
     rows = (
         spark.read.parquet(*paths)
@@ -255,7 +265,7 @@ def _scan_stats(spark: SparkSession, paths: list[str]) -> dict[str, tuple]:
         )
         .collect()
     )
-    return {r[0]: tuple(r[1:]) for r in rows}
+    return {data_file_path(r[0], encoded=True): tuple(r[1:]) for r in rows}
 
 
 def _tx_manifest_entries(
@@ -273,13 +283,13 @@ def _tx_manifest_entries(
     fs = _StoreFS(spark, path)
     listed = fs.parquet_files(tx)
     stats: dict[str, tuple] = {}
-    rescan: list[tuple[str, str]] = []
-    for p, _sz, uri in listed:
-        st = footer_stats(uri)
+    rescan: list[str] = []
+    for p, _sz in listed:
+        st = footer_stats(p)
         if st is None:
-            rescan.append((p, uri))
+            rescan.append(p)
         elif st[0]:
-            stats[uri] = st
+            stats[p] = st
     if not stats and not rescan:
         # an empty batch is a legal no-op file set, not an error: the
         # flat layout writes one schema-bearing empty part file, an empty
@@ -298,38 +308,117 @@ def _tx_manifest_entries(
             f"keys; clean the batch before committing"
         )
     if rescan:
-        scanned = _scan_stats(spark, [p for p, _ in rescan])
-        stats.update((uri, scanned[uri]) for _, uri in rescan if uri in scanned)
+        scanned = _scan_stats(spark, rescan)
+        stats.update((p, scanned[p]) for p in rescan if p in scanned)
     if not stats:
         fs.delete(tx)
         return []
     return [
-        file_entry(uri, stats[uri][0], sz, *stats[uri][1:])
-        for _p, sz, uri in listed
-        if uri in stats
+        file_entry(p, stats[p][0], sz, *stats[p][1:])
+        for p, sz in listed
+        if p in stats
     ]
 
 
-def _pinned_reader(spark: SparkSession, parent_m: dict | None):
+def _pinned_reader(spark: SparkSession, m: dict | None):
     """A reader pinned to the manifest-recorded schema when one exists —
-    every maintenance rewrite (upsert, merge, compact, expire) must read
-    base files through it, or a schema-evolved store's heterogeneous
-    files make the rewrite depend on which footer Spark sampled (and a
-    file predating a merged column would DROP that column from the
-    rewritten rows)."""
-    if parent_m is not None and parent_m.get("schema") is not None:
+    every read of a manifest's files goes through it, or a
+    schema-evolved store's heterogeneous files make the result depend on
+    which footer Spark sampled (and a file predating a merged column
+    would DROP that column from rewritten rows)."""
+    if m is not None and m.get("schema") is not None:
         from pyspark.sql import types as T
 
-        return spark.read.schema(T.StructType.fromJson(parent_m["schema"]))
+        return spark.read.schema(T.StructType.fromJson(m["schema"]))
     return spark.read
 
 
 def _inherited_chunk(parent_m: dict | None) -> float | None:
-    """The store's pinned ``time_chunk_s`` layout property, if any — every
-    maintenance rewrite (upsert, merge, compact, expire) must re-apply it
-    or the rewritten files silently fall back to the name-major layout."""
+    """The store's pinned ``time_chunk_s`` layout property, if any — a
+    rewrite must re-apply it or the rewritten files silently fall back
+    to the name-major layout."""
     tc = ((parent_m or {}).get("properties") or {}).get("time_chunk_s")
     return float(tc) if tc is not None else None
+
+
+def _commit_like(
+    path: str,
+    parent: int | None,
+    like: dict | None,
+    operation: str,
+    files: list[dict],
+    schema: dict | None = None,
+    props: dict | None = None,
+    **extra,
+) -> int:
+    """Commit ``files`` as ``operation`` on ``parent``, recording
+    ``like``'s schema (else ``schema``) and ``like``'s properties (or
+    ``props`` when the caller already merged them) — the tail every
+    maintenance verb shares. ``like`` is the parent manifest, or the
+    manifest a clone or restore copies."""
+    if props is None:
+        props = commit_properties(operation, like)
+    schema = (like or {}).get("schema") or schema
+    return commit(path, parent, new_manifest(operation, schema, files, props, **extra))
+
+
+def _rewrite(
+    spark: SparkSession,
+    path: str,
+    operation: str,
+    pick,
+    transform,
+    *,
+    tip: tuple[int | None, dict | None] | None = None,
+    props: dict | None = None,
+    num_partitions: int | None = None,
+    refusal: str | None = None,
+) -> int | None:
+    """One rewriting commit, the path every maintenance verb but z-order
+    takes: resolve the tip (unless the caller passes ``tip``); ask
+    ``pick(files)`` for ``(drop, rewrite)`` — entries that leave without
+    a scan and entries to read back — or None when there is nothing to
+    do; read ``rewrite`` through :func:`_pinned_reader` (None when
+    empty) and write ``transform(existing)`` unless it is None, with the
+    inherited ``time_chunk_s``; commit the files nobody picked plus the
+    new ones on the parent's schema (else the output's) and properties
+    (or ``props``). ``refusal`` replaces the write's NULL-key rejection
+    text with the verb's own. Returns the version, or None."""
+    parent, parent_m = resolve_tip(path) if tip is None else tip
+    base: list[dict] = parent_m["files"] if parent_m else []
+    picked = pick(base)
+    if picked is None:
+        return None
+    drop, rewrite = picked
+    # set-of-paths membership: a list `in` is O(files x picked) full-dict
+    # comparisons — quadratic at the ~1e5-file stores the manifest targets
+    gone = {f["path"] for f in drop} | {f["path"] for f in rewrite}
+    files = [f for f in base if f["path"] not in gone]
+    existing = (
+        _pinned_reader(spark, parent_m).parquet(*[f["path"] for f in rewrite])
+        if rewrite
+        else None
+    )
+    out = transform(existing)
+    schema = None
+    if out is not None:
+        schema = _schema_json(out)
+        try:
+            files += _write_data_files(
+                spark, path, out, time_chunk_s=_inherited_chunk(parent_m),
+                num_partitions=num_partitions,
+            )
+        except ValueError as e:
+            if refusal is None or "NULL name" not in str(e):
+                raise
+            raise ValueError(f"{refusal} Original: {e}") from e
+    return _commit_like(path, parent, parent_m, operation, files, schema, props)
+
+
+def _surviving(cond):
+    """A :func:`_rewrite` transform keeping the rows where ``cond``
+    holds; with nothing to rewrite it writes nothing."""
+    return lambda existing: None if existing is None else existing.filter(cond)
 
 
 def snapshot_write(
@@ -392,54 +481,37 @@ def snapshot_write(
     against the new tip."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be 'append' or 'overwrite', got {mode!r}")
-    txn_key = None
     if require_parent is not None and mode != "append":
         raise ValueError("snapshot_write: require_parent is append-only")
-    if txn is not None:
-        if mode != "append":
-            raise ValueError("snapshot_write: txn markers are append-only")
-        app_id, txn_version = txn
-        if not app_id or "\n" in str(app_id):
-            raise ValueError(f"txn app_id must be a non-empty line, got {app_id!r}")
-        txn_key = f"txn_{app_id}"
+    if txn is not None and mode != "append":
+        raise ValueError("snapshot_write: txn markers are append-only")
     # one tip resolve serves both layout inheritance and the commit's
     # expected-parent check — appends run per streaming micro-batch, so
     # a second directory listing + manifest read per call is real driver
     # I/O, not noise
     expected, expected_m = resolve_tip(path)
-    if txn_key is not None and expected_m is not None:
-        recorded = ((expected_m.get("properties") or {})).get(txn_key)
-        if recorded is not None and int(txn[1]) <= int(recorded):
-            return expected  # already committed — redelivery no-op, no write
-    if mode == "append":
-        if time_chunk_s is None:
-            time_chunk_s = _inherited_chunk(expected_m)
-        # validate BEFORE writing data files — a rejected batch must not
-        # leave a tx dir for vacuum to sweep
-        validated_append_schema(
-            (expected_m or {}).get("schema"), df.schema, merge_schema
-        )
+    if mode == "overwrite":
+        # a fresh start: no inherited properties
+        props = commit_properties("overwrite", None, properties, None, time_chunk_s)
+        new_files = _write_data_files(spark, path, df, time_chunk_s=time_chunk_s)
+        manifest = new_manifest("overwrite", _schema_json(df), new_files, props)
+        return commit(path, expected, manifest)
+    if time_chunk_s is None:
+        time_chunk_s = _inherited_chunk(expected_m)
+    # validate BEFORE writing data files — a redelivered batch, a
+    # conflicting property or a rejected schema must not leave a tx dir
+    # for vacuum to sweep
+    if commit_properties("append", expected_m, properties, txn, time_chunk_s) is None:
+        return expected  # already committed — redelivery no-op, no write
+    validated_append_schema((expected_m or {}).get("schema"), df.schema, merge_schema)
     new_files = _write_data_files(spark, path, df, time_chunk_s=time_chunk_s)
-    if mode == "append":
-        # a rebase lands on a DIFFERENT parent: manifest.append re-gates
-        # the schema and re-checks properties and the txn marker there
-        return append(
-            path, new_files, df.schema, merge_schema,
-            tip=(expected, expected_m), properties=properties, txn=txn,
-            require_parent=require_parent, time_chunk_s=time_chunk_s,
-        )
-    # an overwrite is a fresh start: no inherited properties
-    props = dict(properties or {})
-    if time_chunk_s is not None:
-        props["time_chunk_s"] = float(time_chunk_s)
-    manifest = {
-        "operation": "overwrite",
-        "schema": _schema_json(df),
-        "files": new_files,
-    }
-    if props:
-        manifest["properties"] = props
-    return commit(path, expected, manifest)
+    # a rebase lands on a DIFFERENT parent: manifest.append re-gates the
+    # schema and re-applies the property/txn policy there
+    return append(
+        path, new_files, df.schema, merge_schema,
+        tip=(expected, expected_m), properties=properties, txn=txn,
+        require_parent=require_parent, time_chunk_s=time_chunk_s,
+    )
 
 
 def snapshot_read(
@@ -470,17 +542,7 @@ def snapshot_read(
         raise FileNotFoundError(
             f"snapshot v{version} of {path} is empty and predates recorded schemas"
         )
-    reader = spark.read
-    if m.get("schema") is not None:
-        # pin the scan to the manifest-recorded schema: with merge_schema
-        # evolution the files are heterogeneous, and letting Spark infer
-        # from a sampled footer makes the visible column set depend on
-        # WHICH file it sampled — the recorded schema is the store's
-        # truth, and files missing a column null-fill deterministically
-        from pyspark.sql import types as T
-
-        reader = reader.schema(T.StructType.fromJson(m["schema"]))
-    df = reader.parquet(*[f["path"] for f in files])
+    df = _pinned_reader(spark, m).parquet(*[f["path"] for f in files])
     if names is not None:
         df = df.filter(F.col("name").isin(names))
     if ts_range is not None:
@@ -495,66 +557,82 @@ def snapshot_upsert(spark: SparkSession, path: str, updates: DataFrame) -> int:
     cost is proportional to the touched data, not the store. A commit race
     raises :class:`ConcurrentWriteError` (the merge read a tip that moved;
     blind rebase could lose the racer's rows)."""
+    v = _merge(spark, path, updates, _replace_by_key, "upsert", gate_updates=True)
+    return (snapshot_version(spark, path) or 0) if v is None else v
+
+
+def _replace_by_key(existing: DataFrame | None, updates: DataFrame) -> DataFrame:
+    """:func:`snapshot_upsert`'s combine: an update replaces the stored
+    sample with the same (series key, ts); among duplicate updates the
+    highest value wins, whatever the shuffle layout."""
+    merged = updates.withColumn("_prio", F.lit(0))
+    if existing is not None:
+        merged = merged.unionByName(
+            existing.withColumn("_prio", F.lit(1)).select(*merged.columns)
+        )
+    merged = merged.withColumn("_sk", series_key_str())
+    w = Window.partitionBy("_sk", "ts").orderBy("_prio", F.col("value").desc())
+    return (
+        merged.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_prio", "_rn", "_sk")
+    )
+
+
+def _merge(
+    spark: SparkSession,
+    path: str,
+    updates: DataFrame,
+    combine,
+    operation: str,
+    *,
+    properties: dict | None = None,
+    txn: tuple[str, int] | None = None,
+    num_partitions: int | None = None,
+    gate_updates: bool = False,
+) -> int | None:
+    """The touched-files rewrite behind :func:`snapshot_merge` and
+    :func:`snapshot_upsert`: files whose name range meets the updates'
+    names are replaced by ``combine(existing, updates)``, gated against
+    the recorded schema (and, with ``gate_updates``, so are the updates
+    themselves, before anything is read). Returns None for an empty
+    update batch."""
+    verb = f"snapshot_{operation}"
     updates = updates.cache()
     try:
-        distinct_names = [
-            r["name"] for r in updates.select("name").distinct().collect()
-        ]
-        # same contract _write_data_files enforces, surfaced before any
-        # work happens (and before sorted() trips over None): NULL names
-        # have no place in the canonical model
-        if any(n is None for n in distinct_names):
+        names = [r["name"] for r in updates.select("name").distinct().collect()]
+        # the contract _write_data_files enforces, surfaced before any
+        # work happens: NULL names have no place in the canonical model
+        if any(n is None for n in names):
             raise ValueError(
-                "snapshot_upsert: updates contain NULL metric names — "
+                f"{verb}: updates contain NULL metric names — "
                 "clean the batch before committing"
             )
-        names = sorted(distinct_names)
         if not names:
-            return snapshot_version(spark, path) or 0
-        parent, parent_m = resolve_tip(path)
-        base_files: list[dict] = parent_m["files"] if parent_m else []
-        touched = [f for f in base_files if name_overlaps(f, names)]
-        # set-of-paths membership: list `in` is O(files x touched) full-dict
-        # comparisons on the driver — quadratic at the ~1e5-file stores the
-        # manifest design targets
-        _tp = {f["path"] for f in touched}
-        kept = [f for f in base_files if f["path"] not in _tp]
-        # strict schema check (the append gate's upsert twin): updates
-        # that dropped a store column would silently erase it from every
-        # rewritten row of the touched files
-        validated_append_schema(
-            (parent_m or {}).get("schema"), updates.schema, merge_schema=False
+            return None
+        tip = parent, parent_m = resolve_tip(path)
+        props = commit_properties(verb, parent_m, properties, txn)
+        if props is None:
+            return parent  # this batch already folded — redelivery no-op
+        recorded = (parent_m or {}).get("schema")
+        if gate_updates:
+            # updates that dropped a store column would silently erase it
+            # from every rewritten row of the touched files
+            validated_append_schema(recorded, updates.schema, merge_schema=False)
+
+        def fold(existing):
+            out = combine(existing, updates)
+            # the combined frame replaces the touched files — a schema
+            # drift here (combine dropped or retyped a column) is the same
+            # wedge/erasure hazard the append gate closes
+            validated_append_schema(recorded, out.schema, merge_schema=False)
+            return out
+
+        return _rewrite(
+            spark, path, operation,
+            lambda files: ([], [f for f in files if name_overlaps(f, names)]),
+            fold, tip=tip, props=props, num_partitions=num_partitions,
         )
-        merged = updates.withColumn("_prio", F.lit(0))
-        if touched:
-            existing = _pinned_reader(spark, parent_m).parquet(
-                *[f["path"] for f in touched]
-            ).withColumn("_prio", F.lit(1))
-            merged = merged.unionByName(existing.select(*merged.columns))
-        merged = merged.withColumn("_sk", series_key_str())
-        w = Window.partitionBy("_sk", "ts").orderBy("_prio", F.col("value").desc())
-        out = (
-            merged.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_prio", "_rn", "_sk")
-        )
-        new_files = _write_data_files(
-            spark, path, out, time_chunk_s=_inherited_chunk(parent_m)
-        )
-        _props = (parent_m or {}).get("properties")
-        manifest = {
-            "operation": "upsert",
-            # most files carry over from the base, so the PARENT's schema
-            # is the store's schema; recording the updates' schema would
-            # let a differently-ordered or narrower update batch change
-            # what a later empty/fully-pruned read reports
-            "schema": (parent_m.get("schema") if parent_m else None)
-            or _schema_json(updates),
-            "files": kept + new_files,
-        }
-        if _props:
-            manifest["properties"] = _props
-        return commit(path, parent, manifest)
     finally:
         updates.unpersist()
 
@@ -618,86 +696,18 @@ def snapshot_merge(
     overhead per commit and multiplies the files every later read-back
     opens. None keeps the adaptive default (unbounded stores).
     """
-    updates = updates.cache()
-    try:
-        distinct_names = [
-            r["name"] for r in updates.select("name").distinct().collect()
-        ]
-        if any(n is None for n in distinct_names):
-            raise ValueError(
-                "snapshot_merge: updates contain NULL metric names — "
-                "clean the batch before committing"
-            )
-        names = sorted(distinct_names)
-        if not names:
-            v = snapshot_version(spark, path)
-            if v is None:
-                raise FileNotFoundError(
-                    f"snapshot_merge: empty updates on uninitialized store "
-                    f"{path} — nothing to commit and no version to return"
-                )
-            return v
-        parent, parent_m = resolve_tip(path)
-        parent_props = (parent_m or {}).get("properties") or {}
-        txn_key = None
-        if txn is not None:
-            app_id, txn_version = txn
-            if not app_id or "\n" in str(app_id):
-                raise ValueError(f"txn app_id must be a non-empty line, got {app_id!r}")
-            txn_key = f"txn_{app_id}"
-            recorded = parent_props.get(txn_key)
-            if recorded is not None and int(txn_version) <= int(recorded):
-                if parent is None:  # unreachable: recorded implies a manifest
-                    raise FileNotFoundError(path)
-                return parent  # this batch already folded — redelivery no-op
-        if properties:
-            conflicts = {
-                k: (parent_props[k], v)
-                for k, v in properties.items()
-                if k in parent_props and parent_props[k] != v
-            }
-            if conflicts:
-                raise ValueError(
-                    f"snapshot_merge: properties conflict with the store's "
-                    f"recorded values (recorded, supplied): {conflicts}"
-                )
-        merged_props = {**parent_props, **(properties or {})}
-        if txn_key is not None:
-            merged_props[txn_key] = int(txn[1])
-        base_files: list[dict] = parent_m["files"] if parent_m else []
-        touched = [f for f in base_files if name_overlaps(f, names)]
-        # set-of-paths membership: list `in` is O(files x touched) full-dict
-        # comparisons on the driver — quadratic at the ~1e5-file stores the
-        # manifest design targets
-        _tp = {f["path"] for f in touched}
-        kept = [f for f in base_files if f["path"] not in _tp]
-        existing = (
-            _pinned_reader(spark, parent_m).parquet(*[f["path"] for f in touched])
-            if touched
-            else None
+    v = _merge(
+        spark, path, updates, combine, "merge",
+        properties=properties, txn=txn, num_partitions=num_partitions,
+    )
+    if v is None:
+        v = snapshot_version(spark, path)
+    if v is None:
+        raise FileNotFoundError(
+            f"snapshot_merge: empty updates on uninitialized store "
+            f"{path} — nothing to commit and no version to return"
         )
-        out = combine(existing, updates)
-        # the combined frame replaces the touched files — a schema drift
-        # here (combine dropped or retyped a column) is the same
-        # wedge/erasure hazard the append gate closes
-        validated_append_schema(
-            (parent_m or {}).get("schema"), out.schema, merge_schema=False
-        )
-        new_files = _write_data_files(
-            spark, path, out, time_chunk_s=_inherited_chunk(parent_m),
-            num_partitions=num_partitions,
-        )
-        manifest = {
-            "operation": "merge",
-            "schema": (parent_m.get("schema") if parent_m else None)
-            or _schema_json(out),
-            "files": kept + new_files,
-        }
-        if merged_props:
-            manifest["properties"] = merged_props
-        return commit(path, parent, manifest)
-    finally:
-        updates.unpersist()
+    return v
 
 
 def snapshot_stats(
@@ -712,9 +722,7 @@ def snapshot_stats(
     snapshot, answered from MANIFEST ARITHMETIC wherever possible.
 
     A file is CONTAINED when every row it can hold satisfies the
-    predicate (ts: ``lo <= min_ts and max_ts <= hi``; names: the file is
-    single-name — ``min_name == max_name`` — and that name is selected;
-    no-predicate: always). Contained files contribute their recorded
+    predicate (:func:`.manifest.contained`). Contained files contribute their recorded
     ``n_rows``/ranges without being opened; only BOUNDARY files (ranges
     intersect the predicate but are not contained, or null stats) are
     scanned with the residual row filter. So an UNFILTERED stats query
@@ -731,21 +739,8 @@ def snapshot_stats(
     version, m = resolve(path, version)
     lo, hi = ts_range if ts_range is not None else (float("-inf"), float("inf"))
     files = prune(m["files"], names, lo, hi)
-
-    def _contained(f: dict) -> bool:
-        if names is not None:
-            if f.get("min_name") is None or f["min_name"] != f.get("max_name"):
-                return False
-            if f["min_name"] not in names:
-                return False
-        if ts_range is not None:
-            mn, mx = f.get("min_ts"), f.get("max_ts")
-            if mn is None or mx is None or not (lo <= mn and mx <= hi):
-                return False
-        return True
-
-    inside = [f for f in files if _contained(f)]
-    boundary = [f for f in files if not _contained(f)]
+    inside = [f for f in files if contained(f, names, ts_range)]
+    boundary = [f for f in files if not contained(f, names, ts_range)]
 
     n_rows = sum(f["n_rows"] for f in inside)
     mins_n = [f["min_name"] for f in inside if f.get("min_name") is not None]
@@ -816,23 +811,11 @@ def snapshot_compact(
     manifests without a recorded size are treated as small (rewritten
     once, gaining a size entry). Returns the new version, or None if
     there was nothing to compact."""
-    parent, parent_m = resolve_tip(path)
-    if parent is None:
-        return None
-    base = parent_m["files"]
+    tip = resolve_tip(path)
+    base = tip[1]["files"] if tip[1] else []
     small = [f for f in base if f.get("n_bytes", 0) < target_file_bytes]
-    if len(small) < min_files_to_compact:
+    if tip[0] is None or len(small) < min_files_to_compact:
         return None
-    _sp = {f["path"] for f in small}  # paths are unique manifest keys
-    kept = [f for f in base if f["path"] not in _sp]
-    _reader = spark.read
-    if parent_m.get("schema") is not None:
-        # schema-evolved stores hold heterogeneous files — pin the rewrite
-        # to the recorded schema so compaction output is homogeneous
-        from pyspark.sql import types as T
-
-        _reader = _reader.schema(T.StructType.fromJson(parent_m["schema"]))
-    df = _reader.parquet(*[f["path"] for f in small])
     # aim the rewrite at ~target-sized OUTPUT files: without an explicit
     # partition count, AQE's ~64 MB advisory keeps every output below a
     # 128 MB target forever, so each later compaction re-reads the same
@@ -841,19 +824,10 @@ def snapshot_compact(
     # the threshold and carry over by reference next time.
     small_bytes = sum(f.get("n_bytes", 0) for f in small)
     n_out = max(1, -(-small_bytes // target_file_bytes)) if small_bytes else 1
-    # a time-chunked store keeps its layout through compaction
-    new_files = _write_data_files(
-        spark, path, df, time_chunk_s=_inherited_chunk(parent_m),
-        num_partitions=n_out,
+    return _rewrite(
+        spark, path, "compact", lambda files: ([], small), lambda df: df,
+        tip=tip, num_partitions=n_out,
     )
-    manifest = {
-        "operation": "compact",
-        "schema": parent_m.get("schema") or _schema_json(df),
-        "files": kept + new_files,
-    }
-    if parent_m.get("properties"):
-        manifest["properties"] = parent_m["properties"]
-    return commit(path, parent, manifest)
 
 
 def snapshot_zorder(
@@ -897,12 +871,7 @@ def snapshot_zorder(
         )
     if not parent_m["files"]:
         return None
-    reader = spark.read
-    if parent_m.get("schema") is not None:
-        from pyspark.sql import types as T
-
-        reader = reader.schema(T.StructType.fromJson(parent_m["schema"]))
-    df = reader.parquet(*[f["path"] for f in parent_m["files"]])
+    df = _pinned_reader(spark, parent_m).parquet(*[f["path"] for f in parent_m["files"]])
 
     b = 1 << bits
     # rank buckets via the range partitioner: partition ids are ordered by
@@ -930,14 +899,7 @@ def snapshot_zorder(
     )
     guarded.drop("_zb_n", "_zb_t", "_z").write.mode("overwrite").parquet(tx)
     new_files = _tx_manifest_entries(spark, path, tx, guard)
-    manifest = {
-        "operation": "zorder",
-        "schema": parent_m.get("schema") or _schema_json(df),
-        "files": new_files,
-    }
-    if parent_m.get("properties"):
-        manifest["properties"] = parent_m["properties"]
-    return commit(path, parent, manifest)
+    return _commit_like(path, parent, parent_m, "zorder", new_files, _schema_json(df))
 
 
 def snapshot_as_of(spark: SparkSession, path: str, ts: float) -> int | None:
@@ -978,15 +940,10 @@ def snapshot_clone(
             f"snapshot_clone refuses: {dest} already holds a committed "
             f"store (cloning over it would orphan its history)"
         )
-    manifest = {
-        "operation": "clone",
-        "cloned_from": {"path": source, "version": version},
-        "schema": m.get("schema"),
-        "files": m["files"],
-    }
-    if m.get("properties"):
-        manifest["properties"] = m["properties"]
-    return commit(dest, None, manifest)
+    return _commit_like(
+        dest, None, m, "clone", m["files"],
+        cloned_from={"path": source, "version": version},
+    )
 
 
 def snapshot_restore(spark: SparkSession, path: str, version: int) -> int:
@@ -1010,15 +967,9 @@ def snapshot_restore(spark: SparkSession, path: str, version: int) -> int:
             f"cannot restore v{version}: not committed, or its data files "
             f"were vacuumed (an unreadable tip would wedge every reader)"
         ) from None
-    manifest = {
-        "operation": "restore",
-        "restored_version": version,
-        "schema": m.get("schema"),
-        "files": m["files"],
-    }
-    if m.get("properties"):
-        manifest["properties"] = m["properties"]
-    return commit(path, parent, manifest)
+    return _commit_like(
+        path, parent, m, "restore", m["files"], restored_version=version
+    )
 
 
 def snapshot_select(
@@ -1071,48 +1022,27 @@ def snapshot_expire(
     carry over by reference. Expiring EVERYTHING is a legal commit (the
     empty snapshot stays readable via its recorded schema). Returns the
     committed version, or None if nothing was expirable."""
-    parent, parent_m = resolve_tip(path)
-    if parent is None:
-        return None
-    base = parent_m["files"]
-    # null-stat entries (pre-guard manifests) can never be proven dead —
-    # they fall into the straddle set and are read+rewritten, the safe side
-    dead = [
-        f for f in base if f.get("max_ts") is not None and f["max_ts"] < min_ts
-    ]
-    _dp = {f["path"] for f in dead}
-    straddle = [
-        f
-        for f in base
-        if f["path"] not in _dp
-        and (
-            f.get("min_ts") is None
-            or f.get("max_ts") is None
-            or f["min_ts"] < min_ts <= f["max_ts"]
-        )
-    ]
-    if not dead and not straddle:
-        return None
-    _gone = _dp | {f["path"] for f in straddle}
-    kept = [f for f in base if f["path"] not in _gone]
-    new_files: list[dict] = []
-    schema = parent_m.get("schema")
-    if straddle:
-        survivors = _pinned_reader(spark, parent_m).parquet(
-            *[f["path"] for f in straddle]
-        ).filter(F.col("ts") >= min_ts)
-        schema = schema or _schema_json(survivors)
-        new_files = _write_data_files(
-            spark, path, survivors, time_chunk_s=_inherited_chunk(parent_m)
-        )
-    manifest = {
-        "operation": "expire",
-        "schema": schema,
-        "files": kept + new_files,
-    }
-    if parent_m.get("properties"):
-        manifest["properties"] = parent_m["properties"]
-    return commit(path, parent, manifest)
+    def pick(files):
+        # null-stat entries (pre-guard manifests) can never be proven dead
+        # — they fall into the straddle set and are read+rewritten, the
+        # safe side
+        dead = [
+            f for f in files if f.get("max_ts") is not None and f["max_ts"] < min_ts
+        ]
+        dp = {f["path"] for f in dead}
+        straddle = [
+            f
+            for f in files
+            if f["path"] not in dp
+            and (
+                f.get("min_ts") is None
+                or f.get("max_ts") is None
+                or f["min_ts"] < min_ts <= f["max_ts"]
+            )
+        ]
+        return (dead, straddle) if dead or straddle else None
+
+    return _rewrite(spark, path, "expire", pick, _surviving(F.col("ts") >= min_ts))
 
 
 def snapshot_delete(
@@ -1144,86 +1074,53 @@ def snapshot_delete(
             "delete is snapshot_write(mode='overwrite') of an empty "
             "frame; say that explicitly"
         )
-    parent, parent_m = resolve_tip(path)
-    if parent is None:
-        return None
     lo, hi = ts_range if ts_range is not None else (float("-inf"), float("inf"))
 
-    def _contained(f: dict) -> bool:
-        # every row the file CAN hold matches the predicate (the
-        # snapshot_stats containment rule): provable only for
-        # single-name files under a names predicate and stat-covered
-        # ts ranges
-        if names is not None:
-            if f.get("min_name") is None or f["min_name"] != f.get("max_name"):
-                return False
-            if f["min_name"] not in names:
-                return False
-        if ts_range is not None:
-            mn, mx = f.get("min_ts"), f.get("max_ts")
-            if mn is None or mx is None or not (lo <= mn and mx <= hi):
-                return False
-        return True
+    def pick(files):
+        overlapping = prune(files, names, lo, hi)
+        # zero-scan drop ONLY for files attested null-key-free at write
+        # time: min/max stats ignore NULLs, so a foreign file whose range
+        # is fully contained could still hold NULL-key rows — rows the
+        # delete predicate can never match. Unattested files fall through
+        # to the straddle rewrite, where the null-safe negated filter
+        # keeps them row by row.
+        dead = [
+            f for f in overlapping if f.get("null_free") and contained(f, names, ts_range)
+        ]
+        dp = {f["path"] for f in dead}
+        straddle = [f for f in overlapping if f["path"] not in dp]
+        return (dead, straddle) if overlapping else None
 
-    base = parent_m["files"]
-    # zero-scan drop ONLY for files attested null-key-free at write time:
-    # min/max stats ignore NULLs, so a foreign file whose range is fully
-    # contained could still hold NULL-key rows — rows the delete predicate
-    # can never match. Unattested files fall through to the straddle
-    # rewrite, where the null-safe negated filter keeps them row by row.
-    overlapping = prune(base, names, lo, hi)
-    dead = [f for f in overlapping if f.get("null_free") and _contained(f)]
-    _dp = {f["path"] for f in dead}
-    straddle = [f for f in overlapping if f["path"] not in _dp]
-    if not dead and not straddle:
-        return None
-    _gone = _dp | {f["path"] for f in straddle}
-    kept = [f for f in base if f["path"] not in _gone]
-    new_files: list[dict] = []
-    schema = parent_m.get("schema")
-    if straddle:
-        pred = F.lit(True)
-        if names is not None:
-            pred = pred & F.col("name").isin(list(names))
-        if ts_range is not None:
-            pred = pred & F.col("ts").between(lo, hi)
-        # null-safe negation: under three-valued logic a NULL name/ts row
-        # makes pred NULL, and filter(~NULL) would silently DELETE a row
-        # that does not match the predicate. The write path rejects NULL
-        # keys, but a foreign (externally-written) file may carry them —
-        # a NULL-key row never matches a delete predicate, so it reaches
-        # the survivor rewrite, whose commit gate then REFUSES (the store
-        # invariant: NULL keys never commit). The re-raise below turns
-        # that write-side message into the actionable delete-side one:
-        # the store is out of contract and must be repaired first, which
-        # beats both silently deleting the row (the pre-fix behavior) and
-        # silently committing an invalid store.
-        survivors = _pinned_reader(spark, parent_m).parquet(
-            *[f["path"] for f in straddle]
-        ).filter(~F.coalesce(pred, F.lit(False)))
-        schema = schema or _schema_json(survivors)
-        try:
-            new_files = _write_data_files(
-                spark, path, survivors, time_chunk_s=_inherited_chunk(parent_m)
-            )
-        except ValueError as e:
-            if "NULL name" not in str(e):
-                raise
-            raise ValueError(
-                f"snapshot_delete refused: a rewritten file under {path} "
-                f"holds NULL/NaN-key row(s) the delete predicate cannot "
-                f"match — the store violates the non-null key contract "
-                f"(foreign/legacy data file); repair or drop that file "
-                f"before deleting. Original: {e}"
-            ) from e
-    manifest = {
-        "operation": "delete",
-        "schema": schema,
-        "files": kept + new_files,
-    }
-    if parent_m.get("properties"):
-        manifest["properties"] = parent_m["properties"]
-    return commit(path, parent, manifest)
+    # A NULL-key row never matches the (null-safe) predicate, so it
+    # reaches the survivor rewrite, whose commit gate then REFUSES (the
+    # store invariant: NULL keys never commit). The refusal turns that
+    # write-side message into the actionable delete-side one: the store
+    # is out of contract and must be repaired first, which beats both
+    # silently deleting the row and silently committing an invalid store.
+    return _rewrite(
+        spark, path, "delete", pick, _surviving(~_matches(names, ts_range)),
+        refusal=(
+            f"snapshot_delete refused: a rewritten file under {path} "
+            f"holds NULL/NaN-key row(s) the delete predicate cannot "
+            f"match — the store violates the non-null key contract "
+            f"(foreign/legacy data file); repair or drop that file "
+            f"before deleting."
+        ),
+    )
+
+
+def _matches(names: list[str] | None, ts_range: tuple[float, float] | None):
+    """The DML row predicate ``name ∈ names AND ts ∈ ts_range`` (each
+    when given), NULL-safe: under three-valued logic a NULL name/ts row
+    would make it NULL, and ``filter(~NULL)`` would silently drop a row
+    that does not match — coalescing to False makes such a row a
+    non-match."""
+    pred = F.lit(True)
+    if names is not None:
+        pred = pred & F.col("name").isin(list(names))
+    if ts_range is not None:
+        pred = pred & F.col("ts").between(*ts_range)
+    return F.coalesce(pred, F.lit(False))
 
 
 def snapshot_update(
@@ -1269,7 +1166,7 @@ def snapshot_update(
             "snapshot_update needs names and/or ts_range — an unbounded "
             "update is a read-transform-overwrite; say that explicitly"
         )
-    parent, parent_m = resolve_tip(path)
+    tip = parent, parent_m = resolve_tip(path)
     if parent is None:
         return None
     lo, hi = ts_range if ts_range is not None else (float("-inf"), float("inf"))
@@ -1281,65 +1178,43 @@ def snapshot_update(
                 f"schema {schema_cols} — UPDATE cannot add columns (use "
                 f"merge_schema append for evolution)"
             )
+    pred = _matches(names, ts_range)
 
-    base = parent_m["files"]
-    touched = prune(base, names, lo, hi)
-    if not touched:
-        return None
-    kept = [f for f in base if f["path"] not in {t["path"] for t in touched}]
+    def assign(src):
+        # schema-less manifests (legacy/foreign stores) validate against
+        # the READ columns instead — otherwise a typo'd assignment column
+        # would silently rewrite every touched file byte-identically and
+        # commit a version that changed nothing
+        if not schema_cols:
+            unknown = sorted(set(assignments) - set(src.columns))
+            if unknown:
+                raise ValueError(
+                    f"snapshot_update: column(s) {unknown} are not in the "
+                    f"store's columns {sorted(src.columns)} — UPDATE cannot "
+                    f"add columns"
+                )
+        return src.select(*[
+            F.when(pred, F.expr(expr)).otherwise(F.col(c)).alias(c)
+            if (expr := assignments.get(c)) is not None
+            else F.col(c)
+            for c in src.columns
+        ])
 
-    pred = F.lit(True)
-    if names is not None:
-        pred = pred & F.col("name").isin(list(names))
-    if ts_range is not None:
-        pred = pred & F.col("ts").between(lo, hi)
-    pred = F.coalesce(pred, F.lit(False))
-    src = _pinned_reader(spark, parent_m).parquet(*[f["path"] for f in touched])
-    # schema-less manifests (legacy/foreign stores) validate against the
-    # READ columns instead — otherwise a typo'd assignment column would
-    # silently rewrite every touched file byte-identically and commit a
-    # version that changed nothing
-    if not schema_cols:
-        unknown = sorted(set(assignments) - set(src.columns))
-        if unknown:
-            raise ValueError(
-                f"snapshot_update: column(s) {unknown} are not in the "
-                f"store's columns {sorted(src.columns)} — UPDATE cannot "
-                f"add columns"
-            )
-    out_cols = [
-        F.when(pred, F.expr(expr)).otherwise(F.col(c)).alias(c)
-        if (expr := assignments.get(c)) is not None
-        else F.col(c)
-        for c in src.columns
-    ]
-    rewritten = src.select(*out_cols)
-    schema = parent_m.get("schema") or _schema_json(rewritten)
-    try:
-        new_files = _write_data_files(
-            spark, path, rewritten, time_chunk_s=_inherited_chunk(parent_m)
-        )
-    except ValueError as e:
-        if "NULL name" not in str(e):
-            raise
-        # the snapshot_delete rule: point the operator at the real
-        # artifact (an out-of-contract store file or a key-NULLing
-        # assignment), not a non-existent "batch"
-        raise ValueError(
+    # the refusal points the operator at the real artifact (an
+    # out-of-contract store file or a key-NULLing assignment), not a
+    # non-existent "batch"
+    return _rewrite(
+        spark, path, "update",
+        lambda files: ([], touched) if (touched := prune(files, names, lo, hi)) else None,
+        assign, tip=tip,
+        refusal=(
             f"snapshot_update refused: the rewrite under {path} produced "
             f"or preserved NULL/NaN-key row(s) — either an assignment "
             f"NULLs a key column or a foreign/legacy data file violates "
             f"the non-null key contract; fix the assignment or repair the "
-            f"file. Original: {e}"
-        ) from e
-    manifest = {
-        "operation": "update",
-        "schema": schema,
-        "files": kept + new_files,
-    }
-    if parent_m.get("properties"):
-        manifest["properties"] = parent_m["properties"]
-    return commit(path, parent, manifest)
+            f"file."
+        ),
+    )
 
 
 def snapshot_diff(
@@ -1494,15 +1369,11 @@ def snapshot_vacuum(
         # file: vacuum must never turn a repairable store into data loss.
         return []
     kept_versions = sorted(manifests)[-keep_last:]
-
-    def norm(p: str) -> str:
-        # input_file_name() says file:///x, FS listings say file:/x —
-        # compare the URI path component only
-        return str(fs.jpath(p).toUri().getPath())
-
-    live_norm: set[str] = set()
-    for v in kept_versions:
-        live_norm.update(norm(f["path"]) for f in manifests[v]["files"])
+    live = {
+        data_file_path(f["path"])
+        for v in kept_versions
+        for f in manifests[v]["files"]
+    }
     deleted: list[str] = []
     # delete only BELOW the kept floor — never a slot BETWEEN kept
     # versions (only unreadable junk can sit there): slot numbers are
@@ -1525,8 +1396,8 @@ def snapshot_vacuum(
         for tx in fs.subdirs(data_root):
             files = fs.parquet_files(tx)
             dead = []
-            for p, _sz, _uri in files:
-                if norm(p) in live_norm:
+            for p, _sz in files:
+                if p in live:
                     continue
                 mtime = fs.fs.getFileStatus(fs.jpath(p)).getModificationTime()
                 if mtime <= cutoff_ms:

@@ -35,37 +35,6 @@ def read_store(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def write_store_bucketed(
-    df: DataFrame,
-    table: str,
-    buckets: int = 32,
-    path: str | None = None,
-) -> None:
-    """Persist the store bucketed+sorted by the series key.
-
-    At cluster scale this is the difference between every per-series window
-    (resample/rate/irate) starting with a full shuffle of the samples and
-    starting from pre-clustered files: Spark's bucketing metadata lets the
-    planner skip the Exchange when the window partitions on the bucket
-    column. Requires a managed/external table (bucket metadata lives in the
-    catalog, not in plain parquet)."""
-    writer = (
-        df.withColumn("_skey", series_key_str())
-        .write.mode("overwrite")
-        .bucketBy(buckets, "_skey")
-        .sortBy("_skey", "ts")
-    )
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
-
-
-def read_store_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed store; the ``_skey`` column is the pre-computed
-    series identity operators key on."""
-    return spark.table(table)
-
-
 def time_range(df: DataFrame) -> tuple[float, float]:
     """Global MinMaxTime (src/timeseries.rs:423-445)."""
     row = df.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).first()

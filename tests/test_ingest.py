@@ -212,35 +212,6 @@ def test_timestamp_time_column(spark):
     assert ts == [1704067200.0, 1704067260.0]
 
 
-def test_bucketed_store_shuffle_free_windows(spark, tmp_path):
-    # the 100TB layout: bucketBy(series) + sortBy lets per-series windows
-    # plan with ZERO shuffle exchanges
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from prometheus_parquet_server_spark.sources.store import (
-        read_store_bucketed,
-        write_store_bucketed,
-    )
-
-    df = wide_to_long(spark.createDataFrame(gauge_pdf()), "m_gauge")
-    table = "t_bucketed_store_test"
-    write_store_bucketed(df, table, buckets=4, path=str(tmp_path / "mb"))
-    try:
-        b = read_store_bucketed(spark, table)
-        assert b.count() == 5
-        w = Window.partitionBy("_skey").orderBy("ts")
-        plan = (
-            b.withColumn("lag", F.lag("value").over(w))
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert plan.count("Exchange hashpartitioning") == 0
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
 def test_store_manifest_detects_tampering(spark, tmp_path):
     from prometheus_parquet_server_spark.sources.store import (
         store_manifest,

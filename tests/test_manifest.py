@@ -242,3 +242,20 @@ def test_manifest_protocol_lives_in_one_module():
             ):
                 offenders.append(f"{where} calls os.link")
     assert offenders == []
+
+
+def test_data_file_path_forms():
+    """One conversion owns the data-file path forms: Hadoop listings,
+    input_file_name() URIs and bare paths all give the recorded entry
+    path, and local_path opens it literally."""
+    assert manifest.data_file_path("file:/x y/f") == "file:///x y/f"
+    assert manifest.data_file_path("/x y/f") == "file:///x y/f"
+    assert manifest.data_file_path("file:///x y/f") == "file:///x y/f"
+    assert manifest.data_file_path("file:///x%20y/f", encoded=True) == "file:///x y/f"
+    assert manifest.data_file_path("file:///a%2541b/f", encoded=True) == "file:///a%41b/f"
+    assert manifest.data_file_path("file:/a%41b/f") == "file:///a%41b/f"
+    assert (
+        manifest.data_file_path("hdfs://nn:8020/x%20y/f", encoded=True)
+        == "hdfs://nn:8020/x y/f"
+    )
+    assert manifest.local_path(manifest.data_file_path("file:/a%41b/f")) == "/a%41b/f"
