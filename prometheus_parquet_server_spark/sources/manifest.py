@@ -51,6 +51,7 @@ from __future__ import annotations
 
 import json
 import os
+import posixpath
 import time
 import uuid
 
@@ -75,22 +76,38 @@ def local_path(uri: str) -> str | None:
     return None
 
 
-def data_file_path(p: str, encoded: bool = False) -> str:
-    """The path a manifest entry records for a data file:
-    ``scheme://authority/path`` with the path NOT percent-encoded, the
-    form Hadoop's ``Path`` (so ``spark.read``) and :func:`local_path`
-    open literally. ``p`` is a Hadoop listing path (``file:/a b/f``), a
-    recorded entry or a bare local path; with ``encoded=True`` it is the
-    percent-encoded URI ``input_file_name()`` reports
-    (``file:///a%20b/f``). Equal files give equal strings, so vacuum
-    compares listings with entries through it."""
-    if encoded:
-        from urllib.parse import unquote, urlsplit
-
-        u = urlsplit(p)
-        p = f"{u.scheme}://{u.netloc}{unquote(u.path)}" if u.scheme else unquote(p)
+def _split_data_path(p: str) -> tuple[str, str]:
+    """``(scheme://authority, path)`` of ``p`` with the path normalised
+    as Hadoop's ``Path`` does: repeated ``/`` collapsed, ``.`` and ``..``
+    resolved, no trailing ``/``. Local forms get the ``file://`` prefix."""
     lp = local_path(p)
-    return p if lp is None else f"file://{lp}"
+    if lp is None:
+        scheme, rest = p.split("://", 1)
+        authority, _, lp = rest.partition("/")
+        prefix = f"{scheme}://{authority}"
+    else:
+        prefix = "file://"
+    return prefix, posixpath.normpath("/" + lp.lstrip("/"))
+
+
+def data_file_path(p: str) -> str:
+    """The path a manifest entry records for a data file:
+    ``scheme://authority/path`` with the path normalised and NOT
+    percent-encoded, the form Hadoop's ``Path`` (so ``spark.read``) and
+    :func:`local_path` open literally. ``p`` is a Hadoop listing path
+    (``file:/a b/f``), a recorded entry or a bare local path (``/r//f``
+    as a root given with a trailing ``/`` yields); decode an
+    ``input_file_name()`` URI (``file:///a%20b/f``) before passing it."""
+    prefix, path = _split_data_path(p)
+    return prefix + path
+
+
+def data_file_key(p: str) -> str:
+    """The normalised path component of :func:`data_file_path` — what
+    vacuum compares listings with entries by, so the same file named
+    through a scheme or authority alias (``s3``/``s3a``, two names of
+    one namenode) still counts as live."""
+    return _split_data_path(p)[1]
 
 
 # ---------------------------------------------------------------------------

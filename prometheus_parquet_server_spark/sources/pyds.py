@@ -127,6 +127,7 @@ from prometheus_parquet_server_spark.sources.manifest import (
     append,
     commit,
     commit_properties,
+    data_file_path,
     file_entry,
     local_path,
     new_manifest,
@@ -450,7 +451,7 @@ def _write_task(iterator, tx_uri: str, columns: list[str]) -> _FileCommit:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    path = f"{tx_uri}/part-{_uuid.uuid4().hex}.parquet"
+    path = data_file_path(f"{tx_uri}/part-{_uuid.uuid4().hex}.parquet")
     lp = local_path(path)
     if lp is None:
         raise NotImplementedError(

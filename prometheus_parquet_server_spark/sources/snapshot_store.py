@@ -35,7 +35,9 @@ delete, update) is a ``pick`` of the entries to drop or read back plus a
 write with the inherited layout, and commit the parent's schema and
 properties (:func:`.manifest.commit_properties`). Z-order shares its
 reader and commit tail; clone and restore only commit. Entries record
-each data file's literal path (:func:`.manifest.data_file_path`).
+each data file's literal, normalised path
+(:func:`.manifest.data_file_path`); vacuum matches files by its path
+component (:func:`.manifest.data_file_key`).
 
 Concurrency: every read and write of ``_snapshots/`` goes through the
 Spark-free manifest protocol (:mod:`.manifest`), which the Python data
@@ -60,6 +62,7 @@ from __future__ import annotations
 import json
 import time
 import uuid
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -72,6 +75,7 @@ from prometheus_parquet_server_spark.sources.manifest import (
     commit,
     commit_properties,
     contained,
+    data_file_key,
     data_file_path,
     file_entry,
     history,
@@ -265,7 +269,12 @@ def _scan_stats(spark: SparkSession, paths: list[str]) -> dict[str, tuple]:
         )
         .collect()
     )
-    return {data_file_path(r[0], encoded=True): tuple(r[1:]) for r in rows}
+    out = {}
+    for r in rows:
+        # input_file_name() percent-encodes the path (file:///a%20b/f)
+        u = urlsplit(r[0])
+        out[data_file_path(f"{u.scheme}://{u.netloc}{unquote(u.path)}")] = tuple(r[1:])
+    return out
 
 
 def _tx_manifest_entries(
@@ -1370,7 +1379,7 @@ def snapshot_vacuum(
         return []
     kept_versions = sorted(manifests)[-keep_last:]
     live = {
-        data_file_path(f["path"])
+        data_file_key(f["path"])
         for v in kept_versions
         for f in manifests[v]["files"]
     }
@@ -1397,7 +1406,7 @@ def snapshot_vacuum(
             files = fs.parquet_files(tx)
             dead = []
             for p, _sz in files:
-                if p in live:
+                if data_file_key(p) in live:
                     continue
                 mtime = fs.fs.getFileStatus(fs.jpath(p)).getModificationTime()
                 if mtime <= cutoff_ms:

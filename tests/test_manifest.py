@@ -246,16 +246,18 @@ def test_manifest_protocol_lives_in_one_module():
 
 def test_data_file_path_forms():
     """One conversion owns the data-file path forms: Hadoop listings,
-    input_file_name() URIs and bare paths all give the recorded entry
-    path, and local_path opens it literally."""
-    assert manifest.data_file_path("file:/x y/f") == "file:///x y/f"
-    assert manifest.data_file_path("/x y/f") == "file:///x y/f"
-    assert manifest.data_file_path("file:///x y/f") == "file:///x y/f"
-    assert manifest.data_file_path("file:///x%20y/f", encoded=True) == "file:///x y/f"
-    assert manifest.data_file_path("file:///a%2541b/f", encoded=True) == "file:///a%41b/f"
-    assert manifest.data_file_path("file:/a%41b/f") == "file:///a%41b/f"
-    assert (
-        manifest.data_file_path("hdfs://nn:8020/x%20y/f", encoded=True)
-        == "hdfs://nn:8020/x y/f"
-    )
-    assert manifest.local_path(manifest.data_file_path("file:/a%41b/f")) == "/a%41b/f"
+    recorded entries and bare paths all give the recorded entry path,
+    normalised as Hadoop's Path is, and local_path opens it literally;
+    vacuum's key is its path component."""
+    dfp = manifest.data_file_path
+    assert dfp("file:/x y/f") == "file:///x y/f"
+    assert dfp("/x y/f") == "file:///x y/f"
+    assert dfp("file:///x y/f") == "file:///x y/f"
+    assert dfp("file:/a%41b/f") == "file:///a%41b/f"
+    assert dfp("/r//data/tx_1/f") == "file:///r/data/tx_1/f"
+    assert dfp("file:///r/./data/../data/tx_1/") == "file:///r/data/tx_1"
+    assert dfp("hdfs://nn:8020/x y//f") == "hdfs://nn:8020/x y/f"
+    assert manifest.local_path(dfp("file:/a%41b/f")) == "/a%41b/f"
+    key = manifest.data_file_key
+    assert key("s3://b/r//f") == key("s3a://b/r/f") == "/r/f"
+    assert key("/r//f") == key("file:/r/f") == "/r/f"

@@ -213,3 +213,32 @@ def test_store_root_with_space_or_percent(spark, tmp_path, leaf):
     deleted = snapshot_vacuum(spark, root, keep_last=1, min_age_s=0)
     assert not [p for p in deleted if p.endswith(".parquet")]
     assert read() == rows
+
+
+def test_ds_append_to_root_with_trailing_slash_survives_vacuum(spark, tmp_path):
+    """A root given as ``…/s/`` joins to ``…/s//data/…``: the DS writer
+    records the normalised path, and vacuum still counts an entry
+    recorded in the joined form (stores written before) as live."""
+    from prometheus_parquet_server_spark.sources.pyds import register_snapshot_source
+
+    register_snapshot_source(spark)
+    root = f"{tmp_path}/s"
+    mk = lambda rows: spark.createDataFrame(rows, "name string, ts double, value double")
+    rows = [("a", 1.0, 1.0), ("b", 2.0, 2.0)]
+    for r in rows:
+        mk([r]).coalesce(1).write.format("pps_snapshot").mode("append").save(root + "/")
+    read = lambda: sorted(tuple(r) for r in snapshot_read(spark, root).collect())
+    assert read() == rows
+    v, m = manifest.resolve_tip(root)
+    assert all(f["path"].startswith(f"file://{root}/data/") for f in m["files"])
+    # the joined form a writer that did not normalise recorded
+    joined = [
+        {**f, "path": f["path"].replace(f"file://{root}/", f"{root}//")}
+        for f in m["files"]
+    ]
+    manifest.commit(root, v, {**m, "files": joined})
+
+    deleted = snapshot_vacuum(spark, root + "/", keep_last=1, min_age_s=0)
+    assert not [p for p in deleted if p.endswith(".parquet")]
+    assert len(glob.glob(f"{root}/data/*/*.parquet")) == 2
+    assert read() == rows
