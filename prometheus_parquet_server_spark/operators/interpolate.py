@@ -26,6 +26,9 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from prometheus_parquet_server_spark.sqltext import sql_double, sql_ident
+
+
 def NAN() -> Column:
     """NaN literal (lazy: F.lit needs an active SparkContext)."""
     return F.lit(float("nan"))
@@ -189,19 +192,63 @@ def keyed_series(samples: DataFrame) -> tuple[DataFrame, DataFrame]:
     return keyed, series
 
 
+def slot_time(grid, slot: str) -> str:
+    """SQL: grid instant of ``slot`` — ``start + slot·step``, the float ops
+    of ``RegularTimeRange.to_df``."""
+    return (
+        f"({sql_double(grid.start)} + CAST({slot} AS DOUBLE) * "
+        f"{sql_double(grid.increment)})"
+    )
+
+
+def slot_instant(grid, offset: float, slot: str) -> str:
+    """SQL: probe instant of ``slot`` — ``(start + slot·step) − offset``,
+    the float ops of :func:`grid_probes`."""
+    return f"({slot_time(grid, slot)} - {sql_double(offset)})"
+
+
+def first_slot_at(grid, offset: float, t: str) -> str:
+    """SQL: the first slot whose probe instant is ``>= t`` (unbounded).
+
+    ``ceil((t + offset − start) / step)``, then a ±1 correction comparing
+    the exact probe expression against ``t`` — so slot boundaries match
+    the as-of window path's comparisons ulp for ulp."""
+    off, start, step = (sql_double(x) for x in (offset, grid.start, grid.increment))
+    nc = f"CAST(ceil((({t} + {off}) - {start}) / {step}) AS BIGINT)"
+    nc = (
+        f"CASE WHEN {slot_instant(grid, offset, f'{nc} - 1')} >= {t} "
+        f"THEN {nc} - 1 ELSE {nc} END"
+    )
+    return (
+        f"CASE WHEN {slot_instant(grid, offset, nc)} < {t} "
+        f"THEN {nc} + 1 ELSE {nc} END"
+    )
+
+
+def slot_limits(grid, slot_from: int) -> tuple[str, str]:
+    """SQL: the slot range ``[slot_from, len(grid)]`` the slot operators
+    clamp to, as BIGINT literals."""
+    return f"CAST({int(slot_from)} AS BIGINT)", f"CAST({len(grid)} AS BIGINT)"
+
+
+def _over(key_cols: Sequence[str], *order: str) -> str:
+    """SQL window spec partitioned by ``key_cols``, ordered by ``order``."""
+    keys = ", ".join(sql_ident(k) for k in key_cols)
+    return f"OVER (PARTITION BY {keys} ORDER BY {', '.join(order)})"
+
+
 def _chunked_slot_context(
     base: DataFrame,
     key_cols: Sequence[str],
     chunk_s: float,
     a_of,
-    with_prev: bool = False,
+    with_prev: bool,
 ):
-    """Shared hot-series chunking machinery for the slot-explode operators
-    (resample_slots and rate._irate_slots): window ``base`` (key_cols +
-    ts + value) on (key, floor(ts/chunk_s)) and carry each chunk's missing
-    neighbors in from a per-chunk summary frame (one row per non-empty
-    chunk, windowed by chunk — so a pair spanning any number of EMPTY
-    chunks still resolves).
+    """Hot-series chunking for the slot-explode operators: window ``base``
+    (key_cols + ts + value) on (key, floor(ts/chunk_s)) and carry each
+    chunk's missing neighbors in from a per-chunk summary frame (one row
+    per non-empty chunk, windowed by chunk — so a pair spanning any number
+    of EMPTY chunks still resolves).
 
     The lead is carried as ONE STRUCT (never per-column coalesce): a
     mid-chunk sample with a NULL value must keep its own ts/value pair —
@@ -216,48 +263,122 @@ def _chunked_slot_context(
     """
     if chunk_s <= 0:
         raise ValueError(f"chunk_s must be > 0, got {chunk_s}")
-    base = base.withColumn("_ch", F.floor(F.col("ts") / F.lit(float(chunk_s))))
-    pair = F.struct(F.col("ts"), F.col("value"))
-    aggs = [F.min_by(pair, F.col("ts")).alias("_fst")]
+    keys = [sql_ident(k) for k in key_cols]
+    base = base.withColumn("_ch", F.expr(f"floor(ts / {sql_double(chunk_s)})"))
+    aggs = [F.expr("min_by(struct(ts, value), ts) AS _fst")]
     if with_prev:
-        aggs.append(F.max_by(pair, F.col("ts")).alias("_lst"))
-    sw = Window.partitionBy(*key_cols).orderBy("_ch")
+        aggs.append(F.expr("max_by(struct(ts, value), ts) AS _lst"))
+    sw = _over(key_cols, "_ch")
     sel = [
-        *key_cols,
+        *keys,
         "_ch",
-        F.lead("_fst").over(sw).alias("_carry"),
-        F.row_number().over(sw).alias("_chrn"),
+        f"lead(_fst) {sw} AS _carry",
+        f"row_number() {sw} AS _chrn",
     ]
     if with_prev:
-        sel.append(F.lag("_lst").over(sw).alias("_prevlast"))
-    summ = base.groupBy(*key_cols, "_ch").agg(*aggs).select(*sel)
-    cw = Window.partitionBy(*key_cols, "_ch").orderBy("ts")
-    s = (
-        base.join(summ, [*key_cols, "_ch"])
-        .withColumn("_a", a_of(F.col("ts")))
-        .withColumn("_rn", F.row_number().over(cw))
-        .withColumn("_nx", F.coalesce(F.lead(pair).over(cw), F.col("_carry")))
-        .withColumn("_nts", F.col("_nx.ts"))
-        .withColumn("_nv", F.col("_nx.value"))
+        sel.append(f"lag(_lst) {sw} AS _prevlast")
+    summ = base.groupBy(*key_cols, "_ch").agg(*aggs).selectExpr(*sel)
+    cw = _over([*key_cols, "_ch"], "ts")
+    s = base.join(summ, [*key_cols, "_ch"])
+    for name, expr in (
+        ("_a", a_of("ts")),
+        ("_rn", f"row_number() {cw}"),
+        ("_nx", f"coalesce(lead(struct(ts, value)) {cw}, _carry)"),
+        ("_nts", "_nx.ts"),
+        ("_nv", "_nx.value"),
         # _na via the same pure a_of the next chunk applies to its own
         # first sample — bit-identical to lead(_a) for in-chunk leads
-        .withColumn(
+        (
             "_na",
-            F.when(F.col("_nx").isNull(), F.lit(None).cast("long")).otherwise(
-                a_of(F.col("_nx.ts"))
-            ),
-        )
-        .withColumn("_sfirst", (F.col("_chrn") == 1) & (F.col("_rn") == 1))
-    )
+            f"CASE WHEN _nx IS NULL THEN CAST(NULL AS BIGINT) "
+            f"ELSE {a_of('_nx.ts')} END",
+        ),
+        ("_sfirst", "(_chrn = 1) AND (_rn = 1)"),
+    ):
+        s = s.withColumn(name, F.expr(expr))
     if with_prev:
-        s = (
-            s.withColumn(
-                "_pv", F.coalesce(F.lag(pair).over(cw), F.col("_prevlast"))
-            )
-            .withColumn("_tp", F.col("_pv.ts"))
-            .withColumn("_vp", F.col("_pv.value"))
-        )
+        for name, expr in (
+            ("_pv", f"coalesce(lag(struct(ts, value)) {cw}, _prevlast)"),
+            ("_tp", "_pv.ts"),
+            ("_vp", "_pv.value"),
+        ):
+            s = s.withColumn(name, F.expr(expr))
     return s
+
+
+def slot_pairs(
+    samples: DataFrame,
+    grid,
+    series_cols: Sequence[str] | None,
+    offset: float,
+    slot_from: int,
+    chunk_s: float | None,
+    with_prev: bool = False,
+):
+    """The shared prologue of the slot-explode operators (resample_slots and
+    rate._irate_slots): key the series, then window each series' samples
+    by ts to pair every sample with its successor.
+
+    Each row gets ``_a`` (the first slot at or after its ts, clamped to
+    ``[slot_from, len(grid)]``), ``_nts/_nv/_na`` (the next sample's ts,
+    value and ``_a``; NULL on the last sample) and, with ``with_prev``,
+    ``_tp/_vp`` (the previous sample). ``chunk_s`` selects the hot-series
+    window (see :func:`_chunked_slot_context`).
+
+    Returns (frame, SQL test for "first sample of its series",
+    series_frame_or_None, key_cols).
+    """
+    canonical = series_cols is None
+    if canonical:
+        samples, series = keyed_series(samples)
+        key_cols = ["_skey"]
+    else:
+        series = None
+        key_cols = list(series_cols)
+    lo, hi = slot_limits(grid, slot_from)
+
+    def a_of(t: str) -> str:
+        return f"greatest({lo}, least({hi}, {first_slot_at(grid, offset, t)}))"
+
+    base = samples.selectExpr(*(sql_ident(k) for k in key_cols), "ts", "value")
+    if chunk_s is not None:
+        s = _chunked_slot_context(base, key_cols, chunk_s, a_of, with_prev)
+        return s, "_sfirst", series, key_cols
+    w = _over(key_cols, "ts")
+    cols = [("_a", a_of("ts")), ("_rn", f"row_number() {w}")]
+    if with_prev:
+        cols += [("_tp", f"lag(ts) {w}"), ("_vp", f"lag(value) {w}")]
+    cols += [
+        ("_nts", f"lead(ts) {w}"),
+        ("_nv", f"lead(value) {w}"),
+        ("_na", f"lead(_a) {w}"),
+    ]
+    for name, expr in cols:
+        base = base.withColumn(name, F.expr(expr))
+    return base, "_rn = 1", series, key_cols
+
+
+def explode_slot_ranges(
+    s: DataFrame,
+    key_cols: Sequence[str],
+    carry: Sequence[str],
+    ranges: str,
+    tag: str,
+) -> DataFrame:
+    """One row per (sample, slot) from the SQL array ``ranges`` of
+    ``struct(f, u, <tag>)`` half-open slot ranges ``[f, u)`` per sample:
+    empty and NULL ranges are dropped, ``<tag>`` comes out as ``_<tag>``."""
+    keys = [sql_ident(k) for k in key_cols]
+    return (
+        s.selectExpr(*keys, *carry, f"explode({ranges}) AS _r")
+        .filter("_r.f IS NOT NULL AND _r.u > _r.f")
+        .selectExpr(
+            *keys,
+            *carry,
+            f"_r.{tag} AS _{tag}",
+            "explode(sequence(_r.f, _r.u - 1)) AS _slot",
+        )
+    )
 
 
 def resample_slots(
@@ -281,7 +402,14 @@ def resample_slots(
 
     Bit-exactness: slot boundaries come from ``ceil((t+offset−start)/step)``
     then a ±1 correction comparing the exact probe expression against the
-    sample timestamp — reproducing the window path's comparisons ulp-for-ulp.
+    sample timestamp — reproducing the window path's comparisons ulp-for-ulp
+    (:func:`first_slot_at`).
+
+    The slot math, the window columns and the value are Spark SQL text
+    (``F.expr``/``selectExpr``), not trees of PySpark ``Column`` calls:
+    each ``Column`` call is several py4j round trips, and the tree for the
+    slot math alone cost over a thousand per compiled query. The SQL
+    parses to the same expressions, so the optimized plan is unchanged.
 
     ``chunk_s`` is the hot-series escape hatch (the asof_join/sessionize
     carry-in pattern): the default window partitions on the series key
@@ -298,83 +426,31 @@ def resample_slots(
     Returns (df with key_cols + _slot + gts + value, series_frame_or_None,
     key_cols). ``slot_from`` may be negative (rate's extended grid).
     """
-    n = len(grid)
-    start, step = grid.start, grid.increment
-    canonical = series_cols is None
-    if canonical:
-        samples, series = keyed_series(samples)
-        key_cols = ["_skey"]
-    else:
-        series = None
-        key_cols = list(series_cols)
-
-    lo, hi = F.lit(slot_from).cast("long"), F.lit(n).cast("long")
-
-    def pt_of(slot):
-        # identical float ops to grid_probes: (start + slot·step) − offset
-        return (F.lit(start) + slot.cast("double") * F.lit(step)) - F.lit(
-            float(offset)
-        )
-
-    def a_of(t: Column) -> Column:
-        nc = F.ceil(
-            (t + F.lit(float(offset)) - F.lit(start)) / F.lit(step)
-        ).cast("long")
-        nc = F.when(pt_of(nc - 1) >= t, nc - 1).otherwise(nc)
-        nc = F.when(pt_of(nc) < t, nc + 1).otherwise(nc)
-        return F.greatest(lo, F.least(hi, nc))
-
-    a = a_of(F.col("ts"))
-
-    if chunk_s is None:
-        w = Window.partitionBy(*key_cols).orderBy("ts")
-        s = (
-            samples.select(*key_cols, "ts", "value")
-            .withColumn("_a", a)
-            .withColumn("_rn", F.row_number().over(w))
-            .withColumn("_nts", F.lead("ts").over(w))
-            .withColumn("_nv", F.lead("value").over(w))
-            .withColumn("_na", F.lead("_a").over(w))
-        )
-        series_first = F.col("_rn") == 1
-    else:
-        s = _chunked_slot_context(
-            samples.select(*key_cols, "ts", "value"), key_cols, chunk_s, a_of
-        )
-        series_first = F.col("_sfirst")
-    pair_to = F.when(F.col("_nts").isNull(), hi).otherwise(F.col("_na"))
-    ranges = F.array(
-        F.struct(F.col("_a").alias("f"), pair_to.alias("u"), F.lit(0).alias("below")),
-        F.struct(
-            F.when(series_first, lo).otherwise(F.lit(None).cast("long")).alias("f"),
-            F.col("_a").alias("u"),
-            F.lit(1).alias("below"),
-        ),
+    s, first, series, key_cols = slot_pairs(
+        samples, grid, series_cols, offset, slot_from, chunk_s
     )
-    exploded = (
-        s.select(*key_cols, "ts", "value", "_nts", "_nv", F.explode(ranges).alias("_r"))
-        .filter(F.col("_r.f").isNotNull() & (F.col("_r.u") > F.col("_r.f")))
-        .select(
-            *key_cols,
-            "ts",
-            "value",
-            "_nts",
-            "_nv",
-            F.col("_r.below").alias("_below"),
-            F.explode(F.sequence(F.col("_r.f"), F.col("_r.u") - 1)).alias("_slot"),
-        )
+    lo, hi = slot_limits(grid, slot_from)
+    ranges = (
+        f"array(struct(_a AS f, CASE WHEN _nts IS NULL THEN {hi} ELSE _na END AS u, "
+        "0 AS below), "
+        f"struct(CASE WHEN {first} THEN {lo} ELSE CAST(NULL AS BIGINT) END AS f, "
+        "_a AS u, 1 AS below))"
     )
-    gts = F.lit(start) + F.col("_slot").cast("double") * F.lit(step)
-    pt = gts - F.lit(float(offset))
+    exploded = explode_slot_ranges(
+        s, key_cols, ["ts", "value", "_nts", "_nv"], ranges, "below"
+    )
+    pt = slot_instant(grid, offset, "_slot")
     val = (
-        F.when(F.col("_below") == 1, F.col("value"))  # Below → first value
-        .when(F.col("_nts").isNull(), F.col("value"))  # Above → last value
-        .otherwise(
-            ((pt - F.col("ts")) * F.col("_nv") + (F.col("_nts") - pt) * F.col("value"))
-            / (F.col("_nts") - F.col("ts"))
-        )
+        "CASE WHEN _below = 1 THEN value "  # Below → first value
+        "WHEN _nts IS NULL THEN value "  # Above → last value
+        f"ELSE (({pt} - ts) * _nv + (_nts - {pt}) * value) / (_nts - ts) END"
     )
-    out = exploded.select(*key_cols, "_slot", gts.alias("gts"), val.alias("value"))
+    out = exploded.selectExpr(
+        *(sql_ident(k) for k in key_cols),
+        "_slot",
+        f"{slot_time(grid, '_slot')} AS gts",
+        f"{val} AS value",
+    )
     return out, series, key_cols
 
 

@@ -24,10 +24,15 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from prometheus_parquet_server_spark.operators.interpolate import keyed_series
+from prometheus_parquet_server_spark.operators.interpolate import (
+    first_slot_at,
+    keyed_series,
+    slot_instant,
+)
+from prometheus_parquet_server_spark.sqltext import sql_double
 
 #: fn name (without the _over_time suffix) → aggregation over the window's
 #: raw samples. Values are always DOUBLE (count casts).
@@ -46,30 +51,28 @@ OVER_TIME_FNS = {
 }
 
 
-def _slot_bounds(grid, over_range: float, offset: float, ts_expr: Column):
-    """(lo, hi) slot range whose window ``[pt − r, pt]`` contains
-    ``ts_expr`` — the shared boundary math (exact ±1 correction so the
-    comparisons match an oracle's float predicates ulp-for-ulp)."""
-    n, start, step = len(grid), grid.start, grid.increment
-    r = float(over_range)
-
-    def pt_of(slot: Column) -> Column:
-        return (F.lit(start) + slot.cast("double") * F.lit(step)) - F.lit(
-            float(offset)
-        )
-
-    t = ts_expr
-    lo = F.ceil((t + F.lit(float(offset)) - F.lit(start)) / F.lit(step)).cast("long")
-    lo = F.when(pt_of(lo - 1) >= t, lo - 1).otherwise(lo)
-    lo = F.when(pt_of(lo) < t, lo + 1).otherwise(lo)
-    hi = F.floor(
-        (t + F.lit(r) + F.lit(float(offset)) - F.lit(start)) / F.lit(step)
-    ).cast("long")
-    hi = F.when(pt_of(hi + 1) - F.lit(r) <= t, hi + 1).otherwise(hi)
-    hi = F.when(pt_of(hi) - F.lit(r) > t, hi - 1).otherwise(hi)
-    lo = F.greatest(F.lit(0).cast("long"), lo)
-    hi = F.least(F.lit(n - 1).cast("long"), hi)
-    return lo, hi
+def _slot_bounds(grid, over_range: float, offset: float, t: str):
+    """(lo, hi) slot range whose window ``[pt − r, pt]`` contains the SQL
+    expression ``t`` — the shared boundary math of resample_slots
+    (:func:`.interpolate.first_slot_at`, exact ±1 correction so the
+    comparisons match an oracle's float predicates ulp-for-ulp), as SQL
+    text parsed once per bound."""
+    r, off, start, step = (
+        sql_double(x) for x in (over_range, offset, grid.start, grid.increment)
+    )
+    hi = f"CAST(floor(((({t} + {r}) + {off}) - {start}) / {step}) AS BIGINT)"
+    hi = (
+        f"CASE WHEN ({slot_instant(grid, offset, f'{hi} + 1')} - {r}) <= {t} "
+        f"THEN {hi} + 1 ELSE {hi} END"
+    )
+    hi = (
+        f"CASE WHEN ({slot_instant(grid, offset, hi)} - {r}) > {t} "
+        f"THEN {hi} - 1 ELSE {hi} END"
+    )
+    return (
+        F.expr(f"greatest(CAST(0 AS BIGINT), {first_slot_at(grid, offset, t)})"),
+        F.expr(f"least(CAST({len(grid) - 1} AS BIGINT), {hi})"),
+    )
 
 
 def _keyed_window_explode(
@@ -89,7 +92,7 @@ def _keyed_window_explode(
     else:
         series = None
         key_cols = list(series_cols)
-    lo, hi = _slot_bounds(grid, over_range, offset, F.col("ts"))
+    lo, hi = _slot_bounds(grid, over_range, offset, "ts")
     exploded = (
         samples.select(*key_cols, "ts", "value", lo.alias("_lo"), hi.alias("_hi"))
         .filter(F.col("_hi") >= F.col("_lo"))
@@ -380,10 +383,10 @@ def changes_to_grid(
     ).withColumn("_vp", F.lag("value").over(w))
 
     # presence range: sample itself in window (contributes 0)
-    p_lo, p_hi = _slot_bounds(grid, over_range, offset, F.col("ts"))
+    p_lo, p_hi = _slot_bounds(grid, over_range, offset, "ts")
     # pair range: ts (newer) bounds below, _tp (older) bounds above
-    q_lo, _ = _slot_bounds(grid, over_range, offset, F.col("ts"))
-    _, q_hi = _slot_bounds(grid, over_range, offset, F.col("_tp"))
+    q_lo, _ = _slot_bounds(grid, over_range, offset, "ts")
+    _, q_hi = _slot_bounds(grid, over_range, offset, "_tp")
     if resets:
         # explicit NaN guard: Spark orders NaN greatest (x < NaN is true),
         # but Go/PromQL comparisons with NaN are always false

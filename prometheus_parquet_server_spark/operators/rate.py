@@ -20,15 +20,21 @@ from __future__ import annotations
 import math
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from prometheus_parquet_server_spark.operators.interpolate import (
     NAN,
     _asof_context,
+    explode_slot_ranges,
     interp_value,
     keyed_series,
+    slot_instant,
+    slot_limits,
+    slot_pairs,
+    slot_time,
 )
+from prometheus_parquet_server_spark.sqltext import sql_double, sql_ident
 
 
 def _endpoint_probes(
@@ -223,8 +229,10 @@ def interpolate_at_probes_raw(
     )
 
 
-def irate_value(pt: Column, prev: Column, nxt: Column) -> Column:
-    """The irate_over_range() expression (src/timeseries.rs:116-161).
+def irate_value(pt: str, prev: str, nxt: str) -> str:
+    """SQL for the irate_over_range() expression (src/timeseries.rs:116-161)
+    at probe instant ``pt``, given the SQL structs ``prev`` (t, v, tp, vp)
+    and ``nxt`` (t, v).
 
     With locate(t) = Between(i, i+1) (``ts[i] <= t < ts[i+1]``); any other
     locate result → NaN (Below/Above/NotFound, timeseries.rs:123-128), i.e.
@@ -239,16 +247,18 @@ def irate_value(pt: Column, prev: Column, nxt: Column) -> Column:
       (reverse interpolation), then ``delta_v = that − v[i−1]``,
       ``delta_t = t − ts[i−1]``; negative delta_v → NaN.
     """
-    t0, v0, tp, vp = prev["t"], prev["v"], prev["tp"], prev["vp"]
-    t1, v1 = nxt["t"], nxt["v"]
-    first_pair = F.when((v0 - v1) < 0, NAN()).otherwise((v0 - v1) / (t1 - t0))
-    interp_swapped = ((pt - t0) * v0 + (t1 - pt) * v1) / (t1 - t0)
-    dv = interp_swapped - vp
-    general = F.when(dv < 0, NAN()).otherwise(dv / (pt - tp))
+    t0, v0, tp, vp = (f"{prev}.{f}" for f in ("t", "v", "tp", "vp"))
+    t1, v1 = f"{nxt}.t", f"{nxt}.v"
+    nan = sql_double(math.nan)
+    first_pair = (
+        f"CASE WHEN ({v0} - {v1}) < 0 THEN {nan} "
+        f"ELSE ({v0} - {v1}) / ({t1} - {t0}) END"
+    )
+    dv = f"(((({pt} - {t0}) * {v0} + ({t1} - {pt}) * {v1}) / ({t1} - {t0})) - {vp})"
+    general = f"CASE WHEN {dv} < 0 THEN {nan} ELSE {dv} / ({pt} - {tp}) END"
     return (
-        F.when(prev.isNull() | nxt.isNull(), NAN())
-        .when(tp.isNull(), first_pair)
-        .otherwise(general)
+        f"CASE WHEN {prev} IS NULL OR {nxt} IS NULL THEN {nan} "
+        f"WHEN {tp} IS NULL THEN {first_pair} ELSE {general} END"
     )
 
 
@@ -262,11 +272,12 @@ def _irate_slots(
     chunk_s: float | None = None,
 ) -> DataFrame:
     """Sort-free irate on a REGULAR grid (same slot-ownership trick as
-    resample_slots): each adjacent sample pair (i, i+1) owns the slots with
-    ``ts[i] <= pt < ts[i+1]`` — exactly locate()'s Between(i, i+1) — and
-    carries its lagged predecessor (tp, vp) for the general-case formula.
-    Slots before the first sample (Below) and at/after the last (Above) are
-    NaN per timeseries.rs:123-128, so those ranges are never emitted; the
+    resample_slots, sharing its slot_pairs prologue): each adjacent sample
+    pair (i, i+1) owns the slots with ``ts[i] <= pt < ts[i+1]`` — exactly
+    locate()'s Between(i, i+1) — and carries its lagged predecessor
+    (tp, vp) for the general-case formula. Slots before the first sample
+    (Below) and at/after the last (Above) are NaN per
+    timeseries.rs:123-128, so those ranges are never emitted; the
     consumer treats missing grid rows as NaN series points — but to keep
     the output shape identical to the window path we DO emit them with NaN.
 
@@ -279,108 +290,37 @@ def _irate_slots(
     src/timeseries.rs:146-148). Identical expressions per pair →
     bit-identical output for any chunk width.
     """
-    from prometheus_parquet_server_spark.operators.interpolate import keyed_series
-
-    n = len(grid)
-    start, step = grid.start, grid.increment
-    canonical = series_cols is None
-    if canonical:
-        samples, series = keyed_series(samples)
-        key_cols = ["_skey"]
-    else:
-        series = None
-        key_cols = list(series_cols)
-
-    lo, hi = F.lit(0).cast("long"), F.lit(n).cast("long")
-
-    def pt_of(slot):
-        return (F.lit(start) + slot.cast("double") * F.lit(step)) - F.lit(
-            float(offset)
-        )
-
-    def a_of(t: Column) -> Column:
-        nc = F.ceil(
-            (t + F.lit(float(offset)) - F.lit(start)) / F.lit(step)
-        ).cast("long")
-        nc = F.when(pt_of(nc - 1) >= t, nc - 1).otherwise(nc)
-        nc = F.when(pt_of(nc) < t, nc + 1).otherwise(nc)
-        return F.greatest(lo, F.least(hi, nc))
-
-    a = a_of(F.col("ts"))
-
-    if chunk_s is None:
-        w = Window.partitionBy(*key_cols).orderBy("ts")
-        s = (
-            samples.select(*key_cols, "ts", "value")
-            .withColumn("_a", a)
-            .withColumn("_rn", F.row_number().over(w))
-            .withColumn("_tp", F.lag("ts").over(w))
-            .withColumn("_vp", F.lag("value").over(w))
-            .withColumn("_nts", F.lead("ts").over(w))
-            .withColumn("_nv", F.lead("value").over(w))
-            .withColumn("_na", F.lead("_a").over(w))
-        )
-        series_first = F.col("_rn") == 1
-    else:
-        from prometheus_parquet_server_spark.operators.interpolate import (
-            _chunked_slot_context,
-        )
-
-        s = _chunked_slot_context(
-            samples.select(*key_cols, "ts", "value"),
-            key_cols,
-            chunk_s,
-            a_of,
-            with_prev=True,  # irate's tp/vp: previous chunk's LAST sample
-        )
-        series_first = F.col("_sfirst")
-    # three slot ranges per sample row: Below (first sample only), the
-    # Between range owned by pair (this, next), Above (last sample only)
-    pair_to = F.when(F.col("_nts").isNull(), F.lit(None).cast("long")).otherwise(
-        F.col("_na")
+    s, first, series, key_cols = slot_pairs(
+        samples, grid, series_cols, offset, 0, chunk_s, with_prev=True
     )
-    ranges = F.array(
-        F.struct(
-            F.col("_a").alias("f"),
-            F.coalesce(pair_to, F.col("_a")).alias("u"),
-            F.lit(0).alias("oob"),
-        ),
-        F.struct(
-            F.when(series_first, lo).otherwise(F.lit(None).cast("long")).alias("f"),
-            F.col("_a").alias("u"),
-            F.lit(1).alias("oob"),  # Below → NaN
-        ),
-        F.struct(
-            F.when(F.col("_nts").isNull(), F.col("_a")).otherwise(
-                F.lit(None).cast("long")
-            ).alias("f"),
-            F.when(F.col("_nts").isNull(), hi).otherwise(F.lit(None).cast("long")).alias("u"),
-            F.lit(1).alias("oob"),  # Above (pt >= last ts) → NaN
-        ),
+    lo, hi = slot_limits(grid, 0)
+    null = "CAST(NULL AS BIGINT)"
+    # three slot ranges per sample row: the Between range owned by pair
+    # (this, next), Below (first sample only), Above (last sample only)
+    ranges = (
+        "array("
+        "struct(_a AS f, "
+        f"coalesce(CASE WHEN _nts IS NULL THEN {null} ELSE _na END, _a) AS u, "
+        "0 AS oob), "
+        f"struct(CASE WHEN {first} THEN {lo} ELSE {null} END AS f, _a AS u, "
+        "1 AS oob), "  # Below → NaN
+        f"struct(CASE WHEN _nts IS NULL THEN _a ELSE {null} END AS f, "
+        f"CASE WHEN _nts IS NULL THEN {hi} ELSE {null} END AS u, "
+        "1 AS oob))"  # Above (pt >= last ts) → NaN
     )
-    exploded = (
-        s.select(
-            *key_cols, "ts", "value", "_tp", "_vp", "_nts", "_nv",
-            F.explode(ranges).alias("_r"),
-        )
-        .filter(F.col("_r.f").isNotNull() & (F.col("_r.u") > F.col("_r.f")))
-        .select(
-            *key_cols,
-            "ts", "value", "_tp", "_vp", "_nts", "_nv",
-            F.col("_r.oob").alias("_oob"),
-            F.explode(F.sequence(F.col("_r.f"), F.col("_r.u") - 1)).alias("_slot"),
-        )
+    exploded = explode_slot_ranges(
+        s, key_cols, ["ts", "value", "_tp", "_vp", "_nts", "_nv"], ranges, "oob"
     )
-    gts = F.lit(start) + F.col("_slot").cast("double") * F.lit(step)
-    pt = gts - F.lit(float(offset))
-    prev = F.struct(
-        F.col("ts").alias("t"), F.col("value").alias("v"),
-        F.col("_tp").alias("tp"), F.col("_vp").alias("vp"),
+    val = irate_value(
+        slot_instant(grid, offset, "_slot"),
+        "(struct(ts AS t, value AS v, _tp AS tp, _vp AS vp))",
+        "(struct(_nts AS t, _nv AS v))",
     )
-    nxt = F.struct(F.col("_nts").alias("t"), F.col("_nv").alias("v"))
-    val = F.when(F.col("_oob") == 1, NAN()).otherwise(irate_value(pt, prev, nxt))
-    out = exploded.select(
-        *key_cols, gts.alias(ts_col), val.alias(out_col)
+    out = exploded.selectExpr(
+        *(sql_ident(k) for k in key_cols),
+        f"{slot_time(grid, '_slot')} AS {sql_ident(ts_col)}",
+        f"CASE WHEN _oob = 1 THEN {sql_double(math.nan)} ELSE {val} END "
+        f"AS {sql_ident(out_col)}",
     )
     if series is not None:
         out = out.join(series, "_skey").select("name", "labels", ts_col, out_col)
@@ -432,7 +372,7 @@ def irate_to_grid(
     vals = ctx.select(
         *key_cols,
         F.col("gts").alias(ts_col),
-        irate_value(F.col("_pt"), F.col("_prev"), F.col("_next")).alias(out_col),
+        F.expr(irate_value("_pt", "_prev", "_next")).alias(out_col),
     )
     if canonical:
         vals = vals.join(series, "_skey").select(

@@ -486,8 +486,10 @@ def _pair_cosine_kernel(base: DataFrame, dim: int):
     @pandas_udf("double")
     def _pair_dot(a: pd.Series, b: pd.Series) -> pd.Series:
         sids, u, ok = bc.value
+        # nullable Float64 (pd.NA), not float64 NaN: a dropped pair is a
+        # NULL cosine by construction, not by Arrow's NaN-as-null coercion
         if not len(sids):
-            return pd.Series([None] * len(a), dtype="float64")
+            return pd.Series([pd.NA] * len(a), dtype="Float64")
         an = a.to_numpy(dtype=np.int64)
         bn = b.to_numpy(dtype=np.int64)
         # membership-checked lookup (ADVICE r14): an id absent from the
@@ -500,8 +502,8 @@ def _pair_cosine_kernel(base: DataFrame, dim: int):
         # SQL chain and DuckDB's list_dot_product
         dots = np.cumsum(u[ia] * u[ib], axis=1)[:, -1]
         keep = ok[ia] & ok[ib] & (sids[ia] == an) & (sids[ib] == bn)
-        out = pd.Series(dots)
-        out[~keep] = None  # NULL cosine, exactly the SQL NULL-unit case
+        out = pd.Series(dots, dtype="Float64")
+        out[~keep] = pd.NA  # NULL cosine, exactly the SQL NULL-unit case
         return out
 
     return _pair_dot

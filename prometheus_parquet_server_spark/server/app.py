@@ -51,6 +51,10 @@ from prometheus_parquet_server_spark.plans.compiler import (
     run_query,
 )
 
+#: Prometheus's per-series resolution limit (web/api/v1/api.go): a range
+#: query whose ``(end − start) / step`` exceeds it is refused as bad_data.
+MAX_RESOLUTION_STEPS = 11_000
+
 
 def prepare_collection_for_serving(
     collection: DataFrame,
@@ -238,6 +242,14 @@ class MetricsHTTPServer:
             step = parse_duration(params["step"])
         except (KeyError, ValueError) as e:
             return 400, error_response(f"bad request: {e}")
+        # refused before compiling: a 1 ms step over a week would hand Spark
+        # a 604.8 M-row grid (batch run_query stays unbounded)
+        if step > 0 and (end - start) // step > MAX_RESOLUTION_STEPS:
+            return 400, error_response(
+                "exceeded maximum resolution of 11,000 points per timeseries. "
+                "Try decreasing the query resolution (?step=XX)",
+                "bad_data",
+            )
 
         def compute() -> tuple[int, dict]:
             try:

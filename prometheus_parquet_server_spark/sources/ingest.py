@@ -18,15 +18,23 @@ one declarative unpivot — no row-at-a-time work:
   metricstore.rs:488-516).
 - Numeric coercion (metricstore.rs:203-233): any numeric → f64; NULL → NaN.
 
-Scale note: the unpivot is ``explode`` of a per-row struct array — narrow,
-no shuffle, fully pipelined with the parquet scan. Label values ride along
-as a map built per row; NULL label values are treated as absent.
+Scale note: the unpivot is ``inline`` of a per-row array of finished
+``(name, labels, ts, value)`` structs — narrow, no shuffle, fully pipelined
+with the parquet scan. Each struct builds its own label map per row; NULL
+label values are treated as absent. The projection is one Spark SQL string
+(``selectExpr``) rather than a tree of PySpark ``Column`` calls: building
+the tree cost about 2,300 py4j round trips per zip batch, more than the
+rest of ingest, while the string is parsed once on the JVM side. The
+string refers to the file's columns by position only (see ``sqltext``).
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from prometheus_parquet_server_spark.labels import (
     LE_COLUMN_RE,
@@ -38,6 +46,7 @@ from prometheus_parquet_server_spark.sources.classify import (
     MetricType,
     classify_columns,
 )
+from prometheus_parquet_server_spark.sqltext import sql_double, sql_str
 
 
 def _series_plan(base: str, classification) -> list[tuple[str, str | None, str]]:
@@ -78,16 +87,6 @@ def _series_plan(base: str, classification) -> list[tuple[str, str | None, str]]
     return plan
 
 
-def _nan_coalesced(col: Column) -> Column:
-    """S8: numeric → f64, NULL → NaN (metricstore.rs:203-233)."""
-    return F.coalesce(col.cast("double"), F.lit(float("nan")))
-
-
-def _qcol(name: str) -> Column:
-    """Column ref tolerant of dots/specials in names (e.g. ``Le0.1``)."""
-    return F.col(f"`{name}`")
-
-
 def metric_type_map(schema, base_name: str) -> dict[str, str]:
     """Prometheus metadata type per canonical metric name a wide table
     yields (the serving-side complement of S3 classification): every name
@@ -123,59 +122,45 @@ def wide_to_long(
     Requires ``spark.sql.mapKeyDedupPolicy=LAST_WIN`` (set by get_spark()).
     """
     classification = classify_columns(df.schema)
-    plan = _series_plan(base_name, classification)
-    fixed_labels = fixed_labels or {}
+    # the SQL text names columns by position, so no column name of the
+    # file ever reaches the parser (sqltext: ${...} and escapes)
+    pos = {c: f"_c{i}" for i, c in enumerate(df.columns)}
 
-    label_entries = [
-        F.struct(F.lit(k).alias("key"), F.lit(v).cast("string").alias("value"))
-        for k, v in fixed_labels.items()
+    def entry(key: str, value: str) -> str:
+        return f"struct({sql_str(key)} AS key, {value} AS value)"
+
+    entries = [
+        entry(k, "CAST(NULL AS STRING)" if v is None else sql_str(str(v)))
+        for k, v in (fixed_labels or {}).items()
     ] + [
-        F.struct(F.lit(c).alias("key"), _qcol(c).cast("string").alias("value"))
-        for c in classification.label_columns
+        entry(c, f"CAST({pos[c]} AS STRING)") for c in classification.label_columns
     ]
 
-    series_structs = [
-        F.struct(
-            F.lit(name).alias("_mname"),
-            F.lit(le).cast("string").alias("_le"),
-            _nan_coalesced(_qcol(src)).alias("value"),
+    def labels(le: str | None) -> str:
+        # fixed, then row, then Le entries under LAST_WIN; NULL values absent
+        es = entries + ([entry("Le", sql_str(le))] if le is not None else [])
+        arr = (
+            f"array({', '.join(es)})" if es
+            else "CAST(array() AS ARRAY<STRUCT<key: STRING, value: STRING>>)"
         )
-        for name, le, src in plan
-    ]
+        return f"map_from_entries(filter({arr}, e -> e.value IS NOT NULL))"
 
-    time_type = df.schema[classification.time_column].dataType
-    from pyspark.sql import types as T
-
-    if isinstance(time_type, (T.TimestampType, T.TimestampNTZType, T.DateType)):
+    tcol = pos[classification.time_column]
+    if isinstance(
+        df.schema[classification.time_column].dataType,
+        (T.TimestampType, T.TimestampNTZType, T.DateType),
+    ):
         # NTZ/date won't cast straight to double; go via timestamp (UTC
         # session) → epoch seconds, matching the f64-seconds model
-        ts = _qcol(classification.time_column).cast("timestamp").cast("double")
-    else:
-        ts = _qcol(classification.time_column).cast("double")
-    exploded = df.select(
-        ts.alias("ts"),
-        F.array(*label_entries).alias("_lentries") if label_entries
-        else F.array().cast("array<struct<key:string,value:string>>").alias("_lentries"),
-        F.explode(F.array(*series_structs)).alias("_s"),
-    )
-
-    all_entries = F.when(
-        F.col("_s._le").isNotNull(),
-        F.concat(
-            F.col("_lentries"),
-            F.array(F.struct(F.lit("Le").alias("key"), F.col("_s._le").alias("value"))),
-        ),
-    ).otherwise(F.col("_lentries"))
-
-    labels = F.map_from_entries(
-        F.filter(all_entries, lambda e: e["value"].isNotNull())
-    )
-    return exploded.select(
-        F.col("_s._mname").alias("name"),
-        labels.alias("labels"),
-        "ts",
-        F.col("_s.value").alias("value"),
-    )
+        tcol = f"CAST({tcol} AS TIMESTAMP)"
+    ts = f"CAST({tcol} AS DOUBLE)"
+    series = [
+        f"struct({sql_str(name)} AS name, {labels(le)} AS labels, {ts} AS ts, "
+        # S8: numeric → f64, NULL → NaN (metricstore.rs:203-233)
+        f"coalesce(CAST({pos[src]} AS DOUBLE), {sql_double(math.nan)}) AS value)"
+        for name, le, src in _series_plan(base_name, classification)
+    ]
+    return df.toDF(*pos.values()).selectExpr(f"inline(array({', '.join(series)}))")
 
 
 def epoch_micros(df: DataFrame, col: str = "ts") -> Column:

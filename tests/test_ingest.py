@@ -182,6 +182,57 @@ def test_zip_ingest_with_retag(spark, tmp_path):
     assert all(r["labels"]["run"] == "A" for r in rows if r["name"] == "m_gauge")
 
 
+#: text that the unpivot's SQL must carry verbatim: a variable reference
+#: (Spark SQL turns an unknown one into ""), a quote, a backslash, a
+#: backtick, a unicode escape, a newline, non-ASCII
+HOSTILE = ["${no.such.key}", "q'uote", "back\\slash", "tick`", "\\u0041",
+           "new\nline", "ünï—☃"]
+
+
+def test_zip_ingest_hostile_names_exact_rows(spark, tmp_path):
+    """Label column names, re-tag keys and values, value column names and
+    the member file name all reach wide_to_long's SQL text: every one must
+    come out verbatim (no ``${...}`` substitution, no unescaping)."""
+    import math
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = [
+        {h: f"{h}!" for h in HOSTILE},
+        {h: None if h == HOSTILE[0] else h for h in HOSTILE},  # NULL → absent
+    ]
+    table = {"time": [1.0, 2.0]}
+    table.update({h: [r[h] for r in rows] for h in HOSTILE})
+    table["value"] = [1.5, None]
+    table["e${no.such.key}"] = [3.0, 4.0]
+    pq.write_table(pa.table(table), tmp_path / "m.parquet")
+    with zipfile.ZipFile(tmp_path / "z.zip", "w") as z:
+        # no braces: Spark reads the extracted member as a glob pattern
+        z.write(tmp_path / "m.parquet", "run/m$'`ü.parquet")
+    # ${spark.app.name} only here: Spark's Parquet reader itself reads a
+    # column of that name as NULL (the app name is a Hadoop conf key)
+    fixed = {f"k{h}": f"v{h}" for h in [*HOSTILE, "${spark.app.name}"]}
+    fixed[HOSTILE[0]] = "fixed"  # kept where the row's value is NULL
+    fixed[HOSTILE[1]] = "fixed"  # the row's value wins
+
+    out = ingest_zip(spark, tmp_path / "z.zip", {"run": fixed},
+                     scratch_dir=str(tmp_path / "x"))
+
+    def key(name, labels, ts, value):
+        return repr((name, sorted(labels.items()), ts,
+                     "NaN" if math.isnan(value) else value))
+
+    base = "m____"
+    want = []
+    for ts, row, v, e in zip((1.0, 2.0), rows, (1.5, math.nan), (3.0, 4.0)):
+        labels = {**fixed, **{h: x for h, x in row.items() if x is not None}}
+        want += [key(base, labels, ts, v),
+                 key(f"{base}_e__no_such_key_", labels, ts, e)]
+    got = [key(r["name"], r["labels"], r["ts"], r["value"]) for r in out.collect()]
+    assert sorted(got) == sorted(want)
+
+
 def test_store_roundtrip(spark, tmp_path):
     df = wide_to_long(spark.createDataFrame(gauge_pdf()), "m_gauge")
     write_store(df, str(tmp_path / "store"))

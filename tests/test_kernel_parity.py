@@ -158,28 +158,32 @@ def test_pair_cosine_kernel_off_length_falls_back(spark):
 def test_pair_cosine_kernel_unknown_id_is_null(spark):
     """ADVICE r14: an id absent from the broadcast matrix must yield a
     NULL cosine (the documented dropped-pair behavior) — never a silent
-    neighboring-row gather or an IndexError past the array end."""
+    neighboring-row gather or an IndexError past the array end. So must
+    a pair with a NULL or zero vector, and the cosine is SQL NULL, not
+    NaN."""
     from prometheus_parquet_server_spark.pipeline.similarity import (
         _pair_cosine_kernel,
     )
 
     base = spark.createDataFrame(
-        [(10, [1.0, 0.0]), (20, [1.0, 0.0])], "_id long, _v array<double>"
+        [(10, [1.0, 0.0]), (20, [1.0, 0.0]), (30, None), (40, [0.0, 0.0])],
+        "_id long, _v array<double>",
     )
     fn = _pair_cosine_kernel(base, 2)
     pairs = spark.createDataFrame(
-        # 15 searchsorts between the ids; 99 past the end; 10-20 valid
-        [(10, 20), (10, 15), (10, 99)], "a long, b long"
+        # 15 searchsorts between the ids; 99 past the end; 10-20 valid;
+        # 30 has a NULL vector and 40 a zero one (NULL unit vectors)
+        [(10, 20), (10, 15), (10, 99), (10, 30), (40, 10)], "a long, b long"
     )
     rows = {
-        (r["a"], r["b"]): r["c"]
-        for r in pairs.select(
-            "a", "b", fn(F.col("a"), F.col("b")).alias("c")
-        ).collect()
+        (r["a"], r["b"]): (r["c"], r["is_null"], r["is_nan"])
+        for r in pairs.select("a", "b", fn(F.col("a"), F.col("b")).alias("c"))
+        .selectExpr("a", "b", "c", "c IS NULL AS is_null", "isnan(c) AS is_nan")
+        .collect()
     }
-    assert rows[(10, 20)] == 1.0
-    assert rows[(10, 15)] is None
-    assert rows[(10, 99)] is None
+    assert rows.pop((10, 20)) == (1.0, False, False)
+    # every dropped pair is SQL NULL, never NaN
+    assert set(rows.values()) == {(None, True, False)} and len(rows) == 4
 
 
 def test_keyed_series_null_labels_survive_resample(spark):

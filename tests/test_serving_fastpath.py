@@ -396,3 +396,43 @@ def test_plan_memo_threads_keep_capacity_and_keys():
         sys.setswitchinterval(old)
     assert not any(t.is_alive() for t in threads)
     assert not errors and len(memo._plans) == 4
+
+
+def test_query_range_refuses_oversized_grid_before_compiling(spark, monkeypatch):
+    """Prometheus's resolution limit: more than 11,000 steps per series is
+    400 bad_data, refused before any compile, so no Spark job starts. At
+    the limit (11,001 points) the request goes on to compile."""
+    import uuid
+
+    from prometheus_parquet_server_spark.server import app
+
+    srv = app.MetricsHTTPServer(spark, _collection(spark))
+    sc = spark.sparkContext
+    group = f"grid-guard-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        # a 1 ms step over a week: 604.8 M points
+        status, payload = srv.handle_query_range(
+            {"query": "sum(m)", "start": "0", "end": "604800", "step": "1ms"}
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert status == 400
+    assert payload == {
+        "status": "error",
+        "errorType": "bad_data",
+        "error": "exceeded maximum resolution of 11,000 points per timeseries. "
+        "Try decreasing the query resolution (?step=XX)",
+    }
+
+    def compiled(*_args, **_kwargs):
+        raise RuntimeError("compiled")
+
+    monkeypatch.setattr(app, "run_query", compiled)
+    for steps, error in ((11_001, payload["error"]), (11_000, "compiled")):
+        status, out = srv.handle_query_range(
+            {"query": "sum(m)", "start": "0", "end": str(15 * steps), "step": "15s"}
+        )
+        assert (status, out["error"]) == (400, error)
