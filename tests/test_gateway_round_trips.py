@@ -12,7 +12,6 @@ them. The ceilings are about twice the counts measured with SQL text.
 import contextlib
 import gc
 
-import pandas as pd
 from py4j.clientserver import ClientServerConnection
 
 from prometheus_parquet_server_spark.operators.grid import RegularTimeRange
@@ -44,7 +43,7 @@ def gateway_commands(monkeypatch):
 
 
 def test_wide_to_long_histogram_round_trips(spark, monkeypatch):
-    wide = spark.createDataFrame(pd.DataFrame(histo_pdf(with_inf=True)))
+    wide = spark.createDataFrame(histo_pdf(with_inf=True))
     wide_to_long(wide, "m_duration", {"dc": "ams"})  # first-call set-up
     with gateway_commands(monkeypatch) as n:
         wide_to_long(wide, "m_duration", {"dc": "ams"})
