@@ -26,7 +26,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from prometheus_parquet_server_spark.labels import NAME_LABEL
-from prometheus_parquet_server_spark.model import canonical_labels_json
+from prometheus_parquet_server_spark.model import (
+    EMPTY_LABELS,
+    canonical_labels_sql,
+    label_subset_sql,
+)
+from prometheus_parquet_server_spark.sqltext import sql_ident
 
 
 #: Cross-series aggregation functions. The reference implements only sum
@@ -159,39 +164,35 @@ def _grouped_agg(
     if by is not None and without is not None:
         raise ValueError("pass at most one of by/without")
 
+    null_name = "CAST(NULL AS STRING)"
     if by is not None:
-        keys = [k for k in by if k != NAME_LABEL]
-        keep = F.array([F.lit(k) for k in keys])
-        retained = F.map_filter(F.col("labels"), lambda k, _: F.array_contains(keep, k))
-        name_out = F.col("name") if NAME_LABEL in by else F.lit(None).cast("string")
+        keep = [k for k in by if k != NAME_LABEL]
+        retained = label_subset_sql("labels", keep=keep)
+        name_out = "name" if NAME_LABEL in by else null_name
     elif without is not None:
-        drop = F.array([F.lit(k) for k in without if k != NAME_LABEL])
-        retained = F.map_filter(
-            F.col("labels"), lambda k, _: ~F.array_contains(drop, k)
-        )
-        name_out = (
-            F.lit(None).cast("string") if NAME_LABEL in without else F.col("name")
-        )
+        drop = [k for k in without if k != NAME_LABEL]
+        retained = label_subset_sql("labels", drop=drop)
+        name_out = null_name if NAME_LABEL in without else "name"
     else:
-        retained = F.map_from_arrays(
-            F.array().cast("array<string>"), F.array().cast("array<string>")
-        )
-        name_out = F.lit(None).cast("string")
+        retained, name_out = EMPTY_LABELS, null_name
 
     # Perf shape: the wide aggregation runs over (string, string, double)
     # keys only — no MAP columns in the shuffle, no first(map) buffers
     # (measured ~3× faster at sf0.1). The label map is reconstructed from
-    # the canonical JSON group key afterwards, once per output row.
-    prepared = df.select(
-        name_out.alias("_name"),
-        canonical_labels_json(retained).alias("_gkey"),
+    # the canonical JSON group key afterwards, once per output row. Both
+    # projections are SQL text: one gateway call each.
+    prepared = df.selectExpr(
+        f"{name_out} AS _name",
+        f"to_json({canonical_labels_sql(retained)}) AS _gkey",
         "ts",
         "value",
     )
     summed = prepared.groupBy("_name", "_gkey", "ts").agg(*aggs)
-    labels_back = F.from_json(F.col("_gkey"), "map<string,string>")
-    return summed.select(
-        F.col("_name").alias("name"), labels_back.alias("labels"), "ts", *out_cols
+    return summed.selectExpr(
+        "_name AS name",
+        "from_json(_gkey, 'map<string,string>') AS labels",
+        "ts",
+        *(sql_ident(c) for c in out_cols),
     )
 
 

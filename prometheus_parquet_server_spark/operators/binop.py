@@ -34,7 +34,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from prometheus_parquet_server_spark.labels import NAME_LABEL
-from prometheus_parquet_server_spark.model import canonical_labels_json
+from prometheus_parquet_server_spark.model import canonical_labels_json, label_subset_sql
 
 ARITH_OPS = ("+", "-", "*", "/", "%", "^")
 COMP_OPS = ("==", "!=", ">", "<", ">=", "<=")
@@ -208,30 +208,24 @@ def gridscalar_const_op(
     return gs.select("ts", val.alias("value"))
 
 
-def _match_key(labels: Column, on: list[str] | None, ignoring: list[str] | None) -> Column:
-    """Canonical string key of the matching label subset. ``__name__`` never
-    participates in matching (Prometheus drops it before matching)."""
+def _subset(labels: str, on: list[str] | None, ignoring: list[str] | None) -> str:
+    """SQL: ``labels`` restricted to the matching labels (on) or minus the
+    ignored ones. ``__name__`` never participates in matching (Prometheus
+    drops it before matching)."""
     if on is not None:
-        keep = F.array([F.lit(k) for k in on if k != NAME_LABEL])
-        restricted = F.map_filter(labels, lambda k, _: F.array_contains(keep, k))
-    elif ignoring:
-        drop = F.array([F.lit(k) for k in ignoring if k != NAME_LABEL])
-        restricted = F.map_filter(labels, lambda k, _: ~F.array_contains(drop, k))
-    else:
-        restricted = labels
-    return canonical_labels_json(restricted)
+        return label_subset_sql(labels, keep=[k for k in on if k != NAME_LABEL])
+    return label_subset_sql(labels, drop=[k for k in ignoring or () if k != NAME_LABEL])
 
 
-def _result_labels(labels: Column, on: list[str] | None, ignoring: list[str] | None) -> Column:
+def _match_key(on: list[str] | None, ignoring: list[str] | None) -> Column:
+    """Canonical string key of the matching label subset."""
+    return canonical_labels_json(_subset("labels", on, ignoring))
+
+
+def _result_labels(labels: str, on: list[str] | None, ignoring: list[str] | None) -> Column:
     """One-to-one result label set: the side's labels restricted to the
     matching labels (on) or minus the ignored ones."""
-    if on is not None:
-        keep = F.array([F.lit(k) for k in on if k != NAME_LABEL])
-        return F.map_filter(labels, lambda k, _: F.array_contains(keep, k))
-    if ignoring:
-        drop = F.array([F.lit(k) for k in ignoring if k != NAME_LABEL])
-        return F.map_filter(labels, lambda k, _: ~F.array_contains(drop, k))
-    return labels
+    return F.expr(_subset(labels, on, ignoring))
 
 
 #: Prometheus error parity (promql/engine.go matching errors). One-to-one
@@ -292,8 +286,8 @@ def vector_vector_op(
     Set ops (`and`/`or`/`unless`) ignore group/bool and preserve the lhs rows
     (plus, for ``or``, the unmatched rhs rows).
     """
-    key_l = _match_key(F.col("labels"), on, ignoring)
-    key_r = _match_key(F.col("labels"), on, ignoring)
+    key_l = _match_key(on, ignoring)
+    key_r = _match_key(on, ignoring)
     left = lhs.select(
         key_l.alias("_mk"), "ts", F.col("name").alias("_ln"),
         F.col("labels").alias("_ll"), F.col("value").alias("_lv"),
@@ -382,7 +376,7 @@ def vector_vector_op(
             out_labels = many_labels
         out_name = F.lit(None).cast("string")
     else:
-        out_labels = _result_labels(F.col("_ll"), on, ignoring)
+        out_labels = _result_labels("_ll", on, ignoring)
         out_name = F.lit(None).cast("string")
 
     if op in COMP_OPS:

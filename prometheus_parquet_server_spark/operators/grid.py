@@ -13,7 +13,8 @@ import math
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from prometheus_parquet_server_spark.sqltext import sql_double, sql_ident
 
 
 @dataclass(frozen=True)
@@ -69,8 +70,7 @@ class RegularTimeRange:
         """Distributed grid: ``spark.range(len)`` keeps generation on
         executors; the f64 expression matches :meth:`instants` bit-for-bit
         (same IEEE mul-then-add)."""
-        return spark.range(self._len).select(
-            (F.lit(self.start) + F.col("id").cast("double") * F.lit(self.increment)).alias(
-                col_name
-            )
+        return spark.range(self._len).selectExpr(
+            f"{sql_double(self.start)} + CAST(id AS DOUBLE) * "
+            f"{sql_double(self.increment)} AS {sql_ident(col_name)}"
         )

@@ -70,11 +70,11 @@ def histogram_quantile(
     """
     phi_lit = F.lit(float(phi))
     with_le = df.filter(F.col("labels").getItem("Le").isNotNull())
-    key_labels = F.map_filter(F.col("labels"), lambda k, _: k != "Le")
+    key_labels = "map_filter(labels, (k, v) -> k != 'Le')"
 
     prepared = with_le.select(
         "name",
-        key_labels.alias("glabels"),
+        F.expr(key_labels).alias("glabels"),
         canonical_labels_json(key_labels).alias("_gkey"),
         F.col("ts"),
         _le_bound(F.col("labels").getItem("Le")).alias("_le"),

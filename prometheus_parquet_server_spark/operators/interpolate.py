@@ -17,6 +17,15 @@ single window pass per series computes every probe's straddling samples in
 one sort: one shuffle on the series key, then linear merge. This is the plan
 that survives 100 TB — no per-probe lookups, no driver-side loops, and the
 shuffle key (series) matches the downstream groupBy keys so AQE can coalesce.
+
+Series identity: a MAP cannot be a window key, so every per-series window
+partitions on the string key ``_skey`` (``model.series_key_str``). The
+slot operators on a regular grid (:func:`resample_slots`, rate's lag path,
+irate's slots) carry ``name`` and the canonical label map through the
+window and the explode as payload, so one scan of the samples feeds the
+whole plan. The probe paths still need the series list itself, to cross
+with the grid, and take it from :func:`keyed_series`: a distinct over the
+samples, joined back at the end.
 """
 
 from __future__ import annotations
@@ -26,6 +35,11 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from prometheus_parquet_server_spark.model import (
+    canonical_labels_sql,
+    series_key_sql,
+    series_key_str,
+)
 from prometheus_parquet_server_spark.sqltext import sql_double, sql_ident
 
 
@@ -153,13 +167,15 @@ def keyed_series(samples: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     Returns (keyed samples with ``_skey``, one-row-per-series frame with
     ``_skey, name, labels``).
-    """
-    from prometheus_parquet_server_spark.model import (
-        canonical_labels_json,
-        series_key_str,
-    )
 
-    # NULL labels key as the empty map (canonical_labels_json coalesces),
+    Only the probe paths use it, because they need the series list to
+    cross with the grid or to join labels back after a groupBy: the as-of
+    resample (``grid=None``), rate's two-probe path, ``rate``/``irate``
+    with ``over_range == 0``, ``irate`` without a grid, and the
+    ``*_over_time``/``changes``/``resets`` slot groupBys. The slot
+    operators carry the labels instead (:func:`slot_pairs`).
+    """
+    # NULL labels key as the empty map (canonical_labels_sql coalesces),
     # so a NULL-labels series is the ordinary empty-label series on BOTH
     # the keyed and series sides. (Known degenerate limitation: a metric
     # literally named U+0000 shares an _skey with a NULL-named series of
@@ -177,17 +193,9 @@ def keyed_series(samples: DataFrame) -> tuple[DataFrame, DataFrame]:
     # the identical entries (to_json/from_json is lossless for
     # map<string,string>).
     series = (
-        keyed.select(
-            "_skey",
-            "name",
-            canonical_labels_json(F.col("labels")).alias("_lj"),
-        )
+        keyed.selectExpr("_skey", "name", f"to_json({canonical_labels_sql()}) AS _lj")
         .distinct()
-        .select(
-            "_skey",
-            "name",
-            F.from_json("_lj", "map<string,string>").alias("labels"),
-        )
+        .selectExpr("_skey", "name", "from_json(_lj, 'map<string,string>') AS labels")
     )
     return keyed, series
 
@@ -325,37 +333,37 @@ def slot_pairs(
     ``_tp/_vp`` (the previous sample). ``chunk_s`` selects the hot-series
     window (see :func:`_chunked_slot_context`).
 
-    Returns (frame, SQL test for "first sample of its series",
-    series_frame_or_None, key_cols).
+    In canonical mode (``series_cols=None``) the window key is the string
+    ``_skey`` alone, and ``name`` plus the canonical label map ride along
+    as payload (built once per sample, the map ``from_json`` of the key's
+    JSON would give), so no caller joins a series frame back.
+
+    Returns (frame, SQL test for "first sample of its series", key_cols,
+    payload columns).
     """
-    canonical = series_cols is None
-    if canonical:
-        samples, series = keyed_series(samples)
-        key_cols = ["_skey"]
+    if series_cols is None:
+        key_cols, payload = ["_skey"], ["name", "labels"]
+        base = samples.selectExpr(
+            "name", f"{canonical_labels_sql()} AS labels", "ts", "value"
+        ).selectExpr(f"{series_key_sql(canonical=True)} AS _skey", *payload, "ts", "value")
     else:
-        series = None
-        key_cols = list(series_cols)
+        key_cols, payload = list(series_cols), []
+        base = samples.selectExpr(*(sql_ident(k) for k in key_cols), "ts", "value")
     lo, hi = slot_limits(grid, slot_from)
 
     def a_of(t: str) -> str:
         return f"greatest({lo}, least({hi}, {first_slot_at(grid, offset, t)}))"
 
-    base = samples.selectExpr(*(sql_ident(k) for k in key_cols), "ts", "value")
     if chunk_s is not None:
         s = _chunked_slot_context(base, key_cols, chunk_s, a_of, with_prev)
-        return s, "_sfirst", series, key_cols
+        return s, "_sfirst", key_cols, payload
     w = _over(key_cols, "ts")
-    cols = [("_a", a_of("ts")), ("_rn", f"row_number() {w}")]
+    cols = [f"{a_of('ts')} AS _a", f"row_number() {w} AS _rn"]
     if with_prev:
-        cols += [("_tp", f"lag(ts) {w}"), ("_vp", f"lag(value) {w}")]
-    cols += [
-        ("_nts", f"lead(ts) {w}"),
-        ("_nv", f"lead(value) {w}"),
-        ("_na", f"lead(_a) {w}"),
-    ]
-    for name, expr in cols:
-        base = base.withColumn(name, F.expr(expr))
-    return base, "_rn = 1", series, key_cols
+        cols += [f"lag(ts) {w} AS _tp", f"lag(value) {w} AS _vp"]
+    cols += [f"lead(ts) {w} AS _nts", f"lead(value) {w} AS _nv"]
+    base = base.selectExpr("*", *cols).selectExpr("*", f"lead(_a) {w} AS _na")
+    return base, "_rn = 1", key_cols, payload
 
 
 def explode_slot_ranges(
@@ -423,10 +431,11 @@ def resample_slots(
     bit-identical for any chunk width (pinned by tests and by the shared
     t3 oracle).
 
-    Returns (df with key_cols + _slot + gts + value, series_frame_or_None,
-    key_cols). ``slot_from`` may be negative (rate's extended grid).
+    Returns (df with key_cols + payload (canonical mode: ``name``,
+    ``labels``) + _slot + gts + value, key_cols). ``slot_from`` may be
+    negative (rate's extended grid).
     """
-    s, first, series, key_cols = slot_pairs(
+    s, first, key_cols, payload = slot_pairs(
         samples, grid, series_cols, offset, slot_from, chunk_s
     )
     lo, hi = slot_limits(grid, slot_from)
@@ -437,7 +446,7 @@ def resample_slots(
         "_a AS u, 1 AS below))"
     )
     exploded = explode_slot_ranges(
-        s, key_cols, ["ts", "value", "_nts", "_nv"], ranges, "below"
+        s, key_cols, [*payload, "ts", "value", "_nts", "_nv"], ranges, "below"
     )
     pt = slot_instant(grid, offset, "_slot")
     val = (
@@ -447,16 +456,17 @@ def resample_slots(
     )
     out = exploded.selectExpr(
         *(sql_ident(k) for k in key_cols),
+        *payload,
         "_slot",
         f"{slot_time(grid, '_slot')} AS gts",
         f"{val} AS value",
     )
-    return out, series, key_cols
+    return out, key_cols
 
 
 def resample_to_grid(
     samples: DataFrame,
-    grid_df: DataFrame,
+    grid_df: DataFrame | None,
     series_cols: Sequence[str] | None = None,
     offset: float = 0.0,
     ts_col: str = "ts",
@@ -474,22 +484,22 @@ def resample_to_grid(
 
     Pass the :class:`RegularTimeRange` as ``grid`` to use the sort-free
     slot-explode plan (bit-identical results, no wide shuffle of the
-    grid-sized output). ``chunk_s`` (slot path only) is the hot-series
-    escape hatch — see :func:`resample_slots`.
+    grid-sized output); it never reads ``grid_df``, which may then be
+    None. ``chunk_s`` (slot path only) is the hot-series escape hatch — see
+    :func:`resample_slots`.
     """
     if chunk_s is not None and grid is None:
         raise ValueError("chunk_s requires the slot path — pass grid=")
     if grid is not None:
-        out, series, key_cols = resample_slots(
+        out, key_cols = resample_slots(
             samples, grid, series_cols, offset, chunk_s=chunk_s
         )
-        if series is not None:
-            return out.join(series, "_skey").select(
-                "name", "labels", F.col("gts").alias(ts_col), F.col("value").alias(out_col)
-            )
+        cols = ["name", "labels"] if series_cols is None else key_cols
         return out.select(
-            *key_cols, F.col("gts").alias(ts_col), F.col("value").alias(out_col)
+            *cols, F.col("gts").alias(ts_col), F.col("value").alias(out_col)
         )
+    if grid_df is None:
+        raise ValueError("the as-of path needs grid_df (or pass grid=)")
     if series_cols is None:
         # Maps never enter the wide union/window/shuffle: only the string
         # series key rides along; (name, labels) come back via a join with

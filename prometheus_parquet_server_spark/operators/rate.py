@@ -29,11 +29,13 @@ from prometheus_parquet_server_spark.operators.interpolate import (
     explode_slot_ranges,
     interp_value,
     keyed_series,
+    resample_slots,
     slot_instant,
     slot_limits,
     slot_pairs,
     slot_time,
 )
+from prometheus_parquet_server_spark.model import series_key_str
 from prometheus_parquet_server_spark.sqltext import sql_double, sql_ident
 
 
@@ -146,27 +148,19 @@ def _rate_lagged(
 ) -> DataFrame:
     """Lag fast path: sort-free slot resample onto the grid extended k slots
     backwards, then ``(v[i] − v[i−k]) / r`` per series ordered by slot."""
-    from prometheus_parquet_server_spark.operators.interpolate import (
-        resample_slots,
-    )
-
     k = int(over_range / grid.increment)
-    out, series, key_cols = resample_slots(
-        samples, grid, series_cols, offset, slot_from=-k
-    )
+    out, key_cols = resample_slots(samples, grid, series_cols, offset, slot_from=-k)
+    cols = ["name", "labels"] if series_cols is None else key_cols
     w = Window.partitionBy(*key_cols).orderBy("_slot")
-    res = (
+    return (
         out.withColumn("_lo", F.lag("value", k).over(w))
         .filter(F.col("_slot") >= 0)
         .select(
-            *key_cols,
+            *cols,
             F.col("gts").alias(ts_col),
             ((F.col("value") - F.col("_lo")) / F.lit(float(over_range))).alias(out_col),
         )
     )
-    if series is not None:
-        res = res.join(series, "_skey").select("name", "labels", ts_col, out_col)
-    return res
 
 
 def rate_from_aligned(
@@ -189,19 +183,14 @@ def rate_from_aligned(
     Bit-identical to rate_to_grid: identical interpolation feeds an
     identical (hi − lo)/r expression.
 
-    Serving-scale trade: the single window shuffle carries the labels MAP
-    directly (partitioned on the string series key) instead of the batch
-    path's keyed_series split+join — one exchange instead of three on a
-    frame that is panel-sized by construction. The batch operators keep
-    maps out of wide shuffles; this path is only reachable through a
+    The single window shuffle carries the labels MAP as payload,
+    partitioned on the string series key — the same shape as the batch
+    slot operators (interpolate.slot_pairs), so carrying the map is not a
+    serving-only trade. This path is only reachable through a
     server-provided aligned store.
     """
-    from prometheus_parquet_server_spark.model import series_key_str
-
     k = int(over_range / grid.increment)
-    w = Window.partitionBy(
-        series_key_str(F.col("name"), F.col("labels"))
-    ).orderBy("ts")
+    w = Window.partitionBy(series_key_str()).orderBy("ts")
     return (
         aligned_ext_sel.withColumn("_lo", F.lag("value", k).over(w))
         .filter(F.col("ts") >= F.lit(float(grid.start)))
@@ -290,7 +279,7 @@ def _irate_slots(
     src/timeseries.rs:146-148). Identical expressions per pair →
     bit-identical output for any chunk width.
     """
-    s, first, series, key_cols = slot_pairs(
+    s, first, key_cols, payload = slot_pairs(
         samples, grid, series_cols, offset, 0, chunk_s, with_prev=True
     )
     lo, hi = slot_limits(grid, 0)
@@ -309,22 +298,19 @@ def _irate_slots(
         "1 AS oob))"  # Above (pt >= last ts) → NaN
     )
     exploded = explode_slot_ranges(
-        s, key_cols, ["ts", "value", "_tp", "_vp", "_nts", "_nv"], ranges, "oob"
+        s, key_cols, [*payload, "ts", "value", "_tp", "_vp", "_nts", "_nv"], ranges, "oob"
     )
     val = irate_value(
         slot_instant(grid, offset, "_slot"),
         "(struct(ts AS t, value AS v, _tp AS tp, _vp AS vp))",
         "(struct(_nts AS t, _nv AS v))",
     )
-    out = exploded.selectExpr(
-        *(sql_ident(k) for k in key_cols),
+    return exploded.selectExpr(
+        *(payload or [sql_ident(k) for k in key_cols]),
         f"{slot_time(grid, '_slot')} AS {sql_ident(ts_col)}",
         f"CASE WHEN _oob = 1 THEN {sql_double(math.nan)} ELSE {val} END "
         f"AS {sql_ident(out_col)}",
     )
-    if series is not None:
-        out = out.join(series, "_skey").select("name", "labels", ts_col, out_col)
-    return out
 
 
 def irate_to_grid(

@@ -101,7 +101,7 @@ def series_sets(df: DataFrame, matchers: list[LabelMatcher]) -> DataFrame:
     sel = select_series(df, matchers, require_name_equality=False)
     dedup = (
         sel.select(
-            "name", canonical_labels_json(F.col("labels")).alias("_lj")
+            "name", canonical_labels_json().alias("_lj")
         )
         .distinct()
     )

@@ -191,9 +191,8 @@ def _resampled(state: State, ctx: _Ctx) -> State:
         return state
     if isinstance(state, Unprocessed):
         offset = float(state.offset or 0)
-        return Processed(
-            resample_to_grid(state.df, ctx.grid_df(), offset=offset, grid=ctx.grid)
-        )
+        # the slot path reads ctx.grid only: no grid frame is built
+        return Processed(resample_to_grid(state.df, None, offset=offset, grid=ctx.grid))
     raise QueryError("Cannot resample a vectorized time series")
 
 

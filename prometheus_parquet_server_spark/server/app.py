@@ -198,9 +198,7 @@ class MetricsHTTPServer:
             build_grid = RegularTimeRange(
                 grid.start - pad * grid.increment, grid.end, grid.increment
             )
-        frame = resample_to_grid(
-            self.collection, build_grid.to_df(self.spark), grid=build_grid
-        ).persist()
+        frame = resample_to_grid(self.collection, None, grid=build_grid).persist()
         frame.count()  # materialize outside the request's critical path
         entry = _AlignedEntry(grid, pad, frame, self._response_cache_size)
         key = (grid.start, grid.end, grid.increment)

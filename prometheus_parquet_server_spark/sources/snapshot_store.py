@@ -67,7 +67,7 @@ from urllib.parse import unquote, urlsplit
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from prometheus_parquet_server_spark.model import series_key_str
+from prometheus_parquet_server_spark.model import series_key_sql, series_key_str
 from prometheus_parquet_server_spark.sources.footer import footer_stats, read_parquet
 from prometheus_parquet_server_spark.sources.manifest import (
     ConcurrentWriteError,  # re-exported: callers import it from here
@@ -92,6 +92,8 @@ from prometheus_parquet_server_spark.sources.manifest import (
     version_as_of,
 )
 from prometheus_parquet_server_spark.sources.store import read_store
+from prometheus_parquet_server_spark.sqltext import sql_double
+
 
 class _StoreFS:
     """Data-file I/O of this module — the census of a tx dir, vacuum's
@@ -186,8 +188,8 @@ def _key_guard(df: DataFrame) -> tuple[DataFrame, Observation]:
     rides the write stage itself (not the range partitioner's sampling
     job) and sees each row once."""
     guard = Observation()
-    bad = F.col("name").isNull() | F.col("ts").isNull() | F.isnan("ts")
-    return df.observe(guard, F.count_if(bad).alias("n_bad")), guard
+    bad = F.expr("count_if(name IS NULL OR ts IS NULL OR isnan(ts)) AS n_bad")
+    return df.observe(guard, bad), guard
 
 
 def _write_data_files(
@@ -214,18 +216,16 @@ def _write_data_files(
     tx = f"{path}/data/tx_{uuid.uuid4().hex[:12]}"
     if time_chunk_s is not None and not time_chunk_s > 0:
         raise ValueError(f"time_chunk_s must be > 0, got {time_chunk_s}")
-    sk = series_key_str() if "labels" in df.columns else F.col("name")
     range_key = (
         ["name", "_tc", "_sk", "ts"] if time_chunk_s is not None else ["name", "_sk", "ts"]
     )
-    staged = df.withColumn("_sk", sk)
+    staging = {"_sk": series_key_sql() if "labels" in df.columns else "name"}
     if time_chunk_s is not None:
         # NaN ts would floor to chunk 0 and silently mis-cluster — but the
         # key guard rejects any NaN-ts batch wholesale before its manifest
         # is built, so the bucket value never reaches a committed manifest.
-        staged = staged.withColumn(
-            "_tc", F.floor(F.col("ts") / F.lit(float(time_chunk_s)))
-        )
+        staging["_tc"] = f"floor(ts / {sql_double(time_chunk_s)})"
+    staged = df.withColumns({c: F.expr(e) for c, e in staging.items()})
     range_args = ([num_partitions] if num_partitions is not None else []) + range_key
     guarded, guard = _key_guard(
         # RANGE partitioning, not hash-on-name: files stay name-contiguous

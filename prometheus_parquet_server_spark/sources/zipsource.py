@@ -9,9 +9,12 @@ ingest every member; per-file failures are logged and skipped, not fatal
 
 Spark stance (SURVEY §2.1 S1): unzip once to a scratch directory and let
 ``spark.read.parquet`` scan plain files — zips are not a splittable format,
-so keeping them zipped would serialize the scan through one reader. At
-100 TB the ingest job reads an already-unzipped object-store prefix and this
-module is only the compatibility shim for the reference's input layout.
+so keeping them zipped would serialize the scan through one reader. Each
+member is written under a generated file name in a fresh directory:
+Spark reads a path as a glob pattern, so a member's own name holding
+``{ } [ ] * ?`` would not be found. At 100 TB the ingest job reads an
+already-unzipped object-store prefix and this module is only the
+compatibility shim for the reference's input layout.
 
 Building the frame runs no Spark job: each member's schema is converted
 from its Parquet footer on the driver (:func:`.footer.read_parquet`) and
@@ -23,6 +26,7 @@ inferred as before; a corrupt member fails either way and is skipped.
 from __future__ import annotations
 
 import logging
+import shutil
 import tempfile
 import zipfile
 from functools import reduce
@@ -63,18 +67,26 @@ def ingest_zip(
     MetricsHTTPServer(metric_types=...) so /api/v1/metadata reports
     histograms as histograms.
     """
-    scratch = Path(scratch_dir or tempfile.mkdtemp(prefix="pps_zip_"))
+    if scratch_dir is not None:
+        Path(scratch_dir).mkdir(parents=True, exist_ok=True)
+    # a fresh directory per call: the frames read their files lazily, so a
+    # later call must not overwrite them
+    scratch = Path(tempfile.mkdtemp(prefix="pps_zip_", dir=scratch_dir))
     frames: list[DataFrame] = []
     with zipfile.ZipFile(zip_path) as zf:
         members = [m for m in zf.namelist() if m.endswith(".parquet")]
-        for member in members:
+        for i, member in enumerate(members):
             prefix = member_prefix(member)
             if mapping is not None and prefix not in mapping:
                 log.info("skipping %s: unmapped prefix %r", member, prefix)
                 continue
             fixed = (mapping or {}).get(prefix, {})
             try:
-                extracted = zf.extract(member, scratch)
+                # a generated name: Spark reads a path as a glob pattern, so
+                # a member name holding { } [ ] * ? would not be found
+                extracted = scratch / f"member-{i:05d}.parquet"
+                with zf.open(member) as src, open(extracted, "wb") as dst:
+                    shutil.copyfileobj(src, dst)
                 wide = read_parquet(spark, str(extracted))
                 if types_out is not None:
                     from prometheus_parquet_server_spark.sources.ingest import (

@@ -345,3 +345,28 @@ def test_metric_type_map_serving_types(spark):
     }
     sdf = spark.createDataFrame([(1.0, 2.0)], "time double, value double")
     assert metric_type_map(sdf.schema, "m_plain") == {"m_plain": "unknown"}
+
+
+def test_zip_members_with_glob_characters_are_ingested(spark, tmp_path):
+    """Spark reads a path as a glob pattern, so a member extracted under its
+    own name holding ``{ } [ ] * ?`` was not found and was skipped. Each
+    member is extracted under a generated name; the metric keeps the
+    member's base name."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    members = ["run/a{b}.parquet", "run/c[d].parquet", "run/e*f?.parquet", "run/g{h,i}.parquet"]
+    with zipfile.ZipFile(tmp_path / "z.zip", "w") as z:
+        for i, member in enumerate(members):
+            path = tmp_path / f"{i}.parquet"
+            pq.write_table(pa.table({"time": [1.0, 2.0], "value": [float(i), 10.0 + i]}), path)
+            z.write(path, member)
+    out = ingest_zip(spark, tmp_path / "z.zip", scratch_dir=str(tmp_path / "x"))
+    got = sorted((r["name"], str(r["labels"]), r["ts"], r["value"]) for r in out.collect())
+    want = sorted(
+        (metric_base_name(m), "{}", ts, v)
+        for i, m in enumerate(members)
+        for ts, v in ((1.0, float(i)), (2.0, 10.0 + i))
+    )
+    assert got == want
+    assert len({r[0] for r in got}) == len(members)

@@ -8,7 +8,7 @@ from prometheus_parquet_server_spark.operators.interpolate import (
     interpolate_at_probes,
     resample_to_grid,
 )
-from tests.conftest import assert_close, long_frame
+from tests.conftest import METRIC_SCHEMA, assert_close, long_frame
 
 SERIES = [("m", {"h": "a"}, t, v) for t, v in [(100.0, 1.0), (115.0, 2.0), (120.0, 3.0)]]
 
@@ -147,3 +147,98 @@ def test_chunked_resample_canonical_frame(spark):
         )
 
     assert got(chunk_s=250.0) == got()
+
+
+# The slot operators carry each series' name and canonical label map
+# through the window and the explode instead of joining a series frame
+# back. The probe paths (grid=None) still join keyed_series' frame, so
+# they are the reference for every edge of the label map.
+EDGE_LABELS = [
+    ("m", None),
+    ("m", {}),  # the same series as NULL labels
+    ("m", {"a": None}),  # a NULL value in the map
+    ("m", {"z": "1", "a": "2", "m": "3"}),
+    (None, {"b": "x"}),
+]
+
+
+def _edge_frame(spark):
+    rows = [
+        (name, labels, 10.0 * i + j, float("nan") if i == 4 else float(i * i))
+        for j, (name, labels) in enumerate(EDGE_LABELS)
+        for i in range(9)
+    ]
+    df = spark.createDataFrame(rows, METRIC_SCHEMA)
+    # an input map whose entries are out of key order
+    return df.unionByName(
+        spark.range(9).selectExpr(
+            "'u' AS name",
+            "map('zz', 'q', 'aa', 'r', 'mm', CAST(NULL AS STRING)) AS labels",
+            "CAST(id * 7 AS DOUBLE) AS ts",
+            "CAST(id AS DOUBLE) AS value",
+        )
+    )
+
+
+def _exact_rows(df):
+    """Sorted rows with the label map as its key list (entry order) and
+    JSON, and the value's bits."""
+    import struct
+
+    out = df.select(
+        "name", F.map_keys("labels").alias("k"), F.to_json("labels").alias("j"), "ts", "value"
+    )
+    return sorted(
+        (str(r["name"]), tuple(r["k"]), r["j"], r["ts"], struct.pack(">d", r["value"]).hex())
+        for r in out.collect()
+    )
+
+
+@pytest.mark.parametrize(
+    "op,chunk_s",
+    [("resample", None), ("resample", 25.0), ("rate", None), ("irate", None), ("irate", 25.0)],
+)
+def test_slot_operators_carry_canonical_labels(spark, op, chunk_s):
+    from prometheus_parquet_server_spark.operators.rate import irate_to_grid, rate_to_grid
+
+    df = _edge_frame(spark)
+    grid = RegularTimeRange(0.0, 90.0, 10.0)
+    gdf = grid.to_df(spark)
+    if op == "resample":
+        slot = resample_to_grid(df, None, grid=grid, offset=10.0, chunk_s=chunk_s)
+        probe = resample_to_grid(df, gdf, offset=10.0)
+    elif op == "rate":  # the lag path: whole-step range, integral grid
+        slot = rate_to_grid(df, gdf, over_range=30.0, offset=10.0, grid=grid)
+        probe = rate_to_grid(df, gdf, over_range=30.0, offset=10.0)
+    else:
+        slot = irate_to_grid(df, gdf, over_range=30.0, offset=10.0, grid=grid, chunk_s=chunk_s)
+        probe = irate_to_grid(df, gdf, over_range=30.0, offset=10.0)
+    got = _exact_rows(slot)
+    assert got == _exact_rows(probe)
+    assert len(got) == 5 * len(grid)  # NULL and empty labels: one series
+    for _name, keys, *_ in got:
+        assert list(keys) == sorted(keys)
+
+
+def test_selector_sum_over_one_file_scans_once(spark, tmp_path):
+    """``sum by (host) (m)`` over a one-file snapshot read plans one scan
+    and runs three jobs. A series frame joined back from a second scan of
+    the samples costs a second FileScan, a distinct aggregate and a
+    broadcast: five jobs."""
+    from prometheus_parquet_server_spark.plans.compiler import run_query
+    from prometheus_parquet_server_spark.sources import snapshot_read, snapshot_write
+    from tests.test_footer import jobs_run
+
+    rows = [
+        ("m", {"host": h, "method": m}, 15.0 * i, float(i))
+        for h in ("a", "b") for m in ("GET", "PUT") for i in range(8)
+    ]
+    root = str(tmp_path / "store")
+    snapshot_write(spark, root, long_frame(spark, rows), mode="append")
+    fresh = snapshot_read(spark, root, names=["m"], ts_range=(0.0, 105.0))
+    out = run_query(spark, fresh, "sum by (host) (m)", RegularTimeRange(0.0, 105.0, 15.0))
+    plan = out._jdf.queryExecution().executedPlan().toString()  # not yet run
+    assert plan.count("FileScan") == 1, plan
+    pdf, jobs = jobs_run(spark, out.toPandas)
+    assert len(pdf) == 2 * 8
+    assert jobs == 3
